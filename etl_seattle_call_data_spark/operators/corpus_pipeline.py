@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators import dedup, sampling, text
+from etl_seattle_call_data_spark.operators.util import checkpoint
 
 
 @dataclass(frozen=True)
@@ -65,20 +66,13 @@ def build_training_corpus(
     def stage(name: str, before: DataFrame, after: DataFrame) -> DataFrame:
         # materialize the survivor frame once per stage boundary: it
         # feeds both the report count and the next stage, and several
-        # stages re-reference their input repeatedly. localCheckpoint
-        # (not CacheManager persist): the chained stage survivors would
-        # otherwise form cache-on-cache entries, and Spark 4.1's lazy
-        # TableCacheQueryStage materialization can then rebuild a
-        # dependent entry on an AQE thread with no active session — an
-        # NPE first observed at sf1 (CacheManager.tryRebuildCacheEntry).
-        # The checkpoint also truncates lineage harder than a cache hit
-        # would, keeping the six-stage composed plan constant-depth; the
-        # count below is the materializing action, and blocks free via
-        # ContextCleaner as each stage's reference is dropped when the
-        # pipeline advances. Cross-invocation reuse still comes from the
-        # one expensive shared intermediate (the shingle table memo in
-        # dedup.jaccard_pairs) rather than per-stage survivor frames.
-        out = after.localCheckpoint(eager=False)
+        # stages re-reference their input repeatedly. The checkpoint
+        # also keeps the six-stage composed plan constant-depth; the
+        # count below is the materializing action. Cross-invocation
+        # reuse still comes from the one expensive shared intermediate
+        # (the shingle table memo in dedup.jaccard_pairs) rather than
+        # per-stage survivor frames.
+        out = checkpoint(after)
         report.append(
             {"stage": name, "rows_in": before.count(), "rows_out": out.count()}
         )
@@ -148,8 +142,4 @@ def build_training_corpus(
     report.append(
         {"stage": "split", "rows_in": report[-1]["rows_out"], "rows_out": report[-1]["rows_out"]}
     )
-    # storage reclamation: localCheckpoint blocks free via ContextCleaner
-    # once each stage frame's last reference is dropped — intermediate
-    # stages are only referenced by the NEXT stage's build, so they become
-    # collectable as the pipeline advances; no registry bookkeeping needed
     return out, report

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators.text import canonical_text, tokens
-from etl_seattle_call_data_spark.operators.util import cache_swap, spread as _spread
+from etl_seattle_call_data_spark.operators.util import checkpoint, memo, spread as _spread
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit integer
 
@@ -99,14 +99,14 @@ def jaccard_pairs(
     # once per branch (observed: 8 parquet scans in the un-persisted plan).
     # The UNCAPPED set is cached under the key the MinHash pipeline also
     # uses ("doc_shingles"): on the same corpus the two operators share
-    # one tokenize+explode+distinct via cache_swap's sameSemantics reuse,
+    # one tokenize+explode+distinct via memo's sameSemantics reuse,
     # and the cap is a cheap derivation on top of the shared cache.
     if shingles is not None:
         sh = shingles
     else:
-        sh = cache_swap("doc_shingles", shingle_sets(df, id_col, text_col, n))
+        sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
     if max_df is not None:
-        sh = cache_swap("jaccard_shingles", cap_document_frequency(sh, max_df))
+        sh = memo("jaccard_shingles", lambda: cap_document_frequency(sh, max_df))
     inter = _shared_shingle_pairs(sh, id_col)
     return _jaccard_from_intersections(sh, inter, id_col, threshold)
 
@@ -256,9 +256,12 @@ def minhash_lsh_pairs(
     # one persisted shingle set feeds signatures, candidate verification,
     # and set sizes — the whole LSH pipeline tokenizes the corpus ONCE
     # (key shared with jaccard_pairs: same corpus → same cache)
-    sh = cache_swap("doc_shingles", shingle_sets(df, id_col, text_col, n))
-    candidates = minhash_band_candidates(
-        sh, num_hashes=num_hashes, rows_per_band=rows_per_band, id_col=id_col
+    sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
+    candidates = memo(
+        "lsh_candidates",
+        lambda: minhash_band_candidates(
+            sh, num_hashes=num_hashes, rows_per_band=rows_per_band, id_col=id_col
+        ),
     )
     # verify ONLY the candidate pairs: restrict the shared-shingle
     # intersection join to candidates instead of computing all-pairs
@@ -269,13 +272,12 @@ def minhash_lsh_pairs(
     # intersection equi-join and the set-size aggregation run over the
     # few-candidates-sized table and AQE broadcasts them, instead of
     # shuffling the full corpus-sized shingle table on (doc, shingle).
-    candidates = cache_swap("lsh_candidates", candidates)
     cand_ids = (
         candidates.select(F.col("id_a").alias(id_col))
         .union(candidates.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    sh_cand = cache_swap("lsh_cand_shingles", sh.join(cand_ids, id_col, "left_semi"))
+    sh_cand = memo("lsh_cand_shingles", lambda: sh.join(cand_ids, id_col, "left_semi"))
     sh_a = sh_cand.select(F.col(id_col).alias("id_a"), "shingle")
     sh_b = sh_cand.select(F.col(id_col).alias("id_b"), "shingle")
     inter = (
@@ -348,10 +350,6 @@ def connected_components(
 
     Only nodes appearing in ≥1 pair are returned (singletons are their
     own trivial cluster by definition)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from etl_seattle_call_data_spark.operators.util import register_cached
-
     # persist + materialize the pair list BEFORE unioning its two
     # directed copies: the union's branches would otherwise each
     # recompute the (expensive) upstream pair pipeline — measured 2× the
@@ -359,9 +357,9 @@ def connected_components(
     # unique with id_a < id_b, so the two directed copies cannot collide
     # (and min-label propagation is idempotent under duplicate edges
     # anyway).
-    pairs_p = cache_swap("cc_pairs", pairs.select(F.col(id_a), F.col(id_b)))
+    pairs_p = memo("cc_pairs", lambda: pairs.select(F.col(id_a), F.col(id_b)))
     pairs_p.count()
-    edges = pairs_p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
+    directed = pairs_p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         pairs_p.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
     # r11: pin repartition(src) UNDER the persist (the
@@ -370,59 +368,37 @@ def connected_components(
     # distribution from the cache, so the edge frame is shuffled ZERO
     # times per round — only the node-scale label frame moves. Measured
     # 4.5/4.8 s → 3.7 s warm-cache corpus_clean_pipeline at sf0.1.
-    edges = cache_swap("cc_edges", edges.repartition(F.col("src")))
+    edges = memo("cc_edges", lambda: directed.repartition(F.col("src")))
     edges.count()  # materialize: every round reads edges
-    # generation 0 is read twice per round (neighbour-min probe + the
-    # update join) — persist it like every later generation, or each
-    # round re-runs its distinct shuffle twice
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # Every generation (0 included) is read twice per round — the
+    # neighbour-min probe and the update join — and is checkpointed:
+    # without the barrier each round re-runs the previous generation's
+    # plan twice, and chained generations would nest their logical plans
+    # (linear-in-rounds growth that blows the driver heap when a caller
+    # composes joins over the cluster table). The count materializes the
+    # new generation while its parent's blocks are still referenced; the
+    # parent is then dropped and freed by GC (GraphX cuts lineage between
+    # Pregel rounds the same way).
+    labels = checkpoint(
+        edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-    prev = labels
     for _ in range(max_iter):
         neighbour_min = (
             edges.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("label").alias("nmin"))
         )
-        # localCheckpoint (not just persist): each generation's LOGICAL
-        # plan otherwise nests the previous generation's plan plus the
-        # full edge lineage — linear-in-rounds logical growth that makes
-        # downstream composition (joins over the cluster table) blow the
-        # driver heap just BUILDING the plan. Checkpointing truncates
-        # lineage to the materialized partitions, exactly what GraphX
-        # does between Pregel rounds. Local (executor-storage) form is
-        # right for this engine's driver-side loop; on a cluster with
-        # flaky executors swap for sc.setCheckpointDir + .checkpoint().
-        updated = (
-            labels.join(neighbour_min, "node", "left")
-            .select(
+        updated = checkpoint(
+            labels.join(neighbour_min, "node", "left").select(
                 "node",
                 F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
                 (F.col("nmin") < F.col("label")).alias("__changed"),
             )
-        ).localCheckpoint(eager=False)
-        # ORDER MATTERS: materialize the new generation (count) while its
-        # parent is still cached, THEN release the parent — releasing
-        # first turns every round into a full-lineage recomputation all
-        # the way back through the pair pipeline (measured 8s warm vs
-        # ~1.5s for a 500-node graph)
+        )
         n_changed = updated.filter(F.col("__changed")).count()
-        prev.unpersist(False)
-        prev = updated
         labels = updated.drop("__changed")
         if n_changed == 0:
             break
-    # Storage reclamation: unpersist() is a no-op for localCheckpoint
-    # blocks — they free via ContextCleaner once the RDD is unreferenced.
-    # The loop drops each generation's reference as it advances, so old
-    # generations become collectable immediately; registering the FINAL
-    # generation replaces (and thereby un-references) the previous
-    # invocation's labels, keeping at most one invocation's blocks live.
-    register_cached("cc_labels", prev)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -520,7 +496,7 @@ def simhash_pairs(
     # memoization) pass it via ``sig`` and skip the rebuild entirely
     # (theirs must carry >= ``bits`` low bits — the default memo does).
     if sig is None:
-        sig = cache_swap(f"simhash_sig_{bits}", simhash(df, id_col, text_col, bits=bits))
+        sig = memo(f"simhash_sig_{bits}", lambda: simhash(df, id_col, text_col, bits=bits))
 
     def sub(i: int):
         return F.shiftright(F.col("simhash"), i * width).bitwiseAND(
@@ -621,16 +597,13 @@ def passjoin_candidate_pairs(
     # The input feeds BOTH the build and probe branches below, and
     # callers typically hand us a shuffle distinct — Catalyst does not
     # dedupe common subtrees, so without a barrier that distinct would
-    # re-evaluate once per branch (CLAUDE.md materialization rule; lazy
-    # localCheckpoint, not persist, per the Spark 4.1 cache-on-cache
-    # AQE NPE note).
-    base = (
+    # re-evaluate once per branch (the multi-consumer rule).
+    base = checkpoint(
         names.select(
             F.col(string_col).alias("__s"),
             *(block_cols or []),
         )
         .withColumn("__len", F.length("__s"))
-        .localCheckpoint(eager=False)
     )
 
     def base_len(length):  # length DIV m (Columns have no //)
@@ -711,15 +684,15 @@ def containment_pairs(
     secondary signal in suffix-array/CCNet-style dedup).
 
     Candidates come from the SAME df-capped shared-shingle equi-join as
-    ``jaccard_pairs`` (including its cache_swap'd shingle tables — on
+    ``jaccard_pairs`` (including its memoized shingle tables — on
     the same corpus the two operators share one tokenize pass), so the
     fan-out bound is identical: ≤ max_df² per shingle, linear in corpus
     size. Output is directed: (contained_id, container_id, containment)
     for every ordered pair with containment ≥ threshold; each undirected
     candidate contributes at most two rows."""
-    sh = cache_swap("doc_shingles", shingle_sets(df, id_col, text_col, n))
+    sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
     if max_df is not None:
-        sh = cache_swap("jaccard_shingles", cap_document_frequency(sh, max_df))
+        sh = memo("jaccard_shingles", lambda: cap_document_frequency(sh, max_df))
     inter = _shared_shingle_pairs(sh, id_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
@@ -779,7 +752,7 @@ def contamination_overlap(
     # the corpus shingle set feeds BOTH the size aggregation and the
     # semi-join branch — persist it or Catalyst re-tokenizes the corpus
     # once per branch (same hazard jaccard_pairs documents)
-    corp_sh = cache_swap("contamination_shingles", shingle_sets(corpus, id_col, text_col, n))
+    corp_sh = memo("contamination_shingles", lambda: shingle_sets(corpus, id_col, text_col, n))
     eval_vocab = shingle_sets(eval_set, id_col, text_col, n).select("shingle").distinct()
     sizes = corp_sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
@@ -832,15 +805,17 @@ def block_dedup_stats(
         f"transform(sequence(0, size(__t) DIV {b} - 1), "
         f"i -> md5(array_join(slice(__t, i * {b} + 1, {b}), ' ')))"
     )
-    inst = base.select(
-        F.col(id_col),
-        F.explode(
-            F.when(F.size(F.col("__t")) >= b, blocks_expr).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("block_hash"),
+    inst = memo(
+        "block_instances",
+        lambda: base.select(
+            F.col(id_col),
+            F.explode(
+                F.when(F.size(F.col("__t")) >= b, blocks_expr).otherwise(
+                    F.array().cast("array<string>")
+                )
+            ).alias("block_hash"),
+        ),
     )
-    inst = cache_swap("block_instances", inst)
     block_df = inst.groupBy("block_hash").agg(
         F.count_distinct(id_col).alias("__ndocs")
     )

@@ -21,7 +21,15 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from etl_seattle_call_data_spark.operators.util import clear_caches
 
+
+def _remove(path: str) -> None:
+    """Delete a table path: a parquet directory or a single-file table."""
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    else:
+        os.remove(path)
 
 
 def heal(path: str) -> None:
@@ -37,22 +45,25 @@ def heal(path: str) -> None:
     old = path.rstrip("/") + "__old"
     if os.path.exists(old):
         if os.path.exists(path):
-            shutil.rmtree(old)  # prior run crashed after swap, before cleanup
+            _remove(old)  # prior run crashed after swap, before cleanup
         else:
             os.rename(old, path)  # prior run crashed mid-swap: restore
 
 
 def _heal_and_swap(spark: SparkSession, path: str, tmp: str) -> None:
     """Publish ``tmp`` as ``path`` via rename-swap (healing leftovers of
-    a previous crashed swap first). Finishes with ``refreshByPath`` so
-    Spark's cached file listings/data for the old files are invalidated
-    (in-place rewrites otherwise serve stale cached scans)."""
+    a previous crashed swap first). Finishes by invalidating everything
+    that assumed the old files: ``refreshByPath`` drops Spark's cached
+    file listings/data, and ``clear_caches`` drops the session memos and
+    table plans built over them (in-place rewrites otherwise serve stale
+    cached scans or fail reading deleted files)."""
     heal(path)
     old = path.rstrip("/") + "__old"
     os.rename(path, old)
     os.rename(tmp, path)
-    shutil.rmtree(old)
+    _remove(old)
     spark.catalog.refreshByPath(path)
+    clear_caches()
 
 
 def compact_parquet(

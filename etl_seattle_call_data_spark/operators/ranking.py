@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import checkpoint
+
 
 _GUARD_MSG = (
     "two_phase rank/cumsum: coarse bucket or group key is NULL "
@@ -73,27 +75,6 @@ def _guard_group_cols(df: DataFrame, group_cols: list[str]) -> DataFrame:
     return out
 
 
-def _bucketed_checkpoint(df: DataFrame, materialize: bool) -> DataFrame:
-    """Shared materialization point of the four two-phase helpers.
-
-    ``materialize=True`` (default) lazily localCheckpoints the bucketed
-    frame: every helper consumes it from 2+ plan branches (a counts /
-    totals / maxima branch plus the rank/cumsum join probe), and
-    Catalyst re-evaluates an un-materialized subtree once per branch.
-    Callers whose upstream is a CHEAP scan/projection can pass
-    ``materialize=False`` — pipelining a cheap scan into each consumer's
-    shuffle write beats paying the checkpoint barrier (the measured
-    skipgram counter-example, CLAUDE.md).
-
-    Lifecycle note: checkpoint RDD blocks are NOT released by
-    ``spark.catalog.clearCache()``-style eviction (they are not
-    CacheManager entries) — they free via ContextCleaner when the driver
-    GCs the dropped frame, so long sessions rely on timely Python GC of
-    the returned DataFrames (bench.py's periodic ``gc.collect()`` exists
-    for exactly this)."""
-    return df.localCheckpoint(eager=False) if materialize else df
-
-
 def two_phase_rank(
     df: DataFrame,
     order_by: list[str],
@@ -112,22 +93,20 @@ def two_phase_rank(
     bounded driver collect of #buckets (cb, count) pairs, one broadcast
     join of the offsets. No Exchange SinglePartition anywhere.
 
-    The bucketed input is localCheckpoint'ed (lazily): the offsets
+    The bucketed input goes through ``util.checkpoint``: the offsets
     collect below must evaluate the full upstream anyway, and without a
     materialization the downstream rank join would evaluate it a SECOND
     time — chained passes (rfm_segments runs three) would pay O(k²)
-    upstream walks. Checkpoint (not CacheManager persist) for the same
-    reason corpus_pipeline documents: chained persists form
-    cache-on-cache entries that Spark 4.1's lazy AQE cache
-    materialization can rebuild off-session (NPE at sf1); blocks free
-    via ContextCleaner when the caller drops the frame. Pass
-    ``materialize=False`` when the upstream is a cheap scan (see
-    ``_bucketed_checkpoint``).
+    upstream walks. Every two-phase helper consumes its bucketed frame
+    from 2+ plan branches the same way. Callers whose upstream is a
+    CHEAP scan/projection pass ``materialize=False``: pipelining a cheap
+    scan into each consumer's shuffle write beats paying the barrier
+    (the measured counter-example: ``q_skipgram_cooccurrence``'s NOTE).
     """
     spark = df.sparkSession
-    bucketed = _bucketed_checkpoint(
-        df.withColumn("__cb", _guarded_bucket(coarse)), materialize
-    )
+    bucketed = df.withColumn("__cb", _guarded_bucket(coarse))
+    if materialize:
+        bucketed = checkpoint(bucketed)
     counts = sorted(
         (r["__cb"], r["n"])
         for r in bucketed.groupBy("__cb").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -173,7 +152,7 @@ def two_phase_multi_rank(
     out = df
     for i, (_, coarse, _) in enumerate(specs):
         out = out.withColumn(f"__cb{i}", _guarded_bucket(coarse))
-    bucketed = _bucketed_checkpoint(out, materialize)
+    bucketed = checkpoint(out) if materialize else out
     frame, total = bucketed, 0
     for i, (order_by, _, rank_name) in enumerate(specs):
         cb = f"__cb{i}"
@@ -269,16 +248,14 @@ def two_phase_rank_in_groups(
     own rows. ``coarse`` must be order-aligned with the leading
     ``order_by`` column and non-null.
     """
-    # lazy localCheckpoint: ``bucketed`` feeds BOTH the counts branch
-    # and the rank-join probe side of one plan — un-materialized,
-    # Catalyst evaluates the upstream once per branch (see
-    # two_phase_rank's docstring for the checkpoint-vs-persist choice).
-    bucketed = _bucketed_checkpoint(
-        _guard_group_cols(df, group_cols).withColumn(
-            "__cb", _guarded_bucket(coarse)
-        ),
-        materialize,
+    # ``bucketed`` feeds BOTH the counts branch and the rank-join probe
+    # side of one plan — un-materialized, Catalyst evaluates the
+    # upstream once per branch.
+    bucketed = _guard_group_cols(df, group_cols).withColumn(
+        "__cb", _guarded_bucket(coarse)
     )
+    if materialize:
+        bucketed = checkpoint(bucketed)
     counts = bucketed.groupBy(*group_cols, "__cb").agg(
         F.count(F.lit(1)).alias("__n")
     )
@@ -323,14 +300,15 @@ def two_phase_cumsum_in_groups(
     the leading ``order_by`` column and non-null; ``weight`` must be
     non-null.
     """
-    # lazy localCheckpoint: same two-consumer shape as
-    # two_phase_rank_in_groups (totals branch + cumsum-join probe).
-    bucketed = _bucketed_checkpoint(
+    # same two-consumer shape as two_phase_rank_in_groups (totals
+    # branch + cumsum-join probe).
+    bucketed = (
         _guard_group_cols(df, group_cols)
         .withColumn("__cb", _guarded_bucket(coarse))
-        .withColumn("__w", weight.cast("long")),
-        materialize,
+        .withColumn("__w", weight.cast("long"))
     )
+    if materialize:
+        bucketed = checkpoint(bucketed)
     totals = bucketed.groupBy(*group_cols, "__cb").agg(
         F.sum("__w").alias("__bw")
     )
@@ -387,15 +365,13 @@ def two_phase_running_max(
     single-partition oracle window.
     """
     spark = df.sparkSession
-    # lazy localCheckpoint: the maxima collect below walks the full
-    # upstream; without it the phase-2 window join walks it again (see
-    # two_phase_rank's docstring).
-    bucketed = _bucketed_checkpoint(
-        df.withColumn("__cb", _guarded_bucket(coarse)).withColumn(
-            "__v", value.cast("long")
-        ),
-        materialize,
+    # the maxima collect below walks the full upstream; without the
+    # checkpoint the phase-2 window join walks it again.
+    bucketed = df.withColumn("__cb", _guarded_bucket(coarse)).withColumn(
+        "__v", value.cast("long")
     )
+    if materialize:
+        bucketed = checkpoint(bucketed)
     maxima = sorted(
         (r["__cb"], r["m"])
         for r in bucketed.groupBy("__cb").agg(F.max("__v").alias("m")).collect()

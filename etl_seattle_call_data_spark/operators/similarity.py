@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_seattle_call_data_spark.operators.util import cache_swap, spread as _spread
+from etl_seattle_call_data_spark.operators.util import memo, spread as _spread
 
 QUANT_SCALE = 1000
 
@@ -334,8 +334,8 @@ def ivf_topk(
     # persist the cell-assigned corpus: the 8×dims interpreted HOF
     # distance evaluation would otherwise re-run in every downstream
     # stage (join shuffle write, re-rank) — measured 3× the query cost
-    c = cache_swap(
-        "ivf_cells", _with_ivf_cell(with_quantized(_spread(corpus), vec_col), cents)
+    c = memo(
+        "ivf_cells", lambda: _with_ivf_cell(with_quantized(_spread(corpus), vec_col), cents)
     )
     qs = _with_ivf_cell(with_quantized(queries, vec_col), cents)
     cc = c.select("cell", F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("vc"), F.col("qnorm2").alias("nc"))

@@ -197,7 +197,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id", text_col:
     N comes from a broadcast scalar aggregate, not a driver action."""
     from pyspark.sql.window import Window
 
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
     from etl_seattle_call_data_spark.operators.util import spread as _spread
 
     term_rows = _spread(df).select(
@@ -208,11 +208,11 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id", text_col:
     # consumer (the multi-consumer-subtree hazard dedup.jaccard_pairs
     # documents). Already-reduced (doc, term) grain — same scale class
     # as the persisted shingle tables. Key carries the column identity
-    # (cache_swap key-hygiene rule): alternating callers on different
+    # (memo key-hygiene rule): alternating callers on different
     # frames/columns should churn different slots, not evict each other.
-    tf = cache_swap(
+    tf = memo(
         f"tfidf_tf:{id_col}:{text_col}",
-        term_rows.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
+        lambda: term_rows.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = df.agg(F.count(F.lit(1)).alias("n"))
@@ -354,22 +354,24 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     first-token keys — both co-partitioned with their count aggregations
     — then one per-doc aggregation. All linear; vocabulary tables are
     corpus-vocab-sized, typically broadcastable."""
-    from etl_seattle_call_data_spark.operators.util import cache_swap, spread
+    from etl_seattle_call_data_spark.operators.util import memo, spread
 
     toks = tokens(F.col(text_col)).alias("__t")
     base = spread(df).select(F.col(id_col), toks)
     bigram_expr = F.expr(
         "transform(sequence(0, size(__t) - 2), i -> concat(__t[i], ' ', __t[i+1]))"
     )
-    inst = base.select(
-        F.col(id_col),
-        F.explode(
-            F.when(F.size(F.col("__t")) >= 2, bigram_expr).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("bg"),
+    inst = memo(
+        "bigram_instances",
+        lambda: base.select(
+            F.col(id_col),
+            F.explode(
+                F.when(F.size(F.col("__t")) >= 2, bigram_expr).otherwise(
+                    F.array().cast("array<string>")
+                )
+            ).alias("bg"),
+        ),
     )
-    inst = cache_swap("bigram_instances", inst)
     c2 = inst.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     c1 = (
         inst.select(F.substring_index(F.col("bg"), " ", 1).alias("w1"))
@@ -412,7 +414,7 @@ def inverted_index(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     from pyspark.sql.window import Window
 
     from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
-    from etl_seattle_call_data_spark.operators.util import cache_swap, spread
+    from etl_seattle_call_data_spark.operators.util import memo, spread
 
     toks = tokens(F.col(text_col)).alias("__t")
     inst = (
@@ -420,9 +422,9 @@ def inverted_index(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         .select(F.col(id_col), F.explode(toks).alias("term"))
     )
     # per (term, doc) term frequency — the posting row
-    postings = cache_swap(
+    postings = memo(
         "inverted_postings",
-        inst.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf")),
+        lambda: inst.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf")),
     )
     stats = postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),

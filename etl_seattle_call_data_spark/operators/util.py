@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
 
@@ -23,88 +25,96 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-_last_cached: dict[str, DataFrame] = {}
+def checkpoint(df: DataFrame) -> DataFrame:
+    """The one within-plan barrier: ``df``'s subtree is evaluated once,
+    by the first action that reaches it, and every consumer reads the
+    stored partitions. Catalyst does not dedupe common subtrees, so a
+    frame consumed by 2+ plan branches (a union of two projections, a
+    count + a join, a self-join's two arms, a driver collect + a join
+    probe) otherwise re-evaluates its upstream once per branch; chained
+    over iterations the checkpoint also truncates lineage, keeping the
+    composed plan constant-depth.
+
+    Why a lazy ``localCheckpoint`` and not ``persist``: chained persists
+    form cache-on-cache CacheManager entries, and Spark 4.1's lazy AQE
+    TableCacheQueryStage materialization can rebuild a dependent entry
+    on an AQE thread with no active session — an NPE first observed at
+    sf1 (``CacheManager.tryRebuildCacheEntry``). A checkpoint is a plain
+    RDD scan, never a cache entry.
+
+    How the blocks are freed: not by ``unpersist()`` (a no-op on a
+    checkpoint) nor by ``spark.catalog.clearCache()`` — by Spark's
+    ContextCleaner once the driver garbage-collects the last frame
+    referencing the RDD. Callers just drop their references; long
+    sessions rely on timely Python GC (bench.py's periodic
+    ``gc.collect()``).
+
+    Blocks live only in executor storage (not replicated): losing an
+    executor loses them, and the next action fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    return df.localCheckpoint(eager=False)
 
 
-def cache_swap(key: str, df: DataFrame):
-    """Persist ``df`` (MEMORY_AND_DISK), releasing whatever the same
-    operator persisted on a previous invocation. Operators that persist
-    an intermediate (e.g. the dedup shingle set) are re-invoked with
-    fresh DataFrames every run; without this the executor cache
-    accumulates one dead copy per invocation in a long-lived session.
+_memos: dict[str, tuple[object, DataFrame]] = {}
 
-    If the incoming plan is semantically identical to the cached one
-    (``sameSemantics`` — same logical plan modulo cosmetics), the
-    already-materialized cache is returned instead of being torn down
-    and rebuilt: repeated invocations of the same operator on the same
-    input (a re-run query, two operators sharing a sub-pipeline) hit
-    warm storage rather than re-tokenizing/re-joining the corpus. This
-    is the engine's one-generation materialized-intermediate reuse; the
-    source relations are files, so identical plans read identical data
-    within a session. Caveat: anything that rewrites those files IN
-    PLACE mid-session (compact_parquet / cluster_parquet, an external
-    writer) invalidates that premise — those paths call
-    ``refreshByPath``, but a semantically-identical cache_swap entry
-    built pre-rewrite would still serve old data; call ``clear_caches()``
-    after rewriting a table an operator has cached.
 
-    Multi-tenant caveat: the key registry is process-global, keyed by
-    operator-chosen strings. Two tenants of one long-lived session using
-    the same key alternately defeat the reuse (each call evicts the
-    other's entry — correct, just cold); worse, an operator that bakes
-    NO distinguishing input into its key could be served a same-key
-    sibling's cache only if the plans are ``sameSemantics`` — i.e. the
-    same computation — so correctness holds, but key hygiene (prefix
-    keys with the operator + input identity, as dedup/similarity do)
-    is what keeps hit rates honest in shared sessions."""
+def memo(key: str, build: Callable[[], DataFrame], token: object = None) -> DataFrame:
+    """The one cross-query session memo: returns ``build()`` persisted
+    (MEMORY_AND_DISK) and held under ``key`` until a different plan
+    replaces it, so a re-run query or two operators sharing a
+    sub-pipeline (the dedup shingle set) hit warm storage instead of
+    re-tokenizing/re-joining the corpus.
+
+    * ``token`` given (an explicit fingerprint of every ``build`` input —
+      path, params): a held frame with an equal token is returned
+      without calling ``build``. Use it where plan construction itself
+      is the cost (SimHash's 60-aggregate plan costs ~2s to build and
+      canonicalize).
+    * otherwise ``build()`` runs and the held frame is reused when the
+      new plan ``sameSemantics`` it (same logical plan modulo cosmetics).
+
+    On a miss the previous holder of ``key`` is unpersisted, so a
+    long-lived session keeps one generation per key rather than one dead
+    copy per invocation. Reuse rests on source files being immutable
+    within a session; the maintenance rewrites call ``clear_caches()``.
+
+    Key hygiene: the registry is process-global. Two callers alternating
+    one key on different inputs evict each other (correct, just cold);
+    prefix keys with the operator and input identity so hit rates stay
+    honest in shared sessions."""
     from pyspark.storagelevel import StorageLevel
 
-    old = _last_cached.get(key)
-    if old is not None:
+    held = _memos.get(key)
+    if held is not None and token is not None and held[0] == token:
+        return held[1]
+    df = build()
+    if held is not None:
         try:
-            if df.sameSemantics(old):
-                return old
+            if df.sameSemantics(held[1]):
+                _memos[key] = (token, held[1])
+                return held[1]
         except Exception:
             pass  # cross-session frames etc. — fall through to swap
-        old.unpersist(False)
-    _last_cached[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return _last_cached[key]
-
-
-def register_cached(key: str, df: DataFrame | None) -> None:
-    """Hand an ALREADY-persisted frame to the cross-invocation registry:
-    releases the previous holder of ``key`` (which the caller has
-    finished with) without re-persisting ``df``. For iterative operators
-    that manage per-generation persistence themselves but still need the
-    last generation released on the next invocation."""
-    old = _last_cached.get(key)
-    if old is not None and old is not df:
-        old.unpersist(False)
-    if df is None:
-        _last_cached.pop(key, None)
-    else:
-        _last_cached[key] = df
+        held[1].unpersist(False)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _memos[key] = (token, df)
+    return df
 
 
 def clear_caches(table_plans: bool = True) -> None:
-    """Release every registry-held persisted intermediate and forget the
-    registry. Call after rewriting source files in place (compaction,
-    clustering, external overwrite): cache_swap's sameSemantics reuse
-    assumes within-session immutability of the underlying files, and a
-    pre-rewrite cache would otherwise keep serving old data.
+    """Release every memo-held frame and forget the registry.
 
     ``table_plans=False`` keeps sources.registry's memoized table PLAN
     objects: they pin no executor blocks and no rows, so periodic
     GC-pressure evictions (bench.py's every-40-queries sweep) don't
-    need to drop them — only the after-an-in-place-rewrite contract
+    need to drop them — only an in-place rewrite of the source files
     (the default) does."""
-    for df in _last_cached.values():
+    for _, df in _memos.values():
         try:
             df.unpersist(False)
         except Exception:
             pass  # session may already be stopped
-    _last_cached.clear()
-    _memo_tokens.clear()
+    _memos.clear()
     if table_plans:
         # Table PLAN memos (sources.registry) rest on the same files-are-
         # immutable premise — drop them under the same contract. Imported
@@ -113,26 +123,3 @@ def clear_caches(table_plans: bool = True) -> None:
         from etl_seattle_call_data_spark.sources.registry import clear_table_memo
 
         clear_table_memo()
-
-
-_memo_tokens: dict[str, object] = {}
-
-
-def cache_memo(key: str, token: object, builder):
-    """Token-keyed variant of ``cache_swap`` that skips even the PLAN
-    BUILD on a repeat hit: if ``token`` (an explicit fingerprint of every
-    builder input — path, params) matches the last invocation's, the
-    cached frame is returned without calling ``builder``.
-
-    ``cache_swap``'s sameSemantics reuse still has to construct and
-    canonicalize the candidate plan to compare it — for wide expression
-    trees (SimHash's 60-aggregate plan) that alone costs ~2s per
-    invocation. Sources are static files within a session, so an
-    explicit token is a sound stand-in. Use cache_swap when the token
-    would be awkward to state; use this where plan construction itself
-    is the cost."""
-    if key in _memo_tokens and _memo_tokens[key] == token and key in _last_cached:
-        return _last_cached[key]
-    df = cache_swap(key, builder())
-    _memo_tokens[key] = token
-    return df

@@ -179,18 +179,18 @@ def _memo_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified capped-Jaccard pair table shared by dedup_ngram_jaccard,
     dedup_clusters and dedup_cluster_representative — token-memoized so
     the shingle-join plan is built once per corpus (the inner shingle
-    tables are already cache_swap'd; this skips rebuilding the pair plan
+    tables are already memoized; this skips rebuilding the pair plan
     and its sameSemantics canonicalization on every repeat caller)."""
-    from etl_seattle_call_data_spark.operators.util import cache_memo
+    from etl_seattle_call_data_spark.operators.util import memo
 
-    return cache_memo(
+    return memo(
         "jaccard_pairs",
-        ("jaccard_pairs", sf_dir, 0.5, _JACCARD_MAX_DF),
         lambda: dedup.jaccard_pairs(
             load_table(spark, sf_dir, "documents"),
             threshold=0.5,
             max_df=_JACCARD_MAX_DF,
         ),
+        token=("jaccard_pairs", sf_dir, 0.5, _JACCARD_MAX_DF),
     )
 
 
@@ -200,12 +200,12 @@ def _memo_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-propagation loop runs eagerly (per-round counts), so sharing
     the finished table saves the entire iteration for the second
     caller."""
-    from etl_seattle_call_data_spark.operators.util import cache_memo
+    from etl_seattle_call_data_spark.operators.util import memo
 
-    return cache_memo(
+    return memo(
         "cc_components",
-        ("cc_components", sf_dir, 0.5, _JACCARD_MAX_DF),
         lambda: dedup.connected_components(_memo_jaccard_pairs(spark, sf_dir)),
+        token=("cc_components", sf_dir, 0.5, _JACCARD_MAX_DF),
     )
 
 
@@ -356,12 +356,12 @@ def _memo_simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature table shared by doc_simhash and dedup_simhash_pairs —
     token-memoized so the 60-aggregate plan is BUILT once per (corpus)
     too, not just computed once (plan construction alone costs ~2s)."""
-    from etl_seattle_call_data_spark.operators.util import cache_memo
+    from etl_seattle_call_data_spark.operators.util import memo
 
-    return cache_memo(
+    return memo(
         "simhash_sig",
-        ("simhash", sf_dir),
         lambda: dedup.simhash(load_table(spark, sf_dir, "documents")),
+        token=("simhash", sf_dir),
     )
 
 
@@ -1097,7 +1097,7 @@ def q_corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     survivors0 = docs.filter(text.token_count("text") >= 20)
@@ -1108,15 +1108,15 @@ def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality join, the two final anti-joins, token/char budgets) — persist
     # the tiny (id, text, n_chars) projection or each branch re-reads the
     # parquet and re-runs the quality gate + exact-dedup semi-join.
-    survivors1 = cache_swap(
+    survivors1 = memo(
         "corpus_clean_survivors",
-        survivors0.join(keep, on="doc_id", how="left_semi"),
+        lambda: survivors0.join(keep, on="doc_id", how="left_semi"),
     )
     # shingling is per-document: the filtered corpus' shingle set is the
     # cached FULL-corpus shingle table (shared with the standalone dedup
     # queries via sameSemantics) semi-joined to surviving ids — no
     # re-tokenization of the surviving 85% of the corpus.
-    sh_full = cache_swap("doc_shingles", dedup.shingle_sets(docs))
+    sh_full = memo("doc_shingles", lambda: dedup.shingle_sets(docs))
     sh_surv = sh_full.join(survivors1.select("doc_id"), "doc_id", "left_semi")
     pairs = dedup.jaccard_pairs(
         survivors1, threshold=0.5, max_df=_JACCARD_MAX_DF, shingles=sh_surv
@@ -1360,13 +1360,13 @@ _CMS_HASH = "('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || term), 1, 15)):
 )
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators import sketch
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     inst = docs.select(F.explode(text.tokens(F.col("text"))).alias("term"))
-    counts = cache_swap(
+    counts = memo(
         "cms_token_counts",
-        inst.groupBy("term").agg(F.count(F.lit(1)).alias("exact_count")),
+        lambda: inst.groupBy("term").agg(F.count(F.lit(1)).alias("exact_count")),
     )
     cms = sketch.cms_build(counts, "term", "exact_count", depth=4, width=1024)
     probes = counts.orderBy(F.desc("exact_count"), F.asc("term")).limit(10)
@@ -1471,11 +1471,11 @@ def _lsh_recall_oracle(num_hashes: int = 8, rows_per_band: int = 2) -> str:
     _lsh_recall_oracle(),
 )
 def q_dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = cache_swap("doc_shingles", dedup.shingle_sets(docs))
-    cand = cache_swap("lsh_candidates", dedup.minhash_band_candidates(sh))
+    sh = memo("doc_shingles", lambda: dedup.shingle_sets(docs))
+    cand = memo("lsh_candidates", lambda: dedup.minhash_band_candidates(sh))
     # Persist the exact ground truth: it feeds BOTH the true-positive
     # match and the n_exact tally, and the uncapped shared-shingle
     # self-join behind it is the single most expensive subtree in the
@@ -1484,9 +1484,9 @@ def q_dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapse into ONE full-outer join + aggregate pass (pair-key
     # shuffle of two already-reduced pair sets) instead of three
     # scalar-subquery jobs each re-walking its input.
-    exact = cache_swap(
+    exact = memo(
         "jaccard_exact_t05",
-        dedup.jaccard_pairs(docs, threshold=0.5, shingles=sh).select(
+        lambda: dedup.jaccard_pairs(docs, threshold=0.5, shingles=sh).select(
             "id_a", "id_b"
         ),
     )

@@ -3,10 +3,10 @@
 The market-basket family (copurchase_part_pairs, association_rules_lift,
 pagerank_copurchase_3iter, triangle_count_copurchase) all start from the
 same distinct (order, part) item table and its bounded self-join pair
-counts. Token-memoizing both (operators/util.cache_memo — plan build
-skipped on repeat hits, same pattern as the dedup family's shingle
-cache) means the expensive pair join runs ONCE per corpus per session;
-every downstream graph/rule query derives from the cached table.
+counts. Memoizing both under a token (operators/util.memo — plan build
+skipped on repeat hits, same registry as the dedup family's shingle
+memo) means the expensive pair join runs ONCE per corpus per session;
+every downstream graph/rule query derives from the held table.
 """
 
 from __future__ import annotations
@@ -14,18 +14,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_seattle_call_data_spark.operators.util import cache_memo
+from etl_seattle_call_data_spark.operators.util import memo
 from etl_seattle_call_data_spark.sources.registry import load_table
 
 
 def memo_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (l_orderkey, l_partkey) — the market-basket item table."""
-    return cache_memo(
+    return memo(
         "basket:items",
-        ("basket:items", sf_dir),
         lambda: load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct(),
+        token=("basket:items", sf_dir),
     )
 
 
@@ -49,7 +49,7 @@ def memo_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
         )
 
-    return cache_memo("basket:pairs", ("basket:pairs", sf_dir), build)
+    return memo("basket:pairs", build, token=("basket:pairs", sf_dir))
 
 
 def memo_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,4 +80,4 @@ def memo_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return sym.repartition(F.col("src"))
 
-    return cache_memo("basket:edges", ("basket:edges", sf_dir), build)
+    return memo("basket:edges", build, token=("basket:edges", sf_dir))

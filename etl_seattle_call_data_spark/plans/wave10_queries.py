@@ -48,6 +48,14 @@ _SPLIT_SPARK = {"div": "DIV"}
 _SPLIT_DUCK = {"div": "//"}
 
 
+def _sp(expr: str) -> str:
+    return _split_double(expr).format(**_SPLIT_SPARK)
+
+
+def _du(expr: str) -> str:
+    return _split_double(expr).format(**_SPLIT_DUCK)
+
+
 # ---------------------------------------------------------------------------
 # CUPED variance-reduced experiment readout
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.wave10_queries import (
     _SPLIT_DUCK,
@@ -111,7 +112,7 @@ def q_doc_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.row_number().over(Window.partitionBy("doc_id").orderBy("pos")),
     )
     # NOTE (r10): withlen feeds two branches (word stats + the phrase
-    # probe) and is window-heavy, but a localCheckpoint barrier here
+    # probe) and is window-heavy, but a checkpoint barrier here
     # measured SLOWER at sf0.1 (3.9s vs 1.9s warm): the duplicate
     # branches pipeline in parallel on idle cores while the barrier
     # serializes build->exec — the skipgram counterexample class. The
@@ -246,12 +247,9 @@ def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFra
     # Same two-consumer-per-round shape as bpe_merge_rounds: without a
     # barrier each round re-evaluates its input vocabulary once per
     # branch (2^rounds words-explode passes; 14 BNLJ nodes in the r10
-    # before-plan). Vocab-bounded frames — lazy localCheckpoint per
+    # before-plan). Vocab-bounded frames — one checkpoint per
     # round per the CLAUDE.md materialization rule.
-    def ckpt(v: DataFrame) -> DataFrame:
-        return v.localCheckpoint(eager=False)
-
-    v3 = bpe_round(ckpt(bpe_round(ckpt(bpe_round(ckpt(vocab))))))
+    v3 = bpe_round(checkpoint(bpe_round(checkpoint(bpe_round(checkpoint(vocab))))))
     vocab_tok = v3.select(
         F.replace(F.col("seq"), F.lit("|"), F.lit("")).alias("w"),
         F.size(text.bpe_tokens("seq")).cast("bigint").alias("ntok"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -83,7 +84,7 @@ _EDIT_MAX_DIST = 60
 def q_dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators.dedup import shingle_sets
     from etl_seattle_call_data_spark.operators.text import canonical_text
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -95,7 +96,7 @@ def q_dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode+distinct per corpus per session instead of a private
     # rebuild feeding this query's THREE consumers (df cap + both join
     # sides).
-    sh = cache_swap("doc_shingles", shingle_sets(docs))
+    sh = memo("doc_shingles", lambda: shingle_sets(docs))
     keep = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= _EDIT_MAX_DF
     )
@@ -110,9 +111,9 @@ def q_dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_shared") >= _EDIT_MIN_SHARED)
         .select("id_a", "id_b")
     )
-    prefixes = cache_swap(
+    prefixes = memo(
         "edit_prefixes",
-        toks.select("doc_id", F.substring("canon", 1, _EDIT_PREFIX).alias("pfx")),
+        lambda: toks.select("doc_id", F.substring("canon", 1, _EDIT_PREFIX).alias("pfx")),
     )
     ta = prefixes.select(F.col("doc_id").alias("id_a"), F.col("pfx").alias("pa"))
     tb = prefixes.select(F.col("doc_id").alias("id_b"), F.col("pfx").alias("pb"))
@@ -195,15 +196,17 @@ def q_segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents).alias("cents"))
         .withColumn("negc", -F.col("cents"))
     )
-    ranked = two_phase_rank_in_groups(
-        hh,
-        group_cols=["half"],
-        order_by=["negc", "custkey"],
-        coarse=F.expr("negc DIV 100000"),
-        rank_name="rank",
-        # ranked feeds the 2-row totals branch AND the segment probe —
-        # barrier once (multi-consumer rule)
-    ).localCheckpoint(eager=False)
+    # ranked feeds the 2-row totals branch AND the segment probe —
+    # barrier once (multi-consumer rule)
+    ranked = checkpoint(
+        two_phase_rank_in_groups(
+            hh,
+            group_cols=["half"],
+            order_by=["negc", "custkey"],
+            coarse=F.expr("negc DIV 100000"),
+            rank_name="rank",
+        )
+    )
     totals = ranked.groupBy("half").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_half")
     )

@@ -320,7 +320,7 @@ def q_price_index_fisher_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r11 NOTE (measured negative — do not "fix" again): up feeds three
     # consumers (min-ym scalar, base-month filter, join probe), but a
-    # lazy localCheckpoint barrier here measured SLOWER (count best-of-5:
+    # checkpoint barrier here measured SLOWER (count best-of-5:
     # 1.50 s → 2.08 s at sf0.1) — the (month, part) rollup is
     # near-part-cardinality, so materializing it costs more than the
     # pipelined branch re-evaluations it saves (skipgram counterexample

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -197,13 +198,17 @@ def q_embedding_similarity_histogram(
     # arms) — un-materialized, the quantize projection (per-dim round +
     # dot-with-self + md5 bucket) re-runs once per branch (CLAUDE.md
     # multi-consumer rule; the subtree is hash-heavy, not a cheap scan).
-    # Lazy localCheckpoint evaluates it once; the four arms read blocks.
-    emb = with_quantized(base).withColumn(
-        "hb",
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % F.lit(n_buckets),
-    ).select("vec_id", "label", "hb", "qvec", "qnorm2").localCheckpoint(eager=False)
+    # The checkpoint evaluates it once; the four arms read blocks.
+    emb = checkpoint(
+        with_quantized(base)
+        .withColumn(
+            "hb",
+            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
+            .cast("long")
+            % F.lit(n_buckets),
+        )
+        .select("vec_id", "label", "hb", "qvec", "qnorm2")
+    )
 
     def pop(on: str, name: str) -> DataFrame:
         a = emb.select(

@@ -23,20 +23,8 @@ from etl_seattle_call_data_spark.operators.ranking import (
     two_phase_cumsum_in_groups,
 )
 from etl_seattle_call_data_spark.plans.queries import register
-from etl_seattle_call_data_spark.plans.wave10_queries import (
-    _SPLIT_DUCK,
-    _SPLIT_SPARK,
-    _split_double,
-)
+from etl_seattle_call_data_spark.plans.wave10_queries import _du, _sp
 from etl_seattle_call_data_spark.sources.registry import load_table
-
-
-def _sp(expr: str) -> str:
-    return _split_double(expr).format(**_SPLIT_SPARK)
-
-
-def _du(expr: str) -> str:
-    return _split_double(expr).format(**_SPLIT_DUCK)
 
 
 # ---------------------------------------------------------------------------

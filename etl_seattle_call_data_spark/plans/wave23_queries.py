@@ -16,23 +16,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, text
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.mlprep_queries import _DUCK_BIGRAMS
 from etl_seattle_call_data_spark.plans.queries import register
-from etl_seattle_call_data_spark.plans.wave10_queries import (
-    _SPLIT_DUCK,
-    _SPLIT_SPARK,
-    _split_double,
-)
+from etl_seattle_call_data_spark.plans.wave10_queries import _du, _sp
 from etl_seattle_call_data_spark.sources.registry import load_table
-
-
-def _sp(expr: str) -> str:
-    return _split_double(expr).format(**_SPLIT_SPARK)
-
-
-def _du(expr: str) -> str:
-    return _split_double(expr).format(**_SPLIT_DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -315,7 +304,7 @@ def q_pearson_residual_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    cells = (
+    cells = checkpoint(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy(
@@ -326,7 +315,6 @@ def q_pearson_residual_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r11: cells feeds the margins branch AND the grand-total scalar
         # — checkpoint the bounded 125-cell table once (multi-consumer
         # rule; the upstream is an orders⋈customer join).
-        .localCheckpoint(eager=False)
     )
     m = cells.select(
         "nation",
@@ -578,12 +566,11 @@ def q_cents_digit_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d"
         )
     )
-    cells = (
+    cells = checkpoint(
         o.groupBy("d")
         .agg(F.count(F.lit(1)).cast("bigint").alias("o_d"))
         # r11: consumed by the total scalar AND the chi2 rollup — one
         # orders scan instead of two (bounded 100-digit table).
-        .localCheckpoint(eager=False)
     )
     tot = cells.agg(F.sum("o_d").cast("bigint").alias("n"))
     t = cells.crossJoin(F.broadcast(tot)).agg(

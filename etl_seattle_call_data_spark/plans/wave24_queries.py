@@ -21,22 +21,11 @@ from etl_seattle_call_data_spark.operators.ranking import (
     two_phase_cumsum_in_groups,
     two_phase_rank_in_groups,
 )
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
-from etl_seattle_call_data_spark.plans.wave10_queries import (
-    _SPLIT_DUCK,
-    _SPLIT_SPARK,
-    _split_double,
-)
+from etl_seattle_call_data_spark.plans.wave10_queries import _du, _sp
 from etl_seattle_call_data_spark.sources.registry import load_table
-
-
-def _sp(expr: str) -> str:
-    return _split_double(expr).format(**_SPLIT_SPARK)
-
-
-def _du(expr: str) -> str:
-    return _split_double(expr).format(**_SPLIT_DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -612,7 +601,7 @@ _MH_D2 = (
 def q_mahalanobis_outliers_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    oc = (
+    oc = checkpoint(
         o.join(li, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("o_orderkey").alias("okey"),
@@ -623,7 +612,6 @@ def q_mahalanobis_outliers_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint the order-scale (okey, x, y) rollup once instead of
         # running the orders⋈lineitem join+agg twice (multi-consumer
         # rule; ~3 narrow longs per order, trivial blocks).
-        .localCheckpoint(eager=False)
     )
     m = oc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -731,7 +719,7 @@ def q_two_way_effects_decomposition(
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    cells = (
+    cells = checkpoint(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy(
@@ -747,7 +735,6 @@ def q_two_way_effects_decomposition(
         # r11: cells feeds the margins branch AND the grand-total scalar
         # — checkpoint the bounded 125-cell table once instead of running
         # the orders⋈customer rollup twice (multi-consumer rule).
-        .localCheckpoint(eager=False)
     )
     m = cells.select(
         "nation",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -514,7 +515,7 @@ def q_shift_share_location_quotient(
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    cells = (
+    cells = checkpoint(
         li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -533,7 +534,6 @@ def q_shift_share_location_quotient(
         # grand-total scalar) — un-materialized, the 4-way fact join +
         # rollup executes twice (CLAUDE.md multi-consumer rule). The
         # checkpoint is a bounded 625-cell table.
-        .localCheckpoint(eager=False)
     )
     m = cells.select(
         "nation",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -468,7 +469,7 @@ def q_simpsons_paradox_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_discount") >= 0.05, 1).otherwise(0).alias("hi"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ret"),
     )
-    s = (
+    s = checkpoint(
         l.groupBy("brand")
         .agg(
             F.sum("hi").cast("bigint").alias("n_hi"),
@@ -481,7 +482,6 @@ def q_simpsons_paradox_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r11: s feeds the pooled-total scalar AND the per-brand output —
         # checkpoint the bounded 25-brand table once instead of running
         # the lineitem⋈part rollup twice (multi-consumer rule).
-        .localCheckpoint(eager=False)
     )
     tot = s.agg(
         F.sum("n_hi").cast("bigint").alias("tn_hi"),

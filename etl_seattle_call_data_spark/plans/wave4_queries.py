@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import ranking
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -134,7 +135,7 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and let the recursive union iterate over the ~25 materialized
     # rows. The oracle string (_RECURSIVE_SQL) is unchanged — DuckDB
     # evaluates the identical semantics.
-    edges = spark.sql(
+    edges = checkpoint(spark.sql(
         """
         WITH seq AS (
           SELECT user_id, event_type, ts, event_id,
@@ -146,7 +147,7 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM seq
         WHERE prev_type IS NOT NULL AND prev_type <> event_type
         """
-    ).localCheckpoint(eager=False)
+    ))
     edges.createOrReplaceTempView("__reach_edges_r11")
     return spark.sql(
         """
@@ -305,7 +306,7 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tl = counted.unionByName(marks)
     # r11 (§5 spill, VERDICT item 4): materialize=False — the cumsum
-    # helper's default lazy localCheckpoint would MATERIALIZE this
+    # helper's default checkpoint would MATERIALIZE this
     # ~(1 + 2·#smaller-types)·|events| marker stream to executor
     # storage, which is exactly what ground at the third decade (sf100:
     # 369.5 s, 2.91×/R with rows growing ×10). The upstream is a cheap
@@ -532,17 +533,16 @@ def q_pagerank_copurchase_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 (kcore cadence): deg feeds FOUR plan branches (rank init + the
     # three damping updates) — un-materialized, Catalyst re-aggregates
     # the edge cache once per branch, and the unrolled plan nests the
-    # duplicated deg/edge trees (a 3195-line explain). localCheckpoint
+    # duplicated deg/edge trees (a 3195-line explain). Checkpoint
     # deg ONCE: each round's plan then scans two materialized inputs
     # (edge cache + deg RDD) and the plan is linear in iterations.
     # Measured negative (do not re-add): ALSO checkpointing each rank
     # generation serialized three extra materialization barriers for
     # frames each consumed exactly ONCE — the label_propagation_2round
     # r10 lesson — and cost 2.11 s → 2.41 s count best-of-5 at sf0.1.
-    deg = (
+    deg = checkpoint(
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        .localCheckpoint(eager=False)
     )
     n_nodes = deg.count()  # bounded scalar (node count), IVF-codebook class
     base_fp = ((_PR_TOTAL * 15) // 100) // n_nodes
@@ -1260,7 +1260,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators import dq
-    from etl_seattle_call_data_spark.operators.util import cache_memo
+    from etl_seattle_call_data_spark.operators.util import memo
     from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
 
     prs = memo_copurchase_pairs(spark, sf_dir).select(
@@ -1280,13 +1280,13 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # two consumers (the adjacency build + the edge probe) — memoize the
     # oriented edge list or the degree join runs twice
-    oriented = cache_memo(
+    oriented = memo(
         "triangle:oriented",
-        ("triangle:oriented", sf_dir),
         lambda: ed.select(
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         ),
+        token=("triangle:oriented", sf_dir),
     )
     # out-neighborhood arrays: O(sqrt(m))-bounded under degree
     # orientation, so no hot-node aggregation buffer can blow up

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, text
-from etl_seattle_call_data_spark.operators.util import cache_swap, spread
+from etl_seattle_call_data_spark.operators.util import checkpoint, memo, spread
 from etl_seattle_call_data_spark.plans.docs_queries import _DUCK_COS, _DUCK_Q, _DUCK_TOKENS
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -1373,14 +1373,13 @@ def q_shortest_path_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         relaxed = edges.join(
             dist.select(F.col("node").alias("src"), "d"), "src"
         ).select(F.col("dst").alias("node"), (F.col("d") + F.col("w")).alias("d"))
-        dist = (
+        dist = checkpoint(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("d").cast("bigint").alias("d"))
             # per-round lineage cut, same cadence as kcore_peeling_3round:
             # plan depth stays constant per round so the relax count can
             # grow without re-deriving every prior round's join
-            .localCheckpoint(eager=False)
         )
     return (
         dist.select(F.col("node").alias("part"), F.col("d").alias("dist_fp"))
@@ -1934,8 +1933,6 @@ _SRC_MH_PERMS = 16
     """,
 )
 def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import cache_memo
-
     docs = spread(load_table(spark, sf_dir, "documents"))
 
     # bigram shingles via the zip_with co-walk, md5-hashed to the
@@ -1957,7 +1954,7 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    sh = cache_memo("srcmh:shingles", ("srcmh:shingles", sf_dir), build_sh)
+    sh = memo("srcmh:shingles", build_sh, token=("srcmh:shingles", sf_dir))
     perms = F.explode(F.sequence(F.lit(0), F.lit(_SRC_MH_PERMS - 1))).alias("p")
     sig = (
         sh.select("source", "h", perms)
@@ -1983,7 +1980,7 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it or the 16x permutation explode + md5 pass runs once per arm
     # (the multi-consumer-subtree hazard dedup.jaccard_pairs documents).
     # Tiny frame — |sources| x perms rows.
-    sig = cache_swap("srcmh:sig", sig)
+    sig = memo("srcmh:sig", lambda: sig)
     a = sig.select(F.col("source").alias("src_a"), "p", F.col("mh").alias("mha"))
     b = sig.select(F.col("source").alias("src_b"), "p", F.col("mh").alias("mhb"))
     est = (
@@ -2683,7 +2680,7 @@ def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # shared src-partitioned symmetric edge cache (memo_copurchase_edges):
     # scanned once per round below, never copied — the only frames that
-    # iterate (and localCheckpoint) are node-scale degree tables.
+    # iterate (and checkpoint) are node-scale degree tables.
     edges = memo_copurchase_edges(spark, sf_dir).select("src", "dst")
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2692,7 +2689,7 @@ def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
         # node-scale lineage cut: deg feeds BOTH branches (removed set
         # + alive set) every round — without it the whole prefix would
         # re-execute 2^rounds times. Cheap: |nodes| rows, not |edges|.
-        deg = deg.localCheckpoint(eager=False)
+        deg = checkpoint(deg)
         removed = deg.filter(F.col("d") < 3).select("node")
         alive = deg.filter(F.col("d") >= 3)
         # Degree loss = edges into THIS round's removed set. The removed

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
+from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -623,7 +624,7 @@ _SSR_MIN_RUN = 16  # report pairs sharing a run of >= this many tokens
 )
 def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators import text as text_ops
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -634,9 +635,9 @@ def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per session or the tokenize+explode+md5 prefix executes per
     # branch. Positional (pos, hash) rows are this query's own shape;
     # the set-semantics "doc_shingles" cache can't serve it.
-    sh = cache_swap(
+    sh = memo(
         "ssr_pos_shingles",
-        d.select(
+        lambda: d.select(
             "doc_id",
             F.explode(
                 F.expr(
@@ -661,8 +662,8 @@ def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: capped feeds BOTH arms of the positional pair join — without a
     # barrier the df-cap aggregate + semi-join re-evaluates once per arm
     # (the cached sh bounds that at 2x the cap join, but the join itself
-    # is hash-heavy). Lazy localCheckpoint runs it once.
-    capped = sh.join(okh, "h").localCheckpoint(eager=False)
+    # is hash-heavy). The checkpoint runs it once.
+    capped = checkpoint(sh.join(okh, "h"))
     a = capped.select(
         F.col("h"), F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a")
     )
@@ -925,7 +926,7 @@ def q_embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import cache_swap
+    from etl_seattle_call_data_spark.operators.util import memo
     from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
 
     edges = memo_copurchase_pairs(spark, sf_dir).select(
@@ -940,9 +941,9 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts (bounded by |brands|² ≈ 625 rows), persisted because m /
     # intra / degree below are four plan references — without the swap
     # each would re-scan the labeled edges
-    bp = cache_swap(
+    bp = memo(
         "modularity_brand_pairs",
-        lab.groupBy("ba", "bb").agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        lambda: lab.groupBy("ba", "bb").agg(F.count(F.lit(1)).cast("bigint").alias("n")),
     )
     m = bp.agg(F.sum("n").cast("bigint").alias("m"))
     intra = (

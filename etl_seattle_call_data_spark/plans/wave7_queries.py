@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
-from etl_seattle_call_data_spark.operators.util import cache_swap
+from etl_seattle_call_data_spark.operators.util import checkpoint, memo
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -192,9 +192,9 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # un-persisted -> 0.8 s persisted (best-of-2, round-8 HEAD sf1
     # bench — the cold first rep pays the tokenize once, the second
     # hits the persisted stream; docs/SCALING.md round-8 section).
-    # Key carries sf_dir (cache_swap key hygiene): alternating SF dirs
+    # Key carries sf_dir (memo key hygiene): alternating SF dirs
     # churn separate slots instead of evicting each other.
-    big = cache_swap(f"dsir_bigrams:{sf_dir}", big)
+    big = memo(f"dsir_bigrams:{sf_dir}", lambda: big)
     buckets = big.groupBy("b").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
         .cast("bigint")
@@ -786,7 +786,7 @@ def q_label_propagation_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("label")
             )
         )
-        # no per-round localCheckpoint: each generation has exactly ONE
+        # no per-round checkpoint: each generation has exactly ONE
         # consumer (next round's join, then the final rollup), so there
         # is no duplicate evaluation to cut, and at 2 unrolled rounds the
         # lineage depth is constant — the barrier only cost wall-clock
@@ -842,8 +842,6 @@ def q_label_propagation_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import cache_memo
-
     # The bipartite edge list feeds THREE consumers (a1's groupBy, h1's
     # join, a2's join) — without a persist the lineitem⋈orders⋈distinct
     # prefix executes once per branch. Memoized like the copurchase
@@ -859,23 +857,22 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    edges = cache_memo("hits:edges", ("hits:edges", sf_dir), build)
+    edges = memo("hits:edges", build, token=("hits:edges", sf_dir))
     a1 = edges.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("a"))
     h1 = (
         edges.join(a1, "p")
         .groupBy("c")
         .agg(F.sum("a").cast("bigint").alias("h"))
     )
-    a2 = (
+    a2 = checkpoint(
         edges.join(h1, "c")
         .groupBy("p")
         .agg(F.sum("h").cast("bigint").alias("a"))
         # r11: a2 feeds TWO consumers (the 1-row max branch and the final
         # projection) — un-materialized, the whole two-iteration join
-        # pipeline executes twice (CLAUDE.md multi-consumer rule). Lazy
-        # localCheckpoint runs it once; both branches read the ~|parts|
+        # pipeline executes twice (the multi-consumer rule). The
+        # checkpoint runs it once; both branches read the ~|parts|
         # materialized rows.
-        .localCheckpoint(eager=False)
     )
     mx = a2.agg(F.max("a").cast("bigint").alias("m"))
     return (
@@ -1118,12 +1115,12 @@ def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2^round times — 7 words-explode passes for 3 rounds (measured as
     # 8 BNLJ nodes / 28 Exchanges in the r10 before-plan). The frames
     # are vocab-bounded, exactly the expensive-subtree class CLAUDE.md's
-    # materialization rule targets: one lazy localCheckpoint per round
+    # materialization rule targets: one checkpoint per round
     # makes every vocabulary exactly once-evaluated (r10: 1.53s -> ~0.9s
     # at sf0.1, 28 -> 8 Exchanges).
-    t1, v1 = bpe_round(vocab.localCheckpoint(eager=False))
-    t2, v2 = bpe_round(v1.localCheckpoint(eager=False))
-    t3, v3 = bpe_round(v2.localCheckpoint(eager=False))
+    t1, v1 = bpe_round(checkpoint(vocab))
+    t2, v2 = bpe_round(checkpoint(v1))
+    t3, v3 = bpe_round(checkpoint(v2))
     out = (
         t1.select(F.lit(1).cast("int").alias("round"), F.col("bg").alias("merged_pair"), "n")
         .unionByName(

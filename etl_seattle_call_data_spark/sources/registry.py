@@ -71,17 +71,16 @@ def _normalize_temporals(df: DataFrame, name: str) -> DataFrame:
 # driver-side footer reads and py4j chatter, and a full registry pass
 # makes 500 such calls for ~10 distinct tables — 48s of a 143s build
 # pass was redundant re-resolution of identical static inputs. Sources
-# are immutable files within a session (the cache_swap premise); the
-# one documented exception — an in-place rewrite via the maintenance
-# operators — already requires `clear_caches()`, which clears this memo
-# too (operators/util.py hooks `clear_table_memo`).
+# are immutable files within a session (the operators/util.memo
+# premise); the maintenance operators' in-place rewrites call
+# `clear_caches()`, which clears this memo too.
 _table_memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def clear_table_memo() -> None:
     """Forget memoized table plans (all sessions). Called by
-    operators.util.clear_caches() so the standing rule — clear caches
-    after rewriting source files in place — covers plan memos too."""
+    operators.util.clear_caches(), so an in-place rewrite of the source
+    files drops plan memos too."""
     _table_memo.clear()
 
 

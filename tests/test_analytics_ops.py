@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators import dedup, joins, profile, sampling, text
+from tests.conftest import SF_SMOKE
 
 
 def test_hash_sample_deterministic_across_partitionings(spark):
@@ -245,6 +246,38 @@ def test_compact_parquet(spark, tmp_path):
     after = maintenance.compact_parquet(spark, path, target_file_bytes=1 << 30)
     assert after == 1  # tiny table -> one file
     assert spark.read.parquet(path).count() == 10000
+
+
+def test_compact_single_file_table_twice(spark, tmp_path):
+    """A table stored as ONE parquet file (not a directory) is rewritten
+    into a directory; the leftover ``__old`` is a file, and neither the
+    swap nor the next call's heal may die removing it."""
+    import os
+    import shutil
+
+    from etl_seattle_call_data_spark.operators import maintenance
+
+    path = str(tmp_path / "region.parquet")
+    shutil.copy(f"{SF_SMOKE}/region.parquet", path)
+    n = spark.read.parquet(path).count()
+    for _ in range(2):
+        assert maintenance.compact_parquet(spark, path, target_file_bytes=1 << 30) == 1
+        assert not os.path.exists(path + "__old")
+        assert spark.read.parquet(path).count() == n
+
+
+def test_compact_drops_table_plan_memo(spark, tmp_path):
+    """load_table memoizes the table plan (and its file list); an
+    in-place rewrite must drop it, or the next load reads deleted files."""
+    from etl_seattle_call_data_spark.operators import maintenance
+    from etl_seattle_call_data_spark.sources.registry import load_table
+
+    d = str(tmp_path)
+    region = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
+    region.repartition(3).write.parquet(f"{d}/region.parquet")
+    n = load_table(spark, d, "region").count()
+    maintenance.compact_parquet(spark, f"{d}/region.parquet", target_file_bytes=1 << 30)
+    assert load_table(spark, d, "region").count() == n
 
 
 def test_read_jsonl_safe_quarantines_bad_lines(spark, tmp_path):

@@ -64,6 +64,27 @@ def test_no_row_at_a_time_python_udf(spark, name):
         assert "MapInPandas" not in plan
 
 
+def test_materialization_only_in_util():
+    """``operators/util.py`` owns the materialization policy: within-plan
+    barriers go through ``checkpoint()`` and cross-query reuse through
+    ``memo()``. No other module under plans/ or operators/ may call
+    ``.localCheckpoint(`` or ``.persist(`` itself."""
+    import pathlib
+
+    import etl_seattle_call_data_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{p.relative_to(root)}:{i}"
+        for sub in ("plans", "operators")
+        for p in sorted((root / sub).rglob("*.py"))
+        if p.name != "util.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line or ".persist(" in line
+    ]
+    assert offenders == []
+
+
 def test_q3_broadcasts_customer(spark):
     """The 3-way join's small side (customer) must be an explicit
     broadcast — consistent with the sibling star queries, not reliant on
