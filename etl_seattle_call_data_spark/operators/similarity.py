@@ -321,7 +321,6 @@ def ivf_topk(
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[tuple[int, list[int]]] | None = None,
 ) -> DataFrame:
     """IVF-style ANN top-k: assign every vector to its nearest coarse
     centroid cell, equi-join query↔corpus on the cell (single probe),
@@ -330,7 +329,7 @@ def ivf_topk(
     of fixed random hyperplanes. At scale the cell column doubles as the
     physical partition key for the corpus, so one probe = one partition
     read."""
-    cents = centroids if centroids is not None else seeded_centroids(corpus, n_cells, id_col, vec_col)
+    cents = seeded_centroids(corpus, n_cells, id_col, vec_col)
     # persist the cell-assigned corpus: the 8×dims interpreted HOF
     # distance evaluation would otherwise re-run in every downstream
     # stage (join shuffle write, re-rank) — measured 3× the query cost

@@ -1,9 +1,9 @@
-"""Named analytical queries — the engine's operator-coverage surface.
+"""The query registry — the engine's operator-coverage surface.
 
-Every operator from SURVEY.md §2 lands here as a named query over the
-driver's test tables, paired with an ANSI-SQL oracle that DuckDB runs on
-the same parquet files. The driver hash-compares the two (row count +
-schema + order-insensitive value hash), so:
+Every operator from SURVEY.md §2 is a named query over the test tables,
+paired with an ANSI-SQL oracle that DuckDB runs on the same parquet
+files. The two results are hash-compared (row count + schema +
+order-insensitive value hash), so:
 
 * every computed column is aliased identically in Spark and SQL;
 * money/quantity aggregates are summed in DECIMAL (exact, order-free)
@@ -13,7 +13,11 @@ schema + order-insensitive value hash), so:
   division of identical inputs, bit-identical on both sides;
 * ties in any top-k are broken by a unique key column.
 
-Reference-parity notes cite /root/reference file:line in each docstring.
+This module holds only the registry. The queries live in one module per
+domain (``plans/relational.py``, ``plans/tpch.py``, ``plans/corpus.py``,
+…), each registering through ``register``; a helper used by two or more
+domains lives in ``plans/shared.py``. Reference-parity notes cite the
+reference pipeline's file:line in each query's docstring.
 """
 
 from __future__ import annotations
@@ -22,10 +26,6 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from etl_seattle_call_data_spark.sources.registry import load_table
 
 
 @dataclass(frozen=True)
@@ -47,535 +47,14 @@ def register(name: str, description: str, oracle: str | None):
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# Aggregations (SURVEY §2.4: A1-A4) and the flagship serving query (A3)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_by_type",
-    "Group-by count over the event stream table — parity with the reference's "
-    "declared serving query SELECT call_type, COUNT(*) ... GROUP BY call_type "
-    "(reference README.md:130-134).",
-    """
-    SELECT event_type, COUNT(*) AS n_events
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-@register(
-    "q1_pricing_summary",
-    "TPC-H-Q1-style wide aggregate: filter + groupBy + sum/avg/count. "
-    "Generalizes the reference's aggregation surface (SURVEY §2.4); sums in "
-    "DECIMAL for cross-engine exactness.",
-    """
-    SELECT
-      l_returnflag,
-      l_linestatus,
-      CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-               * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-      CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price,
-      COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    qty_dec = F.col("l_quantity").cast("decimal(18,2)")
-    price_dec = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc_dec = F.col("l_discount").cast("decimal(18,2)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty_dec).cast("double").alias("sum_qty"),
-            F.sum(price_dec).cast("double").alias("sum_base_price"),
-            F.sum(price_dec * (F.lit(1) - disc_dec)).cast("double").alias("sum_disc_price"),
-            (F.sum(qty_dec).cast("double") / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(price_dec).cast("double") / F.count(F.lit(1))).alias("avg_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@register(
-    "distinct_order_customers",
-    "Distinct key-set dedup (SURVEY A1 — reference transform.py:140-142 "
-    "builds .select(key).distinct()).",
-    "SELECT DISTINCT o_custkey FROM orders",
-)
-def q_distinct_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "orders").select("o_custkey").distinct()
-
-
-# ---------------------------------------------------------------------------
-# Joins (SURVEY §2.3: J1 anti-join cascade, J2 star equi-joins)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "anti_join_cascade",
-    "Left-anti equi-join with event-level cascade: drop EVERY line of any "
-    "order that has at least one line with l_quantity < 3 — same shape as the "
-    "reference's filter_events_with_null_in_service_time "
-    "(reference transform.py:138-143: any-null dispatch row removes the whole "
-    "CAD event). Aggregated so the result is compact.",
-    """
-    SELECT l_returnflag, COUNT(*) AS n_lines,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    WHERE NOT EXISTS (
-      SELECT 1 FROM lineitem bad
-      WHERE bad.l_orderkey = lineitem.l_orderkey AND bad.l_quantity < 3
-    )
-    GROUP BY l_returnflag
-    """,
-)
-def q_anti_join_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    bad_orders = li.filter(F.col("l_quantity") < 3).select("l_orderkey").distinct()
-    kept = li.join(bad_orders, on="l_orderkey", how="left_anti")
-    return kept.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-    )
-
-
-@register(
-    "top_customers_by_revenue",
-    "Fact-dim equi-join (SURVEY J2) + groupBy + top-k with deterministic "
-    "tiebreak. Customer dim is broadcast (small side).",
-    """
-    SELECT c.c_custkey, c.c_name,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_orders
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 10
-    """,
-)
-def q_top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(10)
-    )
-
-
-@register(
-    "star_join_region_revenue",
-    "Multi-hop star join (customer→nation→region ⋈ orders ⋈ lineitem): the "
-    "star-schema consumption pattern the reference's warehouse serves "
-    "(reference README.md:66-82). Dims broadcast.",
-    """
-    SELECT r.r_name AS region_name, n.n_name AS nation_name,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_lines
-    FROM lineitem l
-    JOIN orders o    ON l.l_orderkey = o.o_orderkey
-    JOIN customer c  ON o.o_custkey = c.c_custkey
-    JOIN nation n    ON c.c_nationkey = n.n_nationkey
-    JOIN region r    ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name, n.n_name
-    """,
-)
-def q_star_join_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    price_dec = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc_dec = F.col("l_discount").cast("decimal(18,2)")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
-        .agg(
-            F.sum(price_dec * (F.lit(1) - disc_dec)).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Projections / filters / null handling (SURVEY §2.2: P4-P7) and
-# conditional repair (P7-P9), coalesce merge (F4)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "conditional_repair",
-    "3-arm when/otherwise conditional column repair — same shape as the "
-    "reference's fill_call_sign_at_scene_time (reference transform.py:25-39). "
-    "NULLIF manufactures the nulls the repair fills.",
-    """
-    WITH base AS (
-      SELECT o_orderkey,
-             NULLIF(o_orderpriority, '4-NOT SPECIFIED') AS raw_priority,
-             o_totalprice
-      FROM orders
-    )
-    SELECT
-      CASE
-        WHEN raw_priority IS NULL AND o_totalprice > 100000 THEN '1-URGENT'
-        WHEN raw_priority IS NULL THEN '5-LOW'
-        ELSE raw_priority
-      END AS repaired_priority,
-      COUNT(*) AS n_orders
-    FROM base
-    GROUP BY 1
-    """,
-)
-def q_conditional_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    raw = F.nullif(F.col("o_orderpriority"), F.lit("4-NOT SPECIFIED"))
-    repaired = (
-        F.when(raw.isNull() & (F.col("o_totalprice") > 100000), F.lit("1-URGENT"))
-        .when(raw.isNull(), F.lit("5-LOW"))
-        .otherwise(raw)
-    )
-    return (
-        orders.select(repaired.alias("repaired_priority"))
-        .groupBy("repaired_priority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-
-
-@register(
-    "null_fill_and_drop",
-    "na.fill with per-column defaults + na.drop on a key column (reference "
-    "transform.py:130-136: fillna({'dispatch_sector':'UNKNOWN','priority':-1}) "
-    "and dropna(subset=[...])). Nulls manufactured with NULLIF.",
-    """
-    WITH base AS (
-      SELECT o_orderkey,
-             NULLIF(o_orderstatus, 'P') AS status_n,
-             NULLIF(o_orderpriority, '4-NOT SPECIFIED') AS prio_n
-      FROM orders
-    )
-    SELECT COALESCE(status_n, 'UNKNOWN') AS status_filled,
-           COUNT(*) AS n
-    FROM base
-    WHERE prio_n IS NOT NULL
-    GROUP BY 1
-    """,
-)
-def q_null_fill_and_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    base = orders.select(
-        "o_orderkey",
-        F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("status_n"),
-        F.nullif(F.col("o_orderpriority"), F.lit("4-NOT SPECIFIED")).alias("prio_n"),
-    )
-    repaired = base.na.drop(subset=["prio_n"]).na.fill({"status_n": "UNKNOWN"})
-    return (
-        repaired.groupBy(F.col("status_n").alias("status_filled"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@register(
-    "coalesce_merge",
-    "Asymmetric two-source coalesce merge — the reference's SPD/CARE agency "
-    "merge (reference transform.py:71-97: coalesce(spd_col, care_col) with "
-    "load-bearing argument order).",
-    """
-    SELECT o_orderkey,
-           COALESCE(NULLIF(o_orderstatus, 'O'), o_orderpriority) AS merged_status
-    FROM orders
-    """,
-)
-def q_coalesce_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return orders.select(
-        "o_orderkey",
-        F.coalesce(
-            F.nullif(F.col("o_orderstatus"), F.lit("O")), F.col("o_orderpriority")
-        ).alias("merged_status"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Scalar functions (SURVEY §2.6: F1-F12)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "regexp_strip_own_key",
-    "regexp_replace with a COLUMN-VALUED pattern: strip each row's own order "
-    "key out of a synthesized dispatch id — the reference's unit_id derivation "
-    "(reference transform.py:112-117: regexp_replace(col('Call Sign Dispatch "
-    "ID'), col('CAD Event Number').cast('string'), '')).",
-    """
-    SELECT l_orderkey, l_linenumber,
-           regexp_replace(
-             'U' || CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR),
-             CAST(l_orderkey AS VARCHAR), '', 'g') AS unit_id
-    FROM lineitem
-    """,
-)
-def q_regexp_strip_own_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    dispatch_id = F.concat(
-        F.lit("U"), F.col("l_orderkey").cast("string"), F.lit("-"), F.col("l_linenumber").cast("string")
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.regexp_replace(dispatch_id, F.col("l_orderkey").cast("string"), F.lit("")).alias("unit_id"),
-    )
-
-
-@register(
-    "duration_seconds",
-    "Epoch-seconds arithmetic (reference transform.py:145-154: "
-    "unix_timestamp(a) - unix_timestamp(b) response-time derivation): seconds "
-    "since midnight per event, averaged per type.",
-    """
-    SELECT event_type,
-           CAST(SUM(CAST(floor(epoch(ts)) - floor(epoch(date_trunc('day', ts))) AS BIGINT)) AS DOUBLE)
-             / COUNT(*) AS avg_s_since_midnight,
-           COUNT(*) AS n
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def q_duration_seconds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    secs = F.unix_timestamp(F.col("ts")) - F.unix_timestamp(F.date_trunc("day", F.col("ts")))
-    return ev.groupBy("event_type").agg(
-        (F.sum(secs).cast("double") / F.count(F.lit(1))).alias("avg_s_since_midnight"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "event_date_extraction",
-    "Date-part extraction from a timestamp (reference transform.py:61: "
-    "event_date = substring(ts, 1, 10)) — emitted as a yyyy-MM-dd string.",
-    """
-    SELECT strftime(ts, '%Y-%m-%d') AS event_date, COUNT(*) AS n_events
-    FROM events
-    GROUP BY 1
-    """,
-)
-def q_event_date_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(F.date_format("ts", "yyyy-MM-dd").alias("event_date"))
-        .groupBy("event_date")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-@register(
-    "ampm_timestamp_parse",
-    "AM/PM 12-hour timestamp parsing WITHOUT a Python UDF — the native "
-    "replacement for the reference's convert_to_24_hour UDF (reference "
-    "transform.py:8-23 + to_timestamp at :67). Round-trips ts through "
-    "'MM/dd/yyyy hh:mm:ss AM' text and re-parses with a coalesce ladder "
-    "(12-hour first, 24-hour fallback) per SURVEY §7.1.",
-    """
-    SELECT event_id,
-           strftime(strptime(strftime(ts, '%m/%d/%Y %I:%M:%S %p'),
-                             '%m/%d/%Y %I:%M:%S %p'),
-                    '%Y-%m-%d %H:%M:%S') AS parsed_ts
-    FROM events
-    """,
-)
-def q_ampm_timestamp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    txt = F.date_format("ts", "MM/dd/yyyy hh:mm:ss a")
-    parsed = F.coalesce(
-        F.try_to_timestamp(txt, F.lit("MM/dd/yyyy hh:mm:ss a")),
-        F.try_to_timestamp(txt, F.lit("MM/dd/yyyy HH:mm:ss")),
-    )
-    return ev.select(
-        "event_id", F.date_format(parsed, "yyyy-MM-dd HH:mm:ss").alias("parsed_ts")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Window functions, sorts, limits, set ops (SURVEY §2.5)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "window_event_sequence",
-    "row_number over (user, time) — the deterministic surrogate-key pattern "
-    "that replaces the reference's monotonically_increasing_id (reference "
-    "transform.py:197-208; SURVEY §7.4.2). Keeps each user's first 3 events.",
-    """
-    SELECT event_id, user_id, seq FROM (
-      SELECT event_id, user_id,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seq
-      FROM events
-    ) WHERE seq <= 3
-    """,
-)
-def q_window_event_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    return (
-        ev.withColumn("seq", F.row_number().over(w))
-        .filter(F.col("seq") <= 3)
-        .select("event_id", "user_id", "seq")
-    )
-
-
-@register(
-    "set_ops_except_intersect",
-    "Set operations (EXCEPT/INTERSECT — absent from the reference, SURVEY "
-    "§2.5; the anti-join J1 is its lone except-like op): customers with open "
-    "orders but no finished orders.",
-    """
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    EXCEPT
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-    """,
-)
-def q_set_ops_except_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    open_c = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    fin_c = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    return open_c.subtract(fin_c)  # subtract == SQL EXCEPT (set semantics)
-
-
-@register(
-    "tumbling_window_counts",
-    "Tumbling 10-minute event-time window aggregation — the batch form of "
-    "the engine's watermarked streaming aggregation (T6; the streaming "
-    "variant is tested in tests/test_streaming.py).",
-    """
-    SELECT time_bucket(INTERVAL '10 minutes', ts) AS window_start,
-           event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def q_tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(F.col("win.start").alias("window_start"), "event_type", "n", "total_value")
-    )
-
-
-@register(
-    "sessionization",
-    "Sessionization via lag + gap cumsum (30-minute inactivity): per-user "
-    "session ids and per-session stats — the window-function composition "
-    "pattern for event streams.",
-    """
-    WITH gaps AS (
-      SELECT user_id, event_id, ts, value,
-             -- truncate to whole seconds exactly like Spark's cast(ts AS long)
-             CASE WHEN floor(epoch(ts))
-                       - floor(epoch(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)))
-                       > 1800
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-    ), sessions AS (
-      SELECT user_id, event_id, ts, value,
-             -- CAST: DuckDB SUM(int) yields HUGEINT, which pandas widens to
-             -- float64; Spark's sum is BIGINT — match dtypes exactly
-             CAST(SUM(new_session) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-      FROM gaps
-    )
-    SELECT user_id, session_seq, COUNT(*) AS n_events,
-           CAST(floor(epoch(max(ts))) - floor(epoch(min(ts))) AS BIGINT) AS duration_s
-    FROM sessions
-    GROUP BY user_id, session_seq
-    """,
-)
-def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    new_session = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
-    sessions = ev.withColumn("new_session", new_session).withColumn(
-        "session_seq",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    return sessions.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))).alias("duration_s"),
-    )
-
-
-# Register the training-data extension queries (documents/embeddings) and
-# the extended operator surface (multi-dim aggs, window suite, temporal
-# joins). Imports at the bottom: both import `register` from this module.
-from etl_seattle_call_data_spark.plans import analytics_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import docs_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import extended_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import behavior_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import mlprep_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import tpch_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import scale_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave4_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave5_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave6_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave7_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave8_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave9_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave10_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave11_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave12_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave13_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave14_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave15_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave16_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave17_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave18_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave19_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave20_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave21_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave22_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave23_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave24_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave25_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave26_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave27_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave28_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave29_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave30_queries  # noqa: E402,F401
-from etl_seattle_call_data_spark.plans import wave31_queries  # noqa: E402,F401
+# The domain modules import `register` from this module, so they are
+# imported at the bottom, after it is defined.
+from etl_seattle_call_data_spark.plans import relational  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import tpch  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import corpus  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import vectors  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import graph  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import stats  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import timeseries  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import behavior  # noqa: E402,F401
+from etl_seattle_call_data_spark.plans import cdc  # noqa: E402,F401

@@ -1,17 +1,29 @@
-"""Cross-query memoized intermediates for the plans package.
+"""Helpers shared by two or more plan domain modules.
 
-The market-basket family (copurchase_part_pairs, association_rules_lift,
-pagerank_copurchase_3iter, triangle_count_copurchase) all start from the
-same distinct (order, part) item table and its bounded self-join pair
-counts. Memoizing both under a token (operators/util.memo — plan build
-skipped on repeat hits, same registry as the dedup family's shingle
-memo) means the expensive pair join runs ONCE per corpus per session;
-every downstream graph/rule query derives from the held table.
+Two kinds live here, and nothing else: a helper used by a single domain
+stays in that domain's module.
+
+* Cross-query memoized intermediates. The market-basket family
+  (copurchase_part_pairs, association_rules_lift,
+  pagerank_copurchase_3iter, triangle_count_copurchase) all start from
+  the same distinct (order, part) item table and its bounded self-join
+  pair counts. Memoizing both under a token (operators/util.memo — plan
+  build skipped on repeat hits, same registry as the dedup family's
+  shingle memo) means the expensive pair join runs ONCE per corpus per
+  session; every downstream graph/rule query derives from the held
+  table.
+* Cross-engine SQL/expression fragments: the quotient+remainder
+  double split (``_split_double``) and its ``_sp``/``_du`` dialect
+  shim, the DuckDB tokenizer fragment, the portable md5 bucket hash,
+  integral cents, the decimal(18,6) accumulator type and the
+  microseconds-per-day constant. Each one is spelled once so the Spark
+  side and the DuckDB oracle of every caller stay bit-identical by
+  construction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators.util import memo
@@ -81,3 +93,51 @@ def memo_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sym.repartition(F.col("src"))
 
     return memo("basket:edges", build, token=("basket:edges", sf_dir))
+
+
+# DuckDB fragments mirroring operators/text.py primitives
+_DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
+
+
+_DEC6 = "decimal(18,6)"
+
+
+def _hash_mod(col: Column, buckets: int) -> Column:
+    """Portable md5-prefix hash bucket (operators/sampling.hash_bucket
+    semantics, inlined so the modulus can vary per call)."""
+    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
+    return h % buckets
+
+
+def _split_double(col_name: str) -> str:
+    """SQL fragment turning an exact integral column (DECIMAL/HUGEINT,
+    possibly > 2^53) into the correctly-rounded DOUBLE via the
+    quotient+remainder split: both parts are < 2^53 so their casts are
+    exact, the 2^26 rescale is a power of two (exact), and the single
+    final addition rounds once — identically on both engines. Uses the
+    engine-portable truncating division (Spark `DIV` ≡ DuckDB `//`,
+    rule 25), consistent with `%` for negative inputs."""
+    return (
+        f"(CAST({col_name} {{div}} 67108864 AS DOUBLE) * 67108864.0"
+        f" + CAST({col_name} % 67108864 AS DOUBLE))"
+    )
+
+
+_SPLIT_SPARK = {"div": "DIV"}
+_SPLIT_DUCK = {"div": "//"}
+
+
+def _sp(expr: str) -> str:
+    return _split_double(expr).format(**_SPLIT_SPARK)
+
+
+def _du(expr: str) -> str:
+    return _split_double(expr).format(**_SPLIT_DUCK)
+
+
+def _cents(col: Column) -> Column:
+    return F.round(col * 100).cast("bigint")
+
+
+# microseconds per day: epoch_us(ts) DIV _DAY is the integral epoch day
+_DAY = "86400000000"

@@ -48,7 +48,7 @@ def sessionized_counts(
     """Per-key session aggregation: sessions close after ``gap`` of
     inactivity, finalized once the watermark passes. The streaming
     counterpart of the batch lag/cumsum sessionization
-    (plans/queries.py::q_sessionization)."""
+    (plans/behavior.py::q_sessionization)."""
     return (
         df.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("session"), F.col(key))

@@ -85,6 +85,35 @@ def test_materialization_only_in_util():
     assert offenders == []
 
 
+def test_plans_live_in_domain_modules():
+    """Every registered query lives in a module named after its domain;
+    no wave-numbered module is left; helpers shared across domains come
+    from ``plans/shared.py``, never from another domain's privates."""
+    import ast
+    import pathlib
+
+    import etl_seattle_call_data_spark.plans as plans
+
+    pkg = plans.__name__ + "."
+    domains = {"relational", "tpch", "corpus", "vectors", "graph", "stats",
+               "timeseries", "behavior", "cdc"}
+    assert {q.spark.__module__.removeprefix(pkg) for q in REGISTRY.values()} <= domains
+
+    root = pathlib.Path(plans.__file__).parent
+    assert sorted(p.name for p in root.glob("wave*")) == []
+
+    offenders = [
+        f"{p.name}:{node.lineno}"
+        for p in sorted(root.glob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").startswith(pkg)
+        and node.module != pkg + "shared"
+        and any(a.name.startswith("_") for a in node.names)
+    ]
+    assert offenders == []
+
+
 def test_q3_broadcasts_customer(spark):
     """The 3-way join's small side (customer) must be an explicit
     broadcast — consistent with the sibling star queries, not reliant on

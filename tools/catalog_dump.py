@@ -1,9 +1,9 @@
 """Generate docs/CATALOG.md — a one-line-per-query navigation catalog of
-the full registry: family (the plans module that registers it), shuffle
+the full registry: family (the plans domain module that registers it), shuffle
 and broadcast counts from the pre-AQE physical plan, a scale class
 derived from the shuffle count, and the first clause of the docstring.
 
-364 queries span ~30 families; PLANS.md deep-dives 12 headliners, this
+366 queries span 9 domain families; PLANS.md deep-dives 12 headliners, this
 file is the breadth index a user navigates the surface with.
 
 Usage: python tools/catalog_dump.py [sf_dir]
@@ -45,19 +45,38 @@ def first_clause(desc: str, limit: int = 110) -> str:
     return cut.replace("|", "\\|")
 
 
+def committed_growth() -> dict[str, str]:
+    """The growth/R cell of every query row in the committed
+    docs/CATALOG.md (cells are split on unescaped pipes, so a ``\\|`` in
+    the description column does not shift them)."""
+    path = os.path.join(REPO, "docs", "CATALOG.md")
+    if not os.path.exists(path):
+        return {}
+    out = {}
+    for line in open(path):
+        cells = [c.strip() for c in re.split(r"(?<!\\)\|", line.strip())[1:-1]]
+        if len(cells) == 9 and cells[0] != "query" and not cells[0].startswith("-"):
+            out[cells[0]] = cells[6]
+    return out
+
+
 def growth_exponents() -> dict[str, str]:
     """Per-query measured growth/R between the committed sf0.1 baseline
     (BENCH_DETAIL.json) and the sf1 snapshot (BENCH_DETAIL_sf1.0.json):
     1.0 = perfectly linear in data volume, < 1 sub-linear (fixed costs
     still dominate), > 1 super-linear (investigate). '†' marks entries
     whose sf1 time is under scale_report's 0.3 s noise floor — shared-
-    host jitter dominates there, the ratio is not load-bearing."""
+    host jitter dominates there, the ratio is not load-bearing.
+
+    The sf1 snapshot is gitignored, so a clean checkout has none; the
+    cells measured earlier are then carried over from the committed
+    catalog instead of being blanked."""
     import json
 
     small_p = os.path.join(REPO, "BENCH_DETAIL.json")
     large_p = os.path.join(REPO, "BENCH_DETAIL_sf1.0.json")
     if not (os.path.exists(small_p) and os.path.exists(large_p)):
-        return {}
+        return committed_growth()
     small = json.load(open(small_p))
     large = json.load(open(large_p))
     r = (large.get("sf") or 0) / (small.get("sf") or 1)
@@ -119,7 +138,7 @@ def main() -> int:
     rows = []
     for name in sorted(REGISTRY):
         q = REGISTRY[name]
-        family = q.spark.__module__.rsplit(".", 1)[-1].removesuffix("_queries")
+        family = q.spark.__module__.rsplit(".", 1)[-1]
         g = growth.get(name, "—")
         g2 = growth2.get(name, "—")
         try:

@@ -1,7 +1,7 @@
 """Close the corpus_clean_pipeline sf10 verification gap by SHARDING the
 oracle's Jaccard stage by shingle.
 
-The registered DuckDB oracle (plans/docs_queries.py::corpus_clean_pipeline)
+The registered DuckDB oracle (plans/corpus.py::corpus_clean_pipeline)
 is exact but monolithic: at sf10 (500k surviving docs) its shared-shingle
 self-join intermediate spilled past the box's 76 GB of free disk. The
 join's work is PERFECTLY partitionable by shingle — a shingle's candidate
@@ -47,7 +47,7 @@ sys.path.insert(
 )
 
 TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
-MAX_DF = 100  # plans/docs_queries.py::_JACCARD_MAX_DF
+MAX_DF = 100  # plans/corpus.py::_JACCARD_MAX_DF
 
 
 def shingle_rel(src: str) -> str:
