@@ -142,17 +142,10 @@ def _jaccard_from_intersections(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, num_hashes: int = 8, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def _minhash_from_shingles(sh: DataFrame, num_hashes: int, id_col: str) -> DataFrame:
     """MinHash signature per document: for each seed s, the lexicographic
     min of md5('s:' || shingle) — identical hex across engines, so the
     signature is engine-independent."""
-    sh = shingle_sets(df, id_col, text_col, n)
-    return _minhash_from_shingles(sh, num_hashes, id_col)
-
-
-def _minhash_from_shingles(sh: DataFrame, num_hashes: int, id_col: str) -> DataFrame:
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"h{s}")
         for s in range(num_hashes)

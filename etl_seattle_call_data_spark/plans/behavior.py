@@ -19,9 +19,8 @@ from pyspark.sql.window import Window
 from etl_seattle_call_data_spark.operators import dq
 from etl_seattle_call_data_spark.operators.ranking import (
     equidepth_bucket,
-    two_phase_multi_rank,
+    two_phase_scan,
 )
-from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import _DAY, _DEC6, _du, _sp
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -1172,7 +1171,7 @@ def q_markov_2step_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "RFM customer segmentation: recency (days since last order, vs the "
     "global max order day), frequency (order count), monetary (decimal "
     "revenue sum) — each cut into exact NTILE(5) quintiles WITHOUT a "
-    "single-partition global sort: three two_phase_rank passes "
+    "single-partition global sort: three two_phase_scan ranks "
     "(operators/ranking.py; coarse buckets on day/count/price bands, "
     "custkey tiebreak) + the NTILE-identical equidepth_bucket. Output "
     "is the bounded 5x5x5 segment-size table with per-segment revenue. "
@@ -1216,27 +1215,27 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = cust.crossJoin(F.broadcast(mx)).withColumn(
         "rec", (F.col("max_day") - F.col("last_day")).cast("bigint")
     )
-    # r11: the three ranks are independent columns over the SAME frame —
-    # two_phase_multi_rank attaches all three coarse buckets up front and
-    # checkpoints ONCE (three chained two_phase_rank calls serialized
-    # three materialization jobs + three collects; same offsets, same
-    # ranks, one barrier).
-    ranked, n = two_phase_multi_rank(
+    # the three ranks are independent columns over the SAME frame — one
+    # scan call attaches all three coarse buckets up front, so all three
+    # share one checkpoint barrier.
+    one = F.lit(1)
+    money_band = F.expr("CAST(floor(money) AS BIGINT) DIV 100000")
+    ranked = two_phase_scan(
         base,
+        [],
         [
-            (["rec", "ck"], F.expr("rec DIV 30"), "r_rank"),
-            (["freq", "ck"], F.expr("freq DIV 4"), "f_rank"),
-            (
-                ["money", "ck"],
-                F.expr("CAST(floor(money) AS BIGINT) DIV 100000"),
-                "m_rank",
-            ),
+            ("r_rank", ["rec", "ck"], F.expr("rec DIV 30"), one, "sum", False),
+            ("f_rank", ["freq", "ck"], F.expr("freq DIV 4"), one, "sum", False),
+            ("m_rank", ["money", "ck"], money_band, one, "sum", False),
         ],
     )
     seg = ranked.select(
-        equidepth_bucket(F.col("r_rank"), n, 5).alias("r_q"),
-        equidepth_bucket(F.col("f_rank"), n, 5).alias("f_q"),
-        equidepth_bucket(F.col("m_rank"), n, 5).alias("m_q"),
+        *(
+            equidepth_bucket(F.col(f"{c}_rank"), F.col(f"{c}_rank_total"), 5).alias(
+                f"{c}_q"
+            )
+            for c in "rfm"
+        ),
         "money",
     )
     return seg.groupBy("r_q", "f_q", "m_q").agg(
@@ -1928,20 +1927,11 @@ def q_naive_ltv_forecast_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11: ONE orders pass instead of two. The previous shape ran
-    # two_phase_rank per half — two orders scans, two checkpoint
-    # materializations and two SERIALIZED driver offset-collects. Both
-    # halves now ride one (half, custkey) rollup through the GROUPED
-    # two-phase rank (no driver collect at all); per-half NTILE(5) uses
-    # the column-typed equidepth_bucket_grouped with per-half totals
-    # attached from the bounded 2-row count table, and the h1×h2 join
+    # ONE orders pass: both halves ride one (half, custkey) rollup
+    # through the grouped two-phase rank; per-half NTILE(5) reads the
+    # per-half row count off the scan's rank_total, and the h1×h2 join
     # becomes a conditional-aggregate pivot consuming the ranked frame
     # once (CLAUDE.md one-pass-restructure rule).
-    from etl_seattle_call_data_spark.operators.ranking import (
-        equidepth_bucket_grouped,
-        two_phase_rank_in_groups,
-    )
-
     o = load_table(spark, sf_dir, "orders")
     cut = F.lit("1998-01-01 00:00:00").cast("timestamp")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
@@ -1955,24 +1945,13 @@ def q_segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents).alias("cents"))
         .withColumn("negc", -F.col("cents"))
     )
-    # ranked feeds the 2-row totals branch AND the segment probe —
-    # barrier once (multi-consumer rule)
-    ranked = checkpoint(
-        two_phase_rank_in_groups(
-            hh,
-            group_cols=["half"],
-            order_by=["negc", "custkey"],
-            coarse=F.expr("negc DIV 100000"),
-            rank_name="rank",
-        )
-    )
-    totals = ranked.groupBy("half").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_half")
-    )
-    seg = ranked.join(F.broadcast(totals), "half").select(
+    coarse = F.expr("negc DIV 100000")
+    spec = ("rank", ["negc", "custkey"], coarse, F.lit(1), "sum", False)
+    ranked = two_phase_scan(hh, ["half"], [spec])
+    seg = ranked.select(
         "custkey",
         "half",
-        equidepth_bucket_grouped(F.col("rank"), F.col("n_half"), 5).alias("seg"),
+        equidepth_bucket(F.col("rank"), F.col("rank_total"), 5).alias("seg"),
     )
     return (
         seg.groupBy("custkey")

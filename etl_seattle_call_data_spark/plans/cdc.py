@@ -710,22 +710,15 @@ _GAP_TOPK = 20
     """,
 )
 def q_sequence_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import (
-        two_phase_rank_in_groups,
-    )
+    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 
     keys = (
         load_table(spark, sf_dir, "events")
         .select("event_type", F.col("event_id").alias("k"))
         .distinct()
     )
-    ranked = two_phase_rank_in_groups(
-        keys,
-        group_cols=["event_type"],
-        order_by=["k"],
-        coarse=F.expr("k DIV 4096"),
-        rank_name="r",
-    )
+    spec = ("r", ["k"], F.expr("k DIV 4096"), F.lit(1), "sum", False)
+    ranked = two_phase_scan(keys, ["event_type"], [spec])
     cur = ranked.select("event_type", "k", "r")
     nxt = ranked.select(
         "event_type", F.col("k").alias("nk"), (F.col("r") - 1).alias("r")
@@ -766,8 +759,8 @@ _WM_LATE_US = 6 * 3600 * 1000000  # 6h watermark
     "so the jitter stands in for network reordering the same way the "
     "multimodal stub stands in for codecs). The exclusive running "
     "max of event-time over arrival order is the two-phase running "
-    "max (operators/ranking.py two_phase_running_max — per-bucket "
-    "maxima + driver-folded prefix, NO single-partition window); "
+    "max (operators/ranking.py two_phase_scan — per-bucket "
+    "maxima + windowed prefix, NO single-partition window); "
     "lateness = highwater - ts in exact microseconds (rule 11). "
     "Per-type output: events, late count vs the 6h watermark, "
     "max lateness seconds, late ppm — the batch twin of the "
@@ -802,7 +795,7 @@ _WM_LATE_US = 6 * 3600 * 1000000  # 6h watermark
     """,
 )
 def q_late_event_watermark_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import two_phase_running_max
+    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -814,14 +807,9 @@ def q_late_event_watermark_census(spark: SparkSession, sf_dir: str) -> DataFrame
             f" % {_WM_JITTER_MOD}"
         ).alias("arrival"),
     )
-    hw = two_phase_running_max(
-        ev,
-        order_by=["arrival", "event_id"],
-        coarse=F.expr("arrival DIV 1000000"),
-        value=F.col("us"),
-        out_name="pm",
-        exclusive=True,
-    )
+    coarse = F.expr("arrival DIV 1000000")
+    spec = ("pm", ["arrival", "event_id"], coarse, F.col("us"), "max", True)
+    hw = two_phase_scan(ev, [], [spec])
     lat = hw.select(
         "event_type",
         F.when(

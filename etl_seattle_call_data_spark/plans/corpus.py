@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dedup, dq, multimodal, sampling, text
-from etl_seattle_call_data_spark.operators.ranking import two_phase_cumsum_in_groups
+from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.operators.util import checkpoint, memo, spread
 from etl_seattle_call_data_spark.plans.queries import register
@@ -2034,7 +2034,7 @@ def q_skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch-effect remover (microarray lineage) that maps every "
     "source's r-th smallest value onto the cross-source mean at rank "
     "r, forcing identical marginal distributions. The within-source "
-    "rank comes from operators/ranking.py::two_phase_rank_in_groups — "
+    "rank comes from operators/ranking.py::two_phase_scan — "
     "coarse length buckets, per-group prefix offsets from a window "
     "over the BOUNDED bucket table, local rank per (source, bucket) — "
     "so no source ever funnels through one reducer (the hazard of a "
@@ -2069,13 +2069,9 @@ def q_quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
     )
-    ranked = ranking.two_phase_rank_in_groups(
-        docs,
-        group_cols=["source"],
-        order_by=["n_chars", "doc_id"],
-        coarse=F.expr("n_chars DIV 256"),
-        rank_name="rk",
-    )
+    coarse = F.expr("n_chars DIV 256")
+    spec = ("rk", ["n_chars", "doc_id"], coarse, F.lit(1), "sum", False)
+    ranked = ranking.two_phase_scan(docs, ["source"], [spec])
     ref = ranked.groupBy("rk").agg(
         F.expr("CAST(SUM(n_chars) * 1000000 DIV COUNT(*) AS BIGINT)").alias(
             "ref_fp"
@@ -2382,15 +2378,9 @@ def q_classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("lang") == "en", 0).otherwise(1))
         .cast("bigint")
         .alias("nn"),
-    ).withColumn("g", F.lit(1))
-    cum = ranking.two_phase_cumsum_in_groups(
-        s,
-        group_cols=["g"],
-        order_by=["score"],
-        coarse=F.expr("score DIV 256"),
-        weight=F.col("nn"),
-        cum_name="cum_nn",
-    ).withColumn("neg_below", F.col("cum_nn") - F.col("nn"))
+    )
+    spec = ("neg_below", ["score"], F.expr("score DIV 256"), F.col("nn"), "sum", True)
+    cum = ranking.two_phase_scan(s, [], [spec])
     agg = cum.agg(
         F.sum(F.col("np") * F.col("neg_below")).cast("bigint").alias("concordant"),
         F.sum(F.col("np") * F.col("nn")).cast("bigint").alias("tied"),
@@ -2466,15 +2456,9 @@ def q_exact_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("hv"),
     )
-    ranked = ranking.two_phase_rank_in_groups(
-        h,
-        group_cols=["source"],
-        order_by=["hv", "doc_id"],
-        coarse=F.expr("hv DIV 72057594037927936"),  # 2^56: 16 hash buckets
-        rank_name="rk",
-    )
-    n = h.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    j = ranked.join(F.broadcast(n), "source")
+    coarse = F.expr("hv DIV 72057594037927936")  # 2^56: 16 hash buckets
+    spec = ("rk", ["hv", "doc_id"], coarse, F.lit(1), "sum", False)
+    j = ranking.two_phase_scan(h, ["source"], [spec]).withColumnRenamed("rk_total", "n")
     is_test = F.col("rk") <= F.expr("n DIV 5")
     return j.groupBy("source").agg(
         F.max("n").cast("bigint").alias("n_docs"),
@@ -2523,15 +2507,13 @@ def q_score_calibration_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").alias("score"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
     )
-    ranked, n = ranking.two_phase_rank(
-        docs,
-        order_by=["score", "doc_id"],
-        coarse=F.expr("score DIV 256"),
-        rank_name="rnk",
-    )
+    spec = ("rnk", ["score", "doc_id"], F.expr("score DIV 256"), F.lit(1), "sum", False)
+    ranked = ranking.two_phase_scan(docs, [], [spec])
     return (
         ranked.groupBy(
-            ranking.equidepth_bucket(F.col("rnk"), n, 10).alias("decile")
+            ranking.equidepth_bucket(F.col("rnk"), F.col("rnk_total"), 10).alias(
+                "decile"
+            )
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -4196,7 +4178,7 @@ _HL_BLOCKS = (1024, 4096, 16384, 65536)
     "that predicts tokenizer OOV rates as a corpus scales, read off "
     "at power-of-4 checkpoints instead of fitting the log-log slope. "
     "Global token positions come from per-source doc offsets via "
-    "two_phase_cumsum_in_groups (operators/ranking.py — no source "
+    "two_phase_scan (operators/ranking.py — no source "
     "ever serializes through one window task) + posexplode ordinals; "
     "a type is 'within block B' iff its FIRST occurrence position "
     "<= B (min-aggregate per (source, token)). Only complete blocks "
@@ -4241,14 +4223,8 @@ def q_heaps_law_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", text.tokens("text").alias("tk")
     ).withColumn("n", F.size("tk").cast("bigint"))
-    cum = two_phase_cumsum_in_groups(
-        docs,
-        group_cols=["source"],
-        order_by=["doc_id"],
-        coarse=F.expr("doc_id DIV 256"),
-        weight=F.col("n"),
-        cum_name="__cum",
-    ).withColumn("off", (F.col("__cum") - F.col("n")).cast("bigint"))
+    spec = ("off", ["doc_id"], F.expr("doc_id DIV 256"), F.col("n"), "sum", True)
+    cum = two_phase_scan(docs, ["source"], [spec])
     tok = cum.select(
         "source",
         "off",

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, joins, profile
-from etl_seattle_call_data_spark.operators.ranking import two_phase_cumsum_in_groups
+from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import _DAY
@@ -2420,7 +2420,7 @@ _FC_TARGET = 65536  # chars per output file
     "in doc_id order and assigned to output files of ~64 KiB of text "
     "by exclusive running chars DIV target — the deterministic "
     "bin-packing every lakehouse OPTIMIZE job runs. The Spark plan "
-    "uses two_phase_cumsum_in_groups (operators/ranking.py): "
+    "uses two_phase_scan (operators/ranking.py): "
     "per-(source, coarse-bucket) partial sums roll into offsets over "
     "the bounded bucket table, so NO source ever serializes through "
     "one task — the property that makes the plan survive a 100 TB "
@@ -2450,18 +2450,11 @@ def q_file_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
     )
-    cum = two_phase_cumsum_in_groups(
-        docs,
-        group_cols=["source"],
-        order_by=["doc_id"],
-        coarse=F.expr("doc_id DIV 256"),  # order-aligned with doc_id
-        weight=F.col("n_chars"),
-        cum_name="__cum",
-    )
+    coarse = F.expr("doc_id DIV 256")  # order-aligned with doc_id
+    spec = ("__prior", ["doc_id"], coarse, F.col("n_chars"), "sum", True)
+    cum = two_phase_scan(docs, ["source"], [spec])
     return (
-        cum.withColumn(
-            "file_id", F.expr(f"CAST(__cum - n_chars AS BIGINT) DIV {_FC_TARGET}")
-        )
+        cum.withColumn("file_id", F.expr(f"__prior DIV {_FC_TARGET}"))
         .groupBy("source", "file_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -20,10 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, ranking, sampling
-from etl_seattle_call_data_spark.operators.ranking import (
-    two_phase_rank,
-    two_phase_rank_in_groups,
-)
+from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
@@ -459,7 +456,7 @@ def q_event_user_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and cross-engine identical. The Spark side computes the SAME "
     "NTILE assignment via operators/ranking.py's two-phase global "
     "rank — coarse value-buckets (width 1000 → ~600 buckets over the "
-    "price range, SF-independent), per-bucket row_number, broadcast "
+    "price range, SF-independent), per-bucket running count, windowed "
     "prefix offsets, rank→bucket by the ANSI NTILE formula — so no "
     "stage sorts more than one coarse bucket and the plan carries NO "
     "Exchange SinglePartition (asserted in test_plans.py), versus the "
@@ -481,15 +478,14 @@ def q_event_user_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_equidepth_histogram_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    ranked_df, n = ranking.two_phase_rank(
-        o,
-        order_by=["o_totalprice", "o_orderkey"],
-        coarse=F.floor(F.col("o_totalprice") / F.lit(1000.0)),
-        rank_name="__grank",
-    )
+    coarse = F.floor(F.col("o_totalprice") / F.lit(1000.0))
+    spec = ("__grank", ["o_totalprice", "o_orderkey"], coarse, F.lit(1), "sum", False)
+    ranked_df = two_phase_scan(o, [], [spec])
     ranked = ranked_df.select(
         "o_totalprice",
-        ranking.equidepth_bucket(F.col("__grank"), n, 10).alias("bucket"),
+        ranking.equidepth_bucket(F.col("__grank"), F.col("__grank_total"), 10).alias(
+            "bucket"
+        ),
     )
     return ranked.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n"),
@@ -509,7 +505,7 @@ def q_equidepth_histogram_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "inequality measure over per-customer order totals, computed from "
     "the EXACT global revenue rank: G = (2·Σ(rank·rev) − (n+1)·Σrev) / "
     "(n·Σrev). The rank comes from operators/ranking.py's two-phase "
-    "global rank (coarse revenue buckets + broadcast prefix offsets — "
+    "global rank (coarse revenue buckets + windowed prefix offsets — "
     "no single-partition sort), every Σ is an exact decimal aggregate, "
     "and the final expression is ONE double division of identical "
     "integers/decimals on both engines. Ties in revenue break on the "
@@ -542,20 +538,18 @@ def q_gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
-    ranked, n = ranking.two_phase_rank(
-        rev,
-        order_by=["rev", "o_custkey"],
-        coarse=F.floor(F.col("rev") / F.lit(10000)),
-        rank_name="rnk",
-    )
+    coarse = F.floor(F.col("rev") / F.lit(10000))
+    spec = ("rnk", ["rev", "o_custkey"], coarse, F.lit(1), "sum", False)
+    ranked = two_phase_scan(rev, [], [spec])
     s = ranked.agg(
+        F.count(F.lit(1)).alias("n"),
         F.sum("rev").alias("s0"),
         F.sum(F.col("rnk") * F.col("rev")).alias("s1"),
     )
-    num = F.lit(2) * F.col("s1") - F.lit(n + 1) * F.col("s0")
-    den = F.lit(n) * F.col("s0")
+    num = F.lit(2) * F.col("s1") - (F.col("n") + 1) * F.col("s0")
+    den = F.col("n") * F.col("s0")
     return s.select(
-        F.lit(n).cast("bigint").alias("n_customers"),
+        F.col("n").cast("bigint").alias("n_customers"),
         F.col("s0").cast("double").alias("total_revenue"),
         (num.cast("double") / den.cast("double")).alias("gini"),
     )
@@ -1000,7 +994,7 @@ def q_source_divergence_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "level at which half the shipped volume sits', the weighted "
     "quantile no built-in computes and a naive partitionBy(flag) "
     "cumsum window serializes per group (3 huge groups → 3 tasks). "
-    "operators/ranking.py::two_phase_cumsum_in_groups builds the exact "
+    "operators/ranking.py::two_phase_scan builds the exact "
     "running weight in price order from per-(flag, price-bucket) "
     "totals + bounded prefix-offset windows; the median is then the "
     "minimum price whose inclusive cumulative weight reaches half the "
@@ -1042,18 +1036,12 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
     )
-    cum = ranking.two_phase_cumsum_in_groups(
-        li,
-        group_cols=["flag"],
-        order_by=["price", "l_orderkey", "l_linenumber"],
-        coarse=F.expr("price DIV 1000"),
-        weight=F.col("w"),
-        cum_name="cumw",
-    )
-    tot = cum.groupBy("flag").agg(F.sum("w").cast("long").alias("totw"))
+    by = ["price", "l_orderkey", "l_linenumber"]
+    spec = ("cumw", by, F.expr("price DIV 1000"), F.col("w"), "sum", False)
+    cum = ranking.two_phase_scan(li, ["flag"], [spec])
+    cum = cum.withColumnRenamed("cumw_total", "totw")
     return (
-        cum.join(F.broadcast(tot), "flag")
-        .groupBy("flag")
+        cum.groupBy("flag")
         .agg(
             F.max("totw").cast("bigint").alias("total_weight"),
             F.min(
@@ -1117,14 +1105,11 @@ def q_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("rev_cents")
     )
-    ranked, n = ranking.two_phase_rank(
-        r,
-        order_by=["rev_cents", "o_custkey"],
-        coarse=F.expr("rev_cents DIV 1000000"),
-        rank_name="rnk",
-    )
+    coarse = F.expr("rev_cents DIV 1000000")
+    spec = ("rnk", ["rev_cents", "o_custkey"], coarse, F.lit(1), "sum", False)
+    ranked = ranking.two_phase_scan(r, [], [spec])
     g = ranked.groupBy(
-        ranking.equidepth_bucket(F.col("rnk"), n, 10).alias("decile")
+        ranking.equidepth_bucket(F.col("rnk"), F.col("rnk_total"), 10).alias("decile")
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         F.sum("rev_cents").cast("bigint").alias("rev_cents"),
@@ -1352,17 +1337,11 @@ def q_weighted_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
     )
-    cum = ranking.two_phase_cumsum_in_groups(
-        li,
-        group_cols=["flag"],
-        order_by=["price", "l_orderkey", "l_linenumber"],
-        coarse=F.expr("price DIV 1000"),
-        weight=F.col("w"),
-        cum_name="cumw",
-    )
-    tot = cum.groupBy("flag").agg(F.sum("w").cast("long").alias("totw"))
-    j = cum.join(F.broadcast(tot), "flag")
-    return j.groupBy("flag").agg(
+    by = ["price", "l_orderkey", "l_linenumber"]
+    spec = ("cumw", by, F.expr("price DIV 1000"), F.col("w"), "sum", False)
+    cum = ranking.two_phase_scan(li, ["flag"], [spec])
+    cum = cum.withColumnRenamed("cumw_total", "totw")
+    return cum.groupBy("flag").agg(
         F.max("totw").cast("bigint").alias("total_weight"),
         F.min(F.when(4 * F.col("cumw") >= F.col("totw"), F.col("price")))
         .cast("bigint")
@@ -1890,7 +1869,7 @@ def q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
     "half-integers, so everything carries x2: avgrank2(v) = "
     "2*cum_before(v) + n_v + 1 over the DISTINCT-value table, and "
     "U1x2 = sum(n1_v * avgrank2) - n1*(n1+1). The global prefix sum "
-    "over distinct values uses two_phase_cumsum_in_groups "
+    "over distinct values uses two_phase_scan "
     "(operators/ranking.py) with a price-band coarse bucket — no "
     "single-partition window over row-scale data. U1x2 + U2x2 = "
     "2*n1*n2 exactly; auc_ppm = U1*1e6/(n1*n2) needs < 2^63, fine "
@@ -1931,10 +1910,6 @@ def q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def q_mann_whitney_u_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import (
-        two_phase_cumsum_in_groups,
-    )
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     seg = (
@@ -1950,16 +1925,12 @@ def q_mann_whitney_u_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.sum("g1")).cast("bigint").alias("n2"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
-    ranked = two_phase_cumsum_in_groups(
-        vals,
-        group_cols=[],
-        order_by=["v"],
-        coarse=F.expr("CAST(floor(v) AS BIGINT) DIV 10000"),
-        weight=F.col("n"),
-        cum_name="cum_incl",
+    coarse = F.expr("CAST(floor(v) AS BIGINT) DIV 10000")
+    ranked = two_phase_scan(
+        vals, [], [("cum_before", ["v"], coarse, F.col("n"), "sum", True)]
     ).withColumn(
         "avgrank2",
-        (2 * (F.col("cum_incl") - F.col("n")) + F.col("n") + 1).cast("bigint"),
+        (2 * F.col("cum_before") + F.col("n") + 1).cast("bigint"),
     )
     return ranked.agg(
         F.sum("n1").cast("bigint").alias("n1_tot"),
@@ -2201,8 +2172,8 @@ def q_source_divergence_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Systematic (every-97th) sample of orders in (orderdate, orderkey) "
     "order — the stratified-in-time design survey methodology wants, "
     "exact at any scale because the global rank comes from "
-    "two_phase_rank (day-band coarse buckets, no single-partition "
-    "sort, bounded driver offsets). Report: kept count, kept vs total "
+    "two_phase_scan (day-band coarse buckets, no single-partition "
+    "sort, windowed bucket offsets). Report: kept count, kept vs total "
     "revenue (decimal sums, one double cast each) and the sampling "
     "fraction as one IEEE division. A deterministic complement to the "
     "hash (Bernoulli) and stratified samplers in operators/sampling.",
@@ -2227,14 +2198,13 @@ def q_source_divergence_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_systematic_sample_every_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    ranked, _n = two_phase_rank(
-        o.select("o_orderdate", "o_orderkey", "o_totalprice"),
-        order_by=["o_orderdate", "o_orderkey"],
-        coarse=F.expr(
-            "CAST(unix_micros(date_trunc('day', o_orderdate))"
-            " DIV 86400000000 AS BIGINT) DIV 30"
-        ),
-        rank_name="rk",
+    coarse = F.expr(
+        "CAST(unix_micros(date_trunc('day', o_orderdate))"
+        " DIV 86400000000 AS BIGINT) DIV 30"
+    )
+    spec = ("rk", ["o_orderdate", "o_orderkey"], coarse, F.lit(1), "sum", False)
+    ranked = two_phase_scan(
+        o.select("o_orderdate", "o_orderkey", "o_totalprice"), [], [spec]
     )
     kept = F.when(F.col("rk") % 97 == 1, 1)
     return ranked.agg(
@@ -2816,7 +2786,7 @@ def q_did_revenue_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "total, plus that prefix's exact share in ppm — the 80/20 readout "
     "behind key-account planning, computed on exact integer cents with "
     "the 5*cum >= 4*total crossing test (no float thresholds). The "
-    "running sum uses operators/ranking.two_phase_cumsum_in_groups: "
+    "running sum uses operators/ranking.two_phase_scan: "
     "per-(nation, revenue-bucket) partials roll into prefix offsets "
     "over the bounded bucket table, so no nation is sorted through a "
     "single task — the same plan shape at 25 nations x 10^9 customers. "
@@ -2856,8 +2826,6 @@ def q_did_revenue_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pareto_8020_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import two_phase_cumsum_in_groups
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
@@ -2868,14 +2836,9 @@ def q_pareto_8020_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("revcents"))
         .withColumn("negrev", -F.col("revcents"))
     )
-    cum = two_phase_cumsum_in_groups(
-        cust,
-        group_cols=["nation"],
-        order_by=["negrev", "custkey"],
-        coarse=F.expr("negrev DIV 10000000"),
-        weight=F.col("revcents"),
-        cum_name="cumcents",
-    )
+    coarse = F.expr("negrev DIV 10000000")
+    spec = ("cumcents", ["negrev", "custkey"], coarse, F.col("revcents"), "sum", False)
+    cum = two_phase_scan(cust, ["nation"], [spec])
     tot = cust.groupBy("nation").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         F.sum("revcents").alias("total_cents"),
@@ -3113,11 +3076,6 @@ def q_covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import (
-        equidepth_bucket,
-        two_phase_rank,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-16 00:00:00").cast("timestamp")
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -3138,11 +3096,14 @@ def q_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         (-F.col("score")).alias("negscore"),
     )
-    ranked, total = two_phase_rank(
-        u, order_by=["negscore", "user_id"], coarse=F.expr("negscore DIV 10000")
-    )
+    coarse = F.expr("negscore DIV 10000")
+    spec = ("global_rank", ["negscore", "user_id"], coarse, F.lit(1), "sum", False)
+    ranked = two_phase_scan(u, [], [spec])
     deciled = ranked.withColumn(
-        "decile", equidepth_bucket(F.col("global_rank"), total, 10)
+        "decile",
+        ranking.equidepth_bucket(
+            F.col("global_rank"), F.col("global_rank_total"), 10
+        ),
     )
     cells = deciled.groupBy("decile").agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("nt"),
@@ -3430,20 +3391,17 @@ def q_qq_table_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_median_ci_distribution_free(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import two_phase_rank_in_groups
-
     ev = load_table(spark, sf_dir, "events")
-    ranked = two_phase_rank_in_groups(
-        ev.select("event_type", "value", "event_id"),
-        group_cols=["event_type"],
-        order_by=["value", "event_id"],
-        coarse=F.expr("CAST(floor(value) AS BIGINT)"),
-        rank_name="rnk",
-    )
-    stats = ev.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    coarse = F.expr("CAST(floor(value) AS BIGINT)")
+    spec = ("rnk", ["value", "event_id"], coarse, F.lit(1), "sum", False)
+    ranked = two_phase_scan(
+        ev.select("event_type", "value", "event_id"), ["event_type"], [spec]
+    ).withColumnRenamed("rnk_total", "n")
     nd = F.col("n").cast("double")
-    bounds = stats.select(
+    bounds = ranked.select(
         "event_type",
+        "value",
+        "rnk",
         "n",
         F.greatest(
             F.floor((nd - 1.96 * F.sqrt(nd)) / 2.0).cast("bigint"), F.lit(1).cast("bigint")
@@ -3453,7 +3411,7 @@ def q_median_ci_distribution_free(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("hi_rank"),
         F.expr("(n + 1) DIV 2").alias("med_rank"),
     )
-    joined = ranked.join(F.broadcast(bounds), "event_type").filter(
+    joined = bounds.filter(
         (F.col("rnk") == F.col("lo_rank"))
         | (F.col("rnk") == F.col("med_rank"))
         | (F.col("rnk") == F.col("hi_rank"))
@@ -3545,10 +3503,6 @@ def q_median_ci_distribution_free(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def q_spearman_corr_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import (
-        two_phase_cumsum_in_groups,
-    )
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.col("l_quantity").cast("bigint").alias("qty"),
@@ -3566,13 +3520,13 @@ def q_spearman_corr_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def midrank2(value_col: str, coarse: Column, out: str) -> DataFrame:
         vg = li.groupBy("flag", value_col).agg(F.count(F.lit(1)).alias("cnt"))
-        cum = two_phase_cumsum_in_groups(
-            vg, ["flag"], [value_col], coarse=coarse, weight=F.col("cnt")
+        cum = two_phase_scan(
+            vg, ["flag"], [("before", [value_col], coarse, F.col("cnt"), "sum", True)]
         )
         return cum.select(
             "flag",
             value_col,
-            (2 * (F.col("cumw") - F.col("cnt")) + F.col("cnt") + 1).alias(out),
+            (2 * F.col("before") + F.col("cnt") + 1).alias(out),
         )
 
     rq = midrank2("qty", F.col("qty"), "rx2")
@@ -4948,12 +4902,9 @@ def q_huber_one_step_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.expr("(COUNT(*) + 1) DIV 2").cast("bigint").alias("med_rank"),
     )
-    r1 = two_phase_rank_in_groups(
-        e,
-        group_cols=["event_type"],
-        order_by=["cents", "event_id"],
-        coarse=F.expr("cents DIV 1000"),
-        rank_name="rnk",
+    by, coarse = ["cents", "event_id"], F.expr("cents DIV 1000")
+    r1 = two_phase_scan(
+        e, ["event_type"], [("rnk", by, coarse, F.lit(1), "sum", False)]
     )
     med = (
         r1.join(F.broadcast(st), "event_type")
@@ -4964,12 +4915,11 @@ def q_huber_one_step_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = e.join(F.broadcast(med), "event_type").withColumn(
         "adev", F.abs(F.col("cents") - F.col("med_cents"))
     )
-    r2 = two_phase_rank_in_groups(
+    by, coarse = ["adev", "event_id"], F.expr("adev DIV 1000")
+    r2 = two_phase_scan(
         d.select("event_type", "event_id", "adev"),
-        group_cols=["event_type"],
-        order_by=["adev", "event_id"],
-        coarse=F.expr("adev DIV 1000"),
-        rank_name="rnk",
+        ["event_type"],
+        [("rnk", by, coarse, F.lit(1), "sum", False)],
     )
     mad = (
         r2.join(F.broadcast(st), "event_type")

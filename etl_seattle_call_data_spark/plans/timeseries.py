@@ -565,7 +565,7 @@ def q_revenue_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the round-4 plan) is O(density²·buckets) — the registry's worst "
     "measured grower at 1.36x/R because replication densifies a fixed "
     "calendar. This plan is O(n): per counted type X, an inclusive "
-    "running count over the event timeline (two_phase_cumsum_in_groups "
+    "running count over the event timeline (two_phase_scan "
     "— no type ever serializes through one task) read at signed probe "
     "markers t+W (+1) and t−W−1 (−1) placed by every event of a later "
     "type Y; Σ sign·cum grouped by (X, Y) telescopes to the exact pair "
@@ -647,15 +647,9 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CLAUDE.md skipgram class — so letting the totals branch and the
     # window probe each re-derive it pipelines two linear passes
     # instead of writing the widest frame in the plan to disk.
-    cum = ranking.two_phase_cumsum_in_groups(
-        tl,
-        group_cols=["type_a"],
-        order_by=["us_key", "flag"],
-        coarse=F.expr("us_key DIV 3600000000"),
-        weight=F.col("w"),
-        cum_name="__cum",
-        materialize=False,
-    )
+    coarse = F.expr("us_key DIV 3600000000")
+    spec = ("__cum", ["us_key", "flag"], coarse, F.col("w"), "sum", False)
+    cum = ranking.two_phase_scan(tl, ["type_a"], [spec], materialize=False)
     return (
         cum.filter(F.col("flag") == 1)
         .groupBy("type_a", "type_b")
@@ -2217,8 +2211,7 @@ def _py_tdiv(x: int, d: int) -> int:
     "WITH RECURSIVE string; the Spark side does the heavy lifting "
     "(the monthly rollup — the only fact-scale pass) distributed, "
     "then collects the ~80-row monthly series (calendar-bounded at "
-    "ANY SF, same bounded-driver-metadata convention as ranking.py's "
-    "bucket offsets) and folds the inherently-sequential recursion in "
+    "ANY SF) and folds the inherently-sequential recursion in "
     "exact Python bigints: identical fixed-point arithmetic, one IEEE "
     "division at the end, without paying ~80 sequential Spark jobs of "
     "fixed scheduler cost for a 1-row-frontier recursion.",

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq
-from etl_seattle_call_data_spark.operators.ranking import two_phase_cumsum_in_groups
+from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import (
@@ -2629,7 +2629,7 @@ _AX_Y = 1_000_000  # CV < 1.0
     "ABC-XYZ inventory segmentation matrix: parts classed A/B/C by "
     "cumulative revenue share (70%/90% ppm thresholds on the exact "
     "integer prefix sum in (revenue DESC, partkey) order — computed "
-    "by two_phase_cumsum_in_groups with an empty group list, so the "
+    "by two_phase_scan with an empty group list, so the "
     "global ranking costs bucketed windows plus a bounded offset "
     "table, never a fact-scale single-partition sort) and X/Y/Z by "
     "weekly-demand variability (sqrt-free CV^2 in ppm = "
@@ -2708,30 +2708,19 @@ def q_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # global (rev DESC, pk) prefix sum without a single-partition sort:
     # order by the negated key so the coarse bucket stays order-aligned
-    cum = two_phase_cumsum_in_groups(
-        p.withColumn("neg_rev", -F.col("rev")),
-        group_cols=[],
-        order_by=["neg_rev", "pk"],
-        coarse=F.expr("neg_rev DIV 1000000"),
-        weight=F.col("rev"),
-        cum_name="crev",
-    )
-    # total revenue = the final value of the inclusive running sum —
-    # reading it off ``cum`` (whose bucketed input the two-phase helper
-    # checkpoints) costs one window pass over materialized blocks; a
-    # separate p.agg() branch would re-run the fact-scale lineitem
-    # rollup a second time. NOTE: max(crev) equals the FINAL prefix sum
-    # only because the summed weight (rev, a sum of non-negative
-    # rounded prices) is non-negative, so the running sum is monotone.
-    # With signed weights take the row at the max rank / last coarse
-    # bucket instead — do not copy this max() shortcut to signed data.
-    tot = cum.agg(F.max("crev").cast("bigint").alias("rev_t"))
+    # crev_total (total revenue) comes off the scan's bucket table — no
+    # second pass over the fact-scale lineitem rollup
+    coarse = F.expr("neg_rev DIV 1000000")
+    spec = ("crev", ["neg_rev", "pk"], coarse, F.col("rev"), "sum", False)
+    cum = two_phase_scan(
+        p.withColumn("neg_rev", -F.col("rev")), [], [spec]
+    ).withColumnRenamed("crev_total", "rev_t")
     cv2 = (
         "(CAST(n_weeks AS DECIMAL(38,0)) * sqq"
         " - CAST(sq AS DECIMAL(38,0)) * sq) * 1000000"
         " DIV (CAST(sq AS DECIMAL(38,0)) * sq)"
     )
-    cls = cum.crossJoin(F.broadcast(tot)).select(
+    cls = cum.select(
         F.expr(
             f"CASE WHEN CAST(crev AS DECIMAL(38,0)) * 1000000 DIV rev_t"
             f" <= {_AX_A} THEN 'A'"

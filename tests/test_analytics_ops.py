@@ -583,21 +583,28 @@ def test_dq_expectations_report_and_gate(spark):
     assert dq.assert_expectations(clean, rules).count() == len(rules)
 
 
+def _global_rank(df, coarse):
+    from etl_seattle_call_data_spark.operators import ranking
+
+    return ranking.two_phase_scan(
+        df, [], [("global_rank", ["value", "id"], coarse, F.lit(1), "sum", False)]
+    )
+
+
 def test_two_phase_rank_matches_global_ntile(spark):
-    """two_phase_rank + equidepth_bucket must reproduce row_number and
-    NTILE over a global sort exactly — including duplicate order values
-    (tie-broken by id), a row count not divisible by k (ragged NTILE
-    buckets), and the n<k degenerate case."""
+    """A two_phase_scan rank + equidepth_bucket must reproduce
+    row_number and NTILE over a global sort exactly — including
+    duplicate order values (tie-broken by id), a row count not divisible
+    by k (ragged NTILE buckets), and the n<k degenerate case."""
     from pyspark.sql.window import Window as W
 
     from etl_seattle_call_data_spark.operators import ranking
 
     rows = [(i, float((i * 37) % 50)) for i in range(137)]
     df = spark.createDataFrame(rows, "id long, value double")
-    ranked, n = ranking.two_phase_rank(
-        df, order_by=["value", "id"], coarse=F.floor(F.col("value") / 7)
-    )
-    assert n == 137
+    ranked = _global_rank(df, F.floor(F.col("value") / 7))
+    n = F.col("global_rank_total")
+    assert {r[0] for r in ranked.select("global_rank_total").collect()} == {137}
     w = W.orderBy("value", "id")
     expect = df.select(
         "id",
@@ -617,11 +624,11 @@ def test_two_phase_rank_matches_global_ntile(spark):
 
     # n < k: every row its own bucket
     tiny = spark.createDataFrame([(i, float(i)) for i in range(4)], "id long, value double")
-    tr, tn = ranking.two_phase_rank(tiny, order_by=["value", "id"], coarse=F.lit(0))
+    tr = _global_rank(tiny, F.lit(0))
     got_tiny = {
         r.id: r.b
         for r in tr.select(
-            "id", ranking.equidepth_bucket(F.col("global_rank"), tn, 10).alias("b")
+            "id", ranking.equidepth_bucket(F.col("global_rank"), n, 10).alias("b")
         ).collect()
     }
     assert got_tiny == {0: 1, 1: 2, 2: 3, 3: 4}
@@ -681,18 +688,19 @@ def test_two_phase_rank_null_bucket_raises(spark):
     df = spark.createDataFrame(
         [(1, 10), (2, None), (3, 30)], "id int, v int"
     )
+    def rank(frame, groups, coarse):
+        return ranking.two_phase_scan(
+            frame, groups, [("group_rank", ["v"], coarse, F.lit(1), "sum", False)]
+        )
+
     with _pytest.raises((PySparkRuntimeError, SparkRuntimeException, Exception), match="non-null precondition"):
-        ranking.two_phase_rank(df, ["v"], F.col("v") / 10)
-    ranked = ranking.two_phase_rank_in_groups(
-        df, ["id"], ["v"], F.coalesce(F.col("v") / 10, F.lit(0))
-    )
+        rank(df, [], F.col("v") / 10).collect()
+    ranked = rank(df, ["id"], F.coalesce(F.col("v") / 10, F.lit(0)))
     with _pytest.raises(Exception, match="non-null precondition"):
         grouped_null = spark.createDataFrame(
             [(None, 10), (1, 20)], "g int, v int"
         )
-        ranking.two_phase_rank_in_groups(
-            grouped_null, ["g"], ["v"], F.col("v") / 10
-        ).collect()
+        rank(grouped_null, ["g"], F.col("v") / 10).collect()
     # conforming data still ranks exactly
     ok = {
         (r.id, r.group_rank)

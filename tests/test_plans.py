@@ -429,6 +429,30 @@ def test_dq_audit_constructs_lazily(spark):
         sc.setJobGroup("", "")
 
 
+def test_two_phase_scan_builds_fire_no_jobs(spark):
+    """Building a ranked query fires ZERO Spark jobs: two_phase_scan
+    folds its bucket offsets with a window inside the plan, never with a
+    driver collect, so every job belongs to the caller's action. Each
+    query below has only a table scan upstream of its scan."""
+    sc = spark.sparkContext
+    names = (
+        "equidepth_histogram_totals",
+        "systematic_sample_every_k",
+        "score_calibration_table",
+        "late_event_watermark_census",
+    )
+    for t in ("orders", "documents", "events"):
+        load_table(spark, SF, t)  # warm the table plans (footer reads)
+    try:
+        sc.setJobGroup("scan_build_probe", "probe")
+        for name in names:
+            REGISTRY[name].spark(spark, SF)
+        jobs = sc.statusTracker().getJobIdsForGroup("scan_build_probe")
+        assert list(jobs) == [], jobs
+    finally:
+        sc.setJobGroup("", "")
+
+
 def test_copurchase_pairs_bounded_plan(spark):
     """Market-basket pairs: the top-20 consumer is TakeOrdered over the
     session-shared memoized pair table (no nested-loop anywhere), and

@@ -137,7 +137,7 @@ def test_sweepline_peak_matches_bruteforce(spark, intervals):
 
 
 # ---------------------------------------------------------------------------
-# two_phase_rank: distributed global rank must equal the Python model
+# two_phase_scan rank: distributed global rank must equal the Python model
 # on arbitrary value multisets (heavy ties, skewed coarse buckets,
 # negative values, all-equal inputs)
 
@@ -154,11 +154,13 @@ def test_two_phase_rank_matches_sorted_model(spark, values, width):
 
     rows = [(i, v) for i, v in enumerate(values)]
     df = spark.createDataFrame(rows, "id long, v long")
-    ranked, n = ranking.two_phase_rank(
-        df, order_by=["v", "id"], coarse=F.floor(F.col("v") / width)
+    coarse = F.floor(F.col("v") / width)
+    ranked = ranking.two_phase_scan(
+        df, [], [("global_rank", ["v", "id"], coarse, F.lit(1), "sum", False)]
     )
-    assert n == len(values)
-    got = {r.id: r.global_rank for r in ranked.collect()}
+    rows_out = ranked.collect()
+    assert {r.global_rank_total for r in rows_out} == {len(values)}
+    got = {r.id: r.global_rank for r in rows_out}
     expect = {
         id_: rnk + 1
         for rnk, (v, id_) in enumerate(sorted((v, i) for i, v in rows))

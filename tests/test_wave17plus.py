@@ -145,21 +145,14 @@ def test_two_phase_running_max_matches_window(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from etl_seattle_call_data_spark.operators.ranking import (
-        two_phase_running_max,
-    )
+    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 
     df = spark.range(0, 500).select(
         F.col("id"),
         ((F.col("id") * 37 + 11) % 251).alias("v"),
     )
-    got = two_phase_running_max(
-        df,
-        order_by=["id"],
-        coarse=F.expr("id DIV 64"),
-        value=F.col("v"),
-        out_name="rm",
-        exclusive=True,
+    got = two_phase_scan(
+        df, [], [("rm", ["id"], F.expr("id DIV 64"), F.col("v"), "max", True)]
     )
     want = df.withColumn(
         "rm_ref",

@@ -30,6 +30,9 @@ fi
 echo "=== 2/4 pytest ==="
 python -m pytest tests/ -q 2>&1 | tail -2 || fail=1
 
+echo "=== 2b/4 perfbench tests (the benchmark imports engine internals) ==="
+python -m pytest perfbench/tests -q 2>&1 | tail -2 || fail=1
+
 echo "=== 3/4 bench contract ==="
 lines=$(python bench.py 2>/dev/null | tee /tmp/bench_out.txt | wc -l)
 if [ "$lines" != "1" ]; then echo "FAIL: bench stdout is $lines lines, want 1"; fail=1; fi
