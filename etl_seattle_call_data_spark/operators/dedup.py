@@ -106,15 +106,35 @@ def jaccard_pairs(
     else:
         sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
     if max_df is not None:
-        sh = memo("jaccard_shingles", lambda: cap_document_frequency(sh, max_df))
+        sh = _capped_shingles(sh, max_df)
     inter = _shared_shingle_pairs(sh, id_col)
     return _jaccard_from_intersections(sh, inter, id_col, threshold)
 
 
+def _capped_shingles(sh: DataFrame, max_df: int) -> DataFrame:
+    """The df-capped shingle table ``jaccard_pairs`` and
+    ``containment_pairs`` share, memoized hash-partitioned on
+    ``shingle``: the shared-shingle self-join then reads both arms from
+    the cache with no exchange. Against shuffling each arm from an
+    unpartitioned cache, one traced benchmark session measured shuffle
+    write 29.2 → 24.1 MB and executor CPU 14.3 → 11.7 s."""
+    return memo("jaccard_shingles", lambda: cap_document_frequency(sh, max_df).repartition("shingle"))
+
+
 def _shared_shingle_pairs(sh: DataFrame, id_col: str) -> DataFrame:
-    """(id_a, id_b, n_inter) for every pair sharing ≥1 shingle."""
+    """(id_a, id_b, n_inter) for every pair sharing ≥1 shingle.
+
+    A shuffled hash join by hint, never a broadcast. The shingle table
+    scales with the corpus; at sf0.1 one arm (266k rows) just fits the
+    10 MB threshold, and the 42 MB hash relation AQE then builds stays
+    on the driver heap for as long as a memo of the pair table
+    (``jaccard_pairs``, ``jaccard_exact_t05``, ``cc_pairs``) holds its
+    lineage: 58–67 MB of live heap per key by ``tools/memo_audit.py``.
+    Over the capped table (``_capped_shingles``) both arms read the
+    shingle-partitioned cache and the join shuffles nothing; over a
+    caller's table each arm is shuffled on ``shingle``."""
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    b = sh.select(F.col(id_col).alias("id_b"), "shingle").hint("shuffle_hash")
     return (
         a.join(b, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -181,8 +201,12 @@ def minhash_band_candidates(
     banded = sig.select(F.col(id_col), F.explode(bands).alias("b")).select(
         id_col, F.col("b.band_idx").alias("band_idx"), F.col("b.band_val").alias("band_val")
     )
+    # Shuffled by hint: the band table (docs × bands rows) scales with
+    # the corpus. Broadcast at sf0.1 (20k rows, a 35 MB relation), it
+    # stayed on the driver heap while the ``lsh_candidates`` memo was
+    # held: 38 MB of live heap by tools/memo_audit.py.
     a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_val")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_val")
+    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_val").hint("shuffle_hash")
     return (
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -270,6 +294,9 @@ def minhash_lsh_pairs(
         .union(candidates.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
+    # Heap: this key holds 4 MB of live driver heap (tools/memo_audit.py,
+    # sf0.1). Its one broadcast is the candidate-id set (853 rows, 1 MB),
+    # bounded by the candidate pairs, not by the corpus.
     sh_cand = memo("lsh_cand_shingles", lambda: sh.join(cand_ids, id_col, "left_semi"))
     sh_a = sh_cand.select(F.col(id_col).alias("id_a"), "shingle")
     sh_b = sh_cand.select(F.col(id_col).alias("id_b"), "shingle")
@@ -350,6 +377,16 @@ def connected_components(
     # unique with id_a < id_b, so the two directed copies cannot collide
     # (and min-label propagation is idempotent under duplicate edges
     # anyway).
+    # Heap: over corpus_clean_pipeline's pairs this key holds 15 MB of
+    # live driver heap for 3.9 KB of cached rows (tools/memo_audit.py,
+    # sf0.1, one registry pass). The plan keeps four 1.1 MB per-document
+    # broadcasts (4,451 rows): the two set-size tables of
+    # ``_jaccard_from_intersections``, and the surviving-id semi-joins
+    # inside the capped shingle memo it was built on, which a later
+    # query evicts while its plan lives on here. They stay broadcast:
+    # one row per document is 1/60 of the shingle table, and hinting
+    # the size joins to shuffle measured dedup_ngram_jaccard at 3.42 s
+    # against 2.70 s (best of 4 on a loaded host).
     pairs_p = memo("cc_pairs", lambda: pairs.select(F.col(id_a), F.col(id_b)))
     pairs_p.count()
     directed = pairs_p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
@@ -685,7 +722,7 @@ def containment_pairs(
     candidate contributes at most two rows."""
     sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
     if max_df is not None:
-        sh = memo("jaccard_shingles", lambda: cap_document_frequency(sh, max_df))
+        sh = _capped_shingles(sh, max_df)
     inter = _shared_shingle_pairs(sh, id_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))

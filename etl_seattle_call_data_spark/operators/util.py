@@ -78,6 +78,18 @@ def memo(key: str, build: Callable[[], DataFrame], token: object = None) -> Data
     copy per invocation. Reuse rests on source files being immutable
     within a session; the maintenance rewrites call ``clear_caches()``.
 
+    What a held frame costs: not just its cached rows. The cache entry
+    keeps the frame's whole physical plan, its lineage, until the key is
+    evicted, and with it every broadcast hash relation that plan built,
+    on the driver heap. The storage counters (block manager sizes,
+    ``memo.storage_bytes``) see only the cached rows, never this pin:
+    at sf0.1 a 256-row Jaccard pair table held 58 MB of live heap, most
+    of it a broadcast of the 266k-row shingle table. Inside a memoized
+    subtree, let a join broadcast only a side whose size is bounded by
+    construction; hint a shuffle join where a side scales with the data
+    (``tools/memo_audit.py`` lists each held key's broadcasts and the
+    heap it frees).
+
     Key hygiene: the registry is process-global. Two callers alternating
     one key on different inputs evict each other (correct, just cold);
     prefix keys with the operator and input identity so hit rates stay

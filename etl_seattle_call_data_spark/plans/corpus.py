@@ -189,8 +189,6 @@ def _memo_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle-join plan is built once per corpus (the inner shingle
     tables are already memoized; this skips rebuilding the pair plan
     and its sameSemantics canonicalization on every repeat caller)."""
-    from etl_seattle_call_data_spark.operators.util import memo
-
     return memo(
         "jaccard_pairs",
         lambda: dedup.jaccard_pairs(
@@ -208,8 +206,6 @@ def _memo_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-propagation loop runs eagerly (per-round counts), so sharing
     the finished table saves the entire iteration for the second
     caller."""
-    from etl_seattle_call_data_spark.operators.util import memo
-
     return memo(
         "cc_components",
         lambda: dedup.connected_components(_memo_jaccard_pairs(spark, sf_dir)),
@@ -364,8 +360,6 @@ def _memo_simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature table shared by doc_simhash and dedup_simhash_pairs —
     token-memoized so the 60-aggregate plan is BUILT once per (corpus)
     too, not just computed once (plan construction alone costs ~2s)."""
-    from etl_seattle_call_data_spark.operators.util import memo
-
     return memo(
         "simhash_sig",
         lambda: dedup.simhash(load_table(spark, sf_dir, "documents")),
@@ -906,8 +900,6 @@ def q_corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import memo
-
     docs = load_table(spark, sf_dir, "documents")
     survivors0 = docs.filter(text.token_count("text") >= 20)
     keep = dedup.exact_dedup_groups(survivors0).select(
@@ -1169,7 +1161,6 @@ _CMS_HASH = "('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || term), 1, 15)):
 )
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators import sketch
-    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     inst = docs.select(F.explode(text.tokens(F.col("text"))).alias("term"))
@@ -1280,8 +1271,6 @@ def _lsh_recall_oracle(num_hashes: int = 8, rows_per_band: int = 2) -> str:
     _lsh_recall_oracle(),
 )
 def q_dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import memo
-
     docs = load_table(spark, sf_dir, "documents")
     sh = memo("doc_shingles", lambda: dedup.shingle_sets(docs))
     cand = memo("lsh_candidates", lambda: dedup.minhash_band_candidates(sh))
@@ -2602,7 +2591,6 @@ _SSR_MIN_RUN = 16  # report pairs sharing a run of >= this many tokens
 )
 def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators import text as text_ops
-    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -3864,7 +3852,6 @@ _EDIT_MAX_DIST = 60
 def q_dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_seattle_call_data_spark.operators.dedup import shingle_sets
     from etl_seattle_call_data_spark.operators.text import canonical_text
-    from etl_seattle_call_data_spark.operators.util import memo
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(

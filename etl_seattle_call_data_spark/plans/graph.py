@@ -405,8 +405,6 @@ def q_pagerank_copurchase_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import dq
-    from etl_seattle_call_data_spark.operators.util import memo
     from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
 
     prs = memo_copurchase_pairs(spark, sf_dir).select(
@@ -425,7 +423,13 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
     # two consumers (the adjacency build + the edge probe) — memoize the
-    # oriented edge list or the degree join runs twice
+    # oriented edge list or the degree join runs twice. Heap: the key
+    # holds 24 MB of live driver heap (tools/memo_audit.py, sf0.1), about
+    # 17 MB of it the cached edge list (8.6 MB by the block manager), the
+    # rest the two broadcast degree tables (one row per part: 20k rows,
+    # 1.2 MB each). They stay broadcast: hinting both degree joins to
+    # shuffle moves the edge table twice, and measured 7.0 s against
+    # 5.8 s for the query, best of 3.
     oriented = memo(
         "triangle:oriented",
         lambda: ed.select(
@@ -881,7 +885,6 @@ def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.util import memo
     from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
 
     edges = memo_copurchase_pairs(spark, sf_dir).select(
@@ -895,7 +898,10 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one fact-scale pass: roll the labeled edge stream up to brand-pair
     # counts (bounded by |brands|² ≈ 625 rows), persisted because m /
     # intra / degree below are four plan references — without the swap
-    # each would re-scan the labeled edges
+    # each would re-scan the labeled edges. Heap: 4 MB of live driver
+    # heap (tools/memo_audit.py, sf0.1); its one broadcast is the part
+    # brand lookup (20k rows, 1.2 MB). The edge table it reads is
+    # basket:pairs' cache, charged to that key.
     bp = memo(
         "modularity_brand_pairs",
         lambda: lab.groupBy("ba", "bb").agg(F.count(F.lit(1)).cast("bigint").alias("n")),
@@ -1082,7 +1088,11 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge cache (plans/shared.py): build once per corpus per session.
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
-        o = load_table(spark, sf_dir, "orders")
+        # Shuffled by hint: orders scales with SF. At sf0.1 its 150k rows
+        # fit the broadcast threshold, and this memo then pinned the hash
+        # relation: tools/memo_audit.py measured the key at 22.9 MB of
+        # live heap, 9.4 MB shuffled, with the query no slower.
+        o = load_table(spark, sf_dir, "orders").hint("shuffle_hash")
         return (
             li.join(o, li.l_orderkey == o.o_orderkey)
             .select(

@@ -31,11 +31,16 @@ from etl_seattle_call_data_spark.sources.registry import load_table
 
 
 def memo_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (l_orderkey, l_partkey) — the market-basket item table."""
+    """Distinct (l_orderkey, l_partkey) — the market-basket item table —
+    HASH-PARTITIONED ON ``l_orderkey`` under the persist. The distinct
+    shuffles on that one key instead of on both (the same rows), and
+    every basket self-join on ``l_orderkey`` then reads both arms from
+    the cache with no exchange."""
     return memo(
         "basket:items",
         lambda: load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
+        .repartition("l_orderkey")
         .distinct(),
         token=("basket:items", sf_dir),
     )
@@ -46,8 +51,15 @@ def memo_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the bounded basket self-join (Σ basket², ~7-line baskets)."""
 
     def build() -> DataFrame:
+        # Shuffled hash join by hint, on the cache's l_orderkey
+        # partitioning: no exchange. Left to AQE, the 600k-row item table
+        # of sf0.1 fits the broadcast threshold, and this memo then pins
+        # its 35 MB hash relation on the driver heap for the session
+        # (tools/memo_audit.py: the key holds 67 MB of live heap
+        # broadcast, 17.5 MB shuffled; that is the cached pair table
+        # itself, 8.6 MB by the block manager).
         items = memo_basket_items(spark, sf_dir)
-        a, b = items.alias("a"), items.alias("b")
+        a, b = items.alias("a"), items.alias("b").hint("shuffle_hash")
         return (
             a.join(
                 b,
@@ -79,6 +91,11 @@ def memo_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled ZERO times per round instead of once — the saving
     multiplies by rounds x queries within a bench session. Derive
     per-query weights by projection; never re-union the pair table.
+
+    Heap: ``tools/memo_audit.py`` (sf0.1, one registry pass) measures
+    this key at 34 MB of live driver heap with no broadcast in its plan.
+    That is the cached edge list itself (16.8 MB by the block manager),
+    the reuse this memo exists for.
     """
 
     def build() -> DataFrame:

@@ -4,6 +4,10 @@ releases the key's previous holder."""
 
 from __future__ import annotations
 
+import importlib.util
+import json
+import pathlib
+
 from pyspark.sql import functions as F
 
 from etl_seattle_call_data_spark.operators import util
@@ -96,3 +100,54 @@ def test_ivf_query_sees_rewritten_centroids_after_clear_caches(spark, tmp_path):
     emb = load_table(spark, sf, "embeddings")
     fresh = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, n_cells=8)
     assert sorted(q(spark, sf).collect()) == sorted(fresh.collect())
+
+
+def _final_plan(df) -> str:
+    """The adaptive plan ``df`` ran with, after an action."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def test_shingle_self_join_never_broadcasts(spark):
+    """The shingle table scales with the corpus. A broadcast of one arm
+    of its self-join stays on the driver heap for as long as a memo of
+    the pair table is held, so the join must shuffle even where AQE
+    would broadcast the arm. (The df cap's anti-join against the hot
+    shingles may broadcast: that set is at most 1/max_df of the table.)"""
+    import re
+
+    from etl_seattle_call_data_spark.operators import dedup
+    from etl_seattle_call_data_spark.sources.registry import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    frames = {
+        "capped": dedup.jaccard_pairs(docs, threshold=0.5, max_df=100),
+        "shingles=": dedup.jaccard_pairs(docs, threshold=0.5, shingles=dedup.shingle_sets(docs)),
+        "containment": dedup.containment_pairs(docs, threshold=0.8, max_df=100),
+    }
+    for name, df in frames.items():
+        plan = _final_plan(df)
+        assert not re.search(r"BroadcastHashJoin \[shingle#\d+\], \[shingle#\d+\], Inner", plan), name
+        assert "ShuffledHashJoin [shingle#" in plan, name
+
+
+def test_memo_audit_reports_every_held_key(spark):
+    """tools/memo_audit.py on a two-query subset: the report has its
+    fields, every key still held is measured and dropped, and the
+    registry is empty afterwards."""
+    tool = pathlib.Path(__file__).parent.parent / "tools" / "memo_audit.py"
+    spec = importlib.util.spec_from_file_location("memo_audit", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    names = ["dedup_ngram_jaccard", "dedup_containment_pairs"]
+    out = json.loads(json.dumps(mod.audit(spark, SF_SMOKE, names)))
+    assert set(out) == {"sf_dir", "queries", "failed", "seconds", "heap_held_mb",
+                        "heap_dropped_mb", "pinned_mb", "keys"}
+    assert out["queries"] == 2 and out["failed"] == {}
+    assert {"doc_shingles", "jaccard_shingles", "jaccard_pairs"} <= {k["key"] for k in out["keys"]}
+    for rec in out["keys"]:
+        assert set(rec) == {"key", "broadcasts", "storage_bytes", "freed_mb"}
+        for b in rec["broadcasts"]:
+            assert set(b) == {"output", "rows", "bytes"}
+    assert util._memos == {}
