@@ -6,13 +6,14 @@ Scale design
 * Exact dedup: hash-groupBy on a canonical fingerprint — one shuffle on
   the fingerprint key; AQE handles skew (e.g. empty documents).
 * Jaccard / MinHash / SimHash candidate generation NEVER cross-joins the
-  corpus: candidates come from equi-joins on shared shingles, LSH band
-  buckets, or SimHash bands — all shuffle-on-key joins that scale
-  linearly with (near-)duplicate density, not quadratically with corpus
-  size.
-* SimHash banding is exact by pigeonhole: with 60 bits in 4 disjoint
-  15-bit bands, any pair at Hamming distance ≤ 3 matches at least one
-  band — no recall loss for the supported threshold.
+  corpus: candidates come from one self-join, ``pair_join``, on shared
+  shingles, LSH band buckets, or SimHash sub-block combinations — a
+  shuffle-on-key join that scales linearly with (near-)duplicate
+  density, not quadratically with corpus size. Verification (shared
+  count, Jaccard, Hamming, edit distance) runs on its pairs only.
+* SimHash blocking is exact by pigeonhole: any pair at Hamming distance
+  ≤ 3 agrees on at least one sub-block combination — no recall loss
+  for the supported threshold.
 * All hashing is md5-hex based (not xxhash) so results are reproducible
   across engines — required by the DuckDB oracle gate.
 """
@@ -121,37 +122,64 @@ def _capped_shingles(sh: DataFrame, max_df: int) -> DataFrame:
     return memo("jaccard_shingles", lambda: cap_document_frequency(sh, max_df).repartition("shingle"))
 
 
-def _shared_shingle_pairs(sh: DataFrame, id_col: str) -> DataFrame:
-    """(id_a, id_b, n_inter) for every pair sharing ≥1 shingle.
+def pair_join(keyed: DataFrame, id_col: str, keys, carry=()) -> DataFrame:
+    """Every pair of rows of ``keyed`` that share ``keys``:
+    ``(id_a, <c>_a…, keys…, id_b, <c>_b…)`` for each ``c`` in ``carry``,
+    keeping only ``id_a < id_b``. The one candidate-generation step of
+    the dedup/similarity family's filter-and-verify shape: callers
+    block on shared shingles, LSH bands, SimHash sub-block combinations
+    or positional shingle hashes, then verify (count, Jaccard, Hamming,
+    cosine) on the pairs. A pair sharing several keys comes out once
+    per shared key; callers that want it once aggregate or dedupe.
 
-    A shuffled hash join by hint, never a broadcast. The shingle table
-    scales with the corpus; at sf0.1 one arm (266k rows) just fits the
-    10 MB threshold, and the 42 MB hash relation AQE then builds stays
-    on the driver heap for as long as a memo of the pair table
-    (``jaccard_pairs``, ``jaccard_exact_t05``, ``cc_pairs``) holds its
-    lineage: 58–67 MB of live heap per key by ``tools/memo_audit.py``.
-    Over the capped table (``_capped_shingles``) both arms read the
-    shingle-partitioned cache and the join shuffles nothing; over a
-    caller's table each arm is shuffled on ``shingle``."""
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle").hint("shuffle_hash")
+    Arm b is a shuffled hash join build side by hint, never a
+    broadcast. The keyed table scales with the corpus, and AQE
+    broadcasts whichever arm happens to fit 10 MB at a small scale
+    factor: at sf0.1 one shingle arm (266k rows) does, as a 42 MB hash
+    relation, and so does the MinHash band table (20k rows, 35 MB).
+    When the pair table is then held by ``util.memo`` (``jaccard_pairs``,
+    ``jaccard_exact_t05``, ``cc_pairs``, ``lsh_candidates``), the cache
+    entry keeps its whole physical plan, and that relation stays on the
+    driver heap until the key is evicted: 38–67 MB of live heap per key
+    by ``tools/memo_audit.py``, against 2–15 MB with the hint.
+    Over a table already hash-partitioned on ``keys`` (``_capped_shingles``)
+    both arms read the partitioned cache and the join shuffles nothing;
+    otherwise each arm is shuffled once on ``keys``. Fan-out per key is
+    the square of its population, which is why the shingle callers cap
+    document frequency first (``cap_document_frequency``)."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+
+    def arm(side: str) -> list:
+        return [F.col(id_col).alias(f"id_{side}")] + [F.col(c).alias(f"{c}_{side}") for c in carry]
+
+    a = keyed.select(*arm("a"), *keys)
+    b = keyed.select(*arm("b"), *keys).hint("shuffle_hash")
+    out = ["id_a", *(f"{c}_a" for c in carry), *keys, "id_b", *(f"{c}_b" for c in carry)]
+    return a.join(b, keys).filter(F.col("id_a") < F.col("id_b")).select(*out)
+
+
+def _shared_shingle_pairs(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, n_inter) for every pair sharing ≥1 shingle."""
     return (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
+        pair_join(sh, id_col, "shingle")
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
 
 
-def _jaccard_from_intersections(
-    sh: DataFrame, inter: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
+def _with_set_sizes(sh: DataFrame, inter: DataFrame, id_col: str) -> DataFrame:
+    """``inter`` with each side's shingle-set size (size_a, size_b)."""
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def _jaccard_from_intersections(
+    sh: DataFrame, inter: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _with_set_sizes(sh, inter, id_col)
         .withColumn(
             "jaccard",
             F.col("n_inter").cast("double")
@@ -201,18 +229,7 @@ def minhash_band_candidates(
     banded = sig.select(F.col(id_col), F.explode(bands).alias("b")).select(
         id_col, F.col("b.band_idx").alias("band_idx"), F.col("b.band_val").alias("band_val")
     )
-    # Shuffled by hint: the band table (docs × bands rows) scales with
-    # the corpus. Broadcast at sf0.1 (20k rows, a 35 MB relation), it
-    # stayed on the driver heap while the ``lsh_candidates`` memo was
-    # held: 38 MB of live heap by tools/memo_audit.py.
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_val")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_val").hint("shuffle_hash")
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return pair_join(banded, id_col, ["band_idx", "band_val"]).select("id_a", "id_b").distinct()
 
 
 def minhash_band_keys(
@@ -350,7 +367,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph → duplicate
     CLUSTERS: (doc_id, cluster_id) with cluster_id = min member id. The
@@ -359,10 +375,14 @@ def connected_components(
     component).
 
     Iterative min-label propagation: each round every node adopts the
-    smallest label among itself and its neighbours; converged when no
-    label changes. Rounds needed = graph diameter; near-dup components
-    are overwhelmingly small/star-shaped (they come from shared
-    buckets), so this converges in a few rounds. Each round is one
+    smallest label among itself and its neighbours, until no label
+    changes. There is no round cap: a capped loop returns unconverged
+    labels on a graph whose diameter exceeds the cap, silently unlike
+    the full closure the oracles compute. The loop always ends, because
+    a label only ever decreases and is bounded below by the smallest
+    id. Rounds needed = graph diameter + 1; near-dup components are
+    overwhelmingly small/star-shaped (they come from shared buckets),
+    so this converges in a few rounds. Each round is one
     equi-join + one groupBy — all shuffle-on-key, nothing quadratic.
     The driver-side loop/convergence count is control flow, not data
     movement (the same pattern GraphX/GraphFrames uses; swap in
@@ -412,7 +432,7 @@ def connected_components(
     labels = checkpoint(
         edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-    for _ in range(max_iter):
+    while True:
         neighbour_min = (
             edges.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -549,12 +569,10 @@ def simhash_pairs(
     banded = sig.select(F.col(id_col), F.col("simhash"), F.explode(bands).alias("b")).select(
         id_col, "simhash", F.col("b.band_idx").alias("band_idx"), F.col("b.band_val").alias("band_val")
     )
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), "band_idx", "band_val")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"), "band_idx", "band_val")
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"))
+        pair_join(banded, id_col, ["band_idx", "band_val"], carry=("simhash",))
+        .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -723,11 +741,7 @@ def containment_pairs(
     sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
     if max_df is not None:
         sh = _capped_shingles(sh, max_df)
-    inter = _shared_shingle_pairs(sh, id_col)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
-    joined = inter.join(sa, "id_a").join(sb, "id_b")
+    joined = _with_set_sizes(sh, _shared_shingle_pairs(sh, id_col), id_col)
     # Emit both directions from ONE pass: a union of two projections of
     # `joined` would make Catalyst evaluate the candidate join + both
     # size joins once per branch (the multi-consumer-subtree hazard

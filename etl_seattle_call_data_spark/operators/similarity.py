@@ -6,10 +6,15 @@ sums — immune to float summation order — and the final cosine is one
 IEEE divide/sqrt on exactly-representable inputs, bit-identical in Spark
 and DuckDB. (64-dim, |q|≤~1000 ⇒ dot ≤ ~6.4e7, na²·nb² ≤ ~2^49 < 2^53.)
 
-Scale design: the brute-force top-k broadcasts the (small) query set and
-streams the corpus — one map + one per-query top-k aggregation, no
-shuffle of the corpus. The LSH path buckets by sign-random-hyperplane
-bits so candidate generation is an equi-join on bucket id.
+Scale design: every search is key assignment plus one re-rank,
+``_topk_cosine``: one cosine expression (``_cosine``) over candidate
+(query, neighbor) pairs and a per-query window top-k with a (cosine
+desc, id) tie-break. The brute-force top-k broadcasts the (small)
+query set and streams the corpus — one map + one per-query top-k
+aggregation, no shuffle of the corpus. The LSH, multi-probe and IVF
+paths assign each vector a bucket or cell so candidate generation is
+an equi-join on it. Corpus self-pairs (``cosine_pairs``) block on a
+column and salt the block join with ``joins.salted_join``.
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.joins import salted_join
 from etl_seattle_call_data_spark.operators.util import memo, spread as _spread
 
 QUANT_SCALE = 1000
@@ -30,21 +36,22 @@ def quantize(vec_col, scale: int = QUANT_SCALE):
     return F.transform(c, lambda x: F.round(x.cast("double") * scale).cast("long"))
 
 
-def _dot(a, b, dims: int | None = None):
-    """Integer dot product. Measured note (local[32], sf0.1): the
-    unrolled ``dims`` form (128 GetArrayItem nodes) blows past janino's
-    method-size limits and falls back to interpreted projection — 3×
-    SLOWER than the zip_with/aggregate form. Keep dims=None; the higher-
-    order form is the fast path here."""
-    if dims:
-        terms = [a.getItem(j) * b.getItem(j) for j in range(dims)]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
+def _dot(a, b):
+    """Integer dot product as one zip_with/aggregate. Measured note
+    (local[32], sf0.1): an unrolled per-dimension sum (128 GetArrayItem
+    nodes at 64 dims) blows past janino's method-size limits and falls
+    back to interpreted projection — 3× SLOWER than this higher-order
+    form."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
     )
+
+
+def _cosine(va, na, vb, nb):
+    """Cosine of two quantized vectors with squared norms ``na``/``nb``:
+    an exact integer dot product and one IEEE divide/sqrt, so the value
+    is bit-identical in Spark and DuckDB."""
+    return _dot(va, vb).cast("double") / F.sqrt((na * nb).cast("double"))
 
 
 def _norm2(a):
@@ -64,7 +71,6 @@ def cosine_pairs(
     block_col: str | None = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = None,
     salt: int = 8,
     allow_cross_join: bool = False,
 ) -> DataFrame:
@@ -77,12 +83,13 @@ def cosine_pairs(
     ``allow_cross_join=True``; otherwise we raise rather than let a
     library user trip a cartesian product silently.
 
-    The block join is salted ``salt`` ways: one block = one join
-    partition otherwise, and the dot-product work (CPU-heavy, byte-
-    light — AQE coalesces it to nothing) serializes on however many
-    distinct blocks exist. Side A takes hash(id)%salt, side B is
-    replicated to every salt value, so each pair still meets exactly
-    once and a hot block spreads over ``salt`` tasks."""
+    The block join is salted ``salt`` ways (``joins.salted_join``): one
+    block = one join partition otherwise, and the dot-product work
+    (CPU-heavy, byte-light — AQE coalesces it to nothing) serializes on
+    however many distinct blocks exist. Side A takes a hash of its id
+    modulo ``salt``, side B is replicated to every salt value, so each
+    pair still meets exactly once and a hot block spreads over ``salt``
+    tasks."""
     if block_col is None and not allow_cross_join:
         raise ValueError(
             "cosine_pairs(block_col=None) is an O(n^2) corpus cross-join; "
@@ -90,21 +97,56 @@ def cosine_pairs(
             "explicitly with allow_cross_join=True for tiny eval sets"
         )
     q = with_quantized(_spread(df), vec_col)
-    cols = [F.col(id_col), F.col("qvec"), F.col("qnorm2")] + (
-        [F.col(block_col)] if block_col else []
-    )
-    q = q.select(*cols)
-    on = ([block_col] if block_col else []) + (["__salt"] if salt > 1 else [])
-    a = q.select(*([F.col(c) for c in on if c != "__salt"] + [F.col(id_col).alias("id_a"), F.col("qvec").alias("va"), F.col("qnorm2").alias("na")]))
-    b = q.select(*([F.col(c) for c in on if c != "__salt"] + [F.col(id_col).alias("id_b"), F.col("qvec").alias("vb"), F.col("qnorm2").alias("nb")]))
+    on = [block_col] if block_col else []
+    a = q.select(*on, F.col(id_col).alias("id_a"), F.col("qvec").alias("va"), F.col("qnorm2").alias("na"))
+    b = q.select(*on, F.col(id_col).alias("id_b"), F.col("qvec").alias("vb"), F.col("qnorm2").alias("nb"))
     if salt > 1:
-        a = a.withColumn("__salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(salt)).cast("int"))
-        b = b.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-    joined = (a.join(b, on) if on else a.crossJoin(b)).filter(F.col("id_a") < F.col("id_b"))
-    cos = _dot(F.col("va"), F.col("vb"), dims).cast("double") / F.sqrt(
-        (F.col("na") * F.col("nb")).cast("double")
+        joined = salted_join(a, b, on, "id_a", salt)
+    else:
+        joined = a.join(b, on) if on else a.crossJoin(b)
+    cos = _cosine(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
+    return (
+        joined.filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
     )
-    return joined.select("id_a", "id_b", cos.alias("cosine")).filter(F.col("cosine") >= threshold)
+
+
+def _corpus_side(df: DataFrame, id_col: str, *key) -> DataFrame:
+    """The corpus arm of a re-rank: (key…, neighbor_id, vc, nc)."""
+    return df.select(
+        *key, F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("vc"), F.col("qnorm2").alias("nc")
+    )
+
+
+def _query_side(df: DataFrame, id_col: str, *key) -> DataFrame:
+    """The query arm of a re-rank: (key…, query_id, vq, nq)."""
+    return df.select(
+        *key, F.col(id_col).alias("query_id"), F.col("qvec").alias("vq"), F.col("qnorm2").alias("nq")
+    )
+
+
+def _topk_cosine(cc: DataFrame, qq: DataFrame, k: int, on: str | None) -> DataFrame:
+    """The one exact re-rank behind every top-k search: pair the corpus
+    arm ``cc`` with the query arm ``qq`` (``_corpus_side`` /
+    ``_query_side``), drop each query's self-match, and keep each
+    query's ``k`` best by cosine with a deterministic (cosine desc, id)
+    tie-break: (query_id, neighbor_id, rank, cosine).
+
+    ``on=None`` broadcasts the query set against the whole corpus (the
+    exact path: the corpus streams, nothing of it shuffles); otherwise
+    the arms equi-join on the bucket/cell column ``on`` (the ANN paths)."""
+    pairs = cc.crossJoin(F.broadcast(qq)) if on is None else cc.join(qq, on)
+    cos = _cosine(F.col("vq"), F.col("nq"), F.col("vc"), F.col("nc"))
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", cos.alias("cosine")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
 
 
 def cosine_topk(
@@ -113,31 +155,13 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the query set against the
-    corpus, window top-k per query with a deterministic (cosine desc, id)
-    tie-break. The baseline/exact path; see ``lsh_topk`` for the ANN path."""
-    c = with_quantized(_spread(corpus), vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("vc"), F.col("qnorm2").alias("nc")
-    )
-    qs = with_quantized(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("qvec").alias("vq"), F.col("qnorm2").alias("nq")
-    )
-    cos = _dot(F.col("vq"), F.col("vc"), dims).cast("double") / F.sqrt(
-        (F.col("nq") * F.col("nc")).cast("double")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(qs))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    corpus, window top-k per query. The baseline/exact path; see
+    ``lsh_topk`` for the ANN path."""
+    c = _corpus_side(with_quantized(_spread(corpus), vec_col), id_col)
+    qs = _query_side(with_quantized(queries, vec_col), id_col)
+    return _topk_cosine(c, qs, k, None)
 
 
 def _hyperplane_weights(num_planes: int, dims: int) -> list[list[int]]:
@@ -243,6 +267,15 @@ def lsh_bucket_vectorized(num_planes: int = 8, dims: int = 64):
     return bucket
 
 
+def _lsh_bucketed(corpus: DataFrame, queries: DataFrame, num_planes: int, vec_col: str):
+    """Corpus and queries quantized, each row with its sign-LSH
+    ``bucket``."""
+    bucket = lsh_bucket_vectorized(num_planes)
+    c = with_quantized(_spread(corpus), vec_col).withColumn("bucket", bucket(F.col("qvec")))
+    qs = with_quantized(queries, vec_col).withColumn("bucket", bucket(F.col("qvec")))
+    return c, qs
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -250,30 +283,12 @@ def lsh_topk(
     num_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = None,
 ) -> DataFrame:
     """ANN top-k: bucket corpus and queries by sign-LSH, equi-join on the
     bucket, exact re-rank inside. Approximate (single probe); the scale
     path when the corpus no longer fits a broadcast cross-join."""
-    bucket = lsh_bucket_vectorized(num_planes)
-    c = with_quantized(_spread(corpus), vec_col).withColumn("bucket", bucket(F.col("qvec")))
-    qs = with_quantized(queries, vec_col).withColumn("bucket", bucket(F.col("qvec")))
-    cc = c.select("bucket", F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("vc"), F.col("qnorm2").alias("nc"))
-    qq = qs.select("bucket", F.col(id_col).alias("query_id"), F.col("qvec").alias("vq"), F.col("qnorm2").alias("nq"))
-    cos = _dot(F.col("vq"), F.col("vc"), dims).cast("double") / F.sqrt(
-        (F.col("nq") * F.col("nc")).cast("double")
-    )
-    scored = (
-        cc.join(qq, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    c, qs = _lsh_bucketed(corpus, queries, num_planes, vec_col)
+    return _topk_cosine(_corpus_side(c, id_col, "bucket"), _query_side(qs, id_col, "bucket"), k, "bucket")
 
 
 def seeded_centroids(
@@ -343,22 +358,7 @@ def ivf_topk(
         "ivf_cells", lambda: _with_ivf_cell(with_quantized(_spread(corpus), vec_col), cents)
     )
     qs = _with_ivf_cell(with_quantized(queries, vec_col), cents)
-    cc = c.select("cell", F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("vc"), F.col("qnorm2").alias("nc"))
-    qq = qs.select("cell", F.col(id_col).alias("query_id"), F.col("qvec").alias("vq"), F.col("qnorm2").alias("nq"))
-    cos = _dot(F.col("vq"), F.col("vc")).cast("double") / F.sqrt(
-        (F.col("nq") * F.col("nc")).cast("double")
-    )
-    scored = (
-        cc.join(qq, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _topk_cosine(_corpus_side(c, id_col, "cell"), _query_side(qs, id_col, "cell"), k, "cell")
 
 
 def label_centroids(
@@ -406,7 +406,6 @@ def lsh_topk_multiprobe(
     num_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = None,
 ) -> DataFrame:
     """ANN top-k with Hamming-1 multi-probe: bucket corpus once, explode
     each query into its probe list, equi-join on the probed bucket, and
@@ -418,37 +417,9 @@ def lsh_topk_multiprobe(
     (big side) still shuffles once on its bucket; only the tiny query
     side multiplies by planes+1.
     """
-    bucket = lsh_bucket_vectorized(num_planes)
-    c = with_quantized(_spread(corpus), vec_col).withColumn(
-        "bucket", bucket(F.col("qvec"))
-    )
-    qs = with_quantized(queries, vec_col).withColumn("bucket", bucket(F.col("qvec")))
-    cc = c.select(
-        "bucket",
-        F.col(id_col).alias("neighbor_id"),
-        F.col("qvec").alias("vc"),
-        F.col("qnorm2").alias("nc"),
-    )
-    qq = qs.select(
-        F.explode(lsh_probe_buckets("bucket", num_planes)).alias("bucket"),
-        F.col(id_col).alias("query_id"),
-        F.col("qvec").alias("vq"),
-        F.col("qnorm2").alias("nq"),
-    )
-    cos = _dot(F.col("vq"), F.col("vc"), dims).cast("double") / F.sqrt(
-        (F.col("nq") * F.col("nc")).cast("double")
-    )
-    scored = (
-        cc.join(qq, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    c, qs = _lsh_bucketed(corpus, queries, num_planes, vec_col)
+    probes = F.explode(lsh_probe_buckets("bucket", num_planes)).alias("bucket")
+    return _topk_cosine(_corpus_side(c, id_col, "bucket"), _query_side(qs, id_col, probes), k, "bucket")
 
 
 def sign_cell(vec_col, n_bits: int = 4, scale: int = QUANT_SCALE):

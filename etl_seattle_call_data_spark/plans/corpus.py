@@ -2630,13 +2630,7 @@ def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the cached sh bounds that at 2x the cap join, but the join itself
     # is hash-heavy). The checkpoint runs it once.
     capped = checkpoint(sh.join(okh, "h"))
-    a = capped.select(
-        F.col("h"), F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a")
-    )
-    b = capped.select(
-        F.col("h").alias("hb"), F.col("doc_id").alias("id_b"), F.col("pos").alias("pos_b")
-    )
-    pairs = a.join(b, (a.h == b.hb) & (F.col("id_a") < F.col("id_b"))).select(
+    pairs = dedup.pair_join(capped, "doc_id", "h", carry=("pos",)).select(
         "id_a", "id_b", "pos_a", "pos_b", (F.col("pos_a") - F.col("pos_b")).alias("diag")
     )
     w = Window.partitionBy("id_a", "id_b", "diag").orderBy("pos_a")
@@ -3850,32 +3844,20 @@ _EDIT_MAX_DIST = 60
     """,
 )
 def q_dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.dedup import shingle_sets
-    from etl_seattle_call_data_spark.operators.text import canonical_text
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        canonical_text(F.col("text")).alias("canon"),
+        text.canonical_text(F.col("text")).alias("canon"),
     )
     # Same (doc_id, 3-gram shingle) table the whole dedup family shares
     # ("doc_shingles" — jaccard/minhash/containment): one tokenize+
     # explode+distinct per corpus per session instead of a private
     # rebuild feeding this query's THREE consumers (df cap + both join
     # sides).
-    sh = memo("doc_shingles", lambda: shingle_sets(docs))
-    keep = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= _EDIT_MAX_DF
-    )
-    capped = sh.join(keep.select("shingle"), "shingle")
-    a = capped.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = capped.select(F.col("doc_id").alias("id_b"), "shingle")
+    sh = memo("doc_shingles", lambda: dedup.shingle_sets(docs))
     cand = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= _EDIT_MIN_SHARED)
+        dedup._shared_shingle_pairs(dedup.cap_document_frequency(sh, _EDIT_MAX_DF), "doc_id")
+        .filter(F.col("n_inter") >= _EDIT_MIN_SHARED)
         .select("id_a", "id_b")
     )
     prefixes = memo(

@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_seattle_call_data_spark.operators import similarity, text
+from etl_seattle_call_data_spark.operators import dedup, similarity, text
+from etl_seattle_call_data_spark.operators.similarity import _cosine, _dot, with_quantized
 from etl_seattle_call_data_spark.operators.util import checkpoint, spread
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import (
@@ -860,8 +861,6 @@ def q_power_iteration_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_quantization_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import similarity
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     truth = similarity.cosine_topk(emb, queries, k=5).select(
@@ -953,8 +952,6 @@ def q_quantization_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import similarity
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     emb = load_table(spark, sf_dir, "embeddings")
     qtok = (
@@ -1068,8 +1065,6 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import similarity
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     full = similarity.cosine_topk(emb, queries, k=5)
@@ -1389,8 +1384,6 @@ _DISC_CASE = (
     """.format(duck_q=_DUCK_Q, duck_cos=_DUCK_COS, lsh_bucket=_lsh_bucket_sql()),
 )
 def q_search_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import similarity
-
     emb = load_table(spark, sf_dir, "embeddings")
     qset = emb.filter(F.col("vec_id") < 10)
     truth = similarity.cosine_topk(emb, qset, k=5).select(
@@ -1592,9 +1585,6 @@ def q_classifier_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.format(div="//"),
 )
 def q_recsys_diversity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import similarity
-    from etl_seattle_call_data_spark.operators.similarity import _dot, with_quantized
-
     emb = load_table(spark, sf_dir, "embeddings")
     qset = emb.filter(F.col("vec_id") < 10)
     truth = similarity.cosine_topk(emb, qset, k=5).select("query_id", "neighbor_id")
@@ -1618,9 +1608,7 @@ def q_recsys_diversity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = w.select(
         F.col("vec_id").alias("id_b"), F.col("qvec").alias("vb"), F.col("qnorm2").alias("nb")
     )
-    cos = _dot(F.col("va"), F.col("vb"), None).cast("double") / F.sqrt(
-        (F.col("na") * F.col("nb")).cast("double")
-    )
+    cos = _cosine(F.col("va"), F.col("na"), F.col("vb"), F.col("nb"))
     paircos = (
         pairs.join(a, "id_a")
         .join(b, "id_b")
@@ -1700,9 +1688,6 @@ def q_recsys_diversity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_similarity_metric_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import similarity
-    from etl_seattle_call_data_spark.operators.similarity import _dot, with_quantized
-
     emb = load_table(spark, sf_dir, "embeddings")
     qset = emb.filter(F.col("vec_id") < 10)
     cosr = similarity.cosine_topk(emb, qset, k=5).select("query_id", "neighbor_id")
@@ -1715,7 +1700,7 @@ def q_similarity_metric_disagreement(spark: SparkSession, sf_dir: str) -> DataFr
     scored = (
         c.crossJoin(F.broadcast(qq))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _dot(F.col("vq"), F.col("vc"), None).alias("dot"))
+        .select("query_id", "neighbor_id", _dot(F.col("vq"), F.col("vc")).alias("dot"))
     )
     wd = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
     dotr = (
@@ -1819,8 +1804,6 @@ def q_embedding_similarity_histogram(
     verified to stay ~200 rows at every SF (label cardinality scales
     with n).
     """
-    from etl_seattle_call_data_spark.operators.similarity import with_quantized
-
     base = load_table(spark, sf_dir, "embeddings")
     n_buckets = max(_ESH_MIN_BUCKETS, base.count() // _ESH_TARGET_BLOCK)
     # r11: emb feeds FOUR plan branches (two populations x two self-join
@@ -1840,26 +1823,9 @@ def q_embedding_similarity_histogram(
     )
 
     def pop(on: str, name: str) -> DataFrame:
-        a = emb.select(
-            F.col(on).alias("k"),
-            F.col("vec_id").alias("ia"),
-            F.col("qvec").alias("va"),
-            F.col("qnorm2").alias("na"),
-        )
-        b = emb.select(
-            F.col(on).alias("k"),
-            F.col("vec_id").alias("ib"),
-            F.col("qvec").alias("vb"),
-            F.col("qnorm2").alias("nb"),
-        )
-        cos = F.expr(
-            "CAST(aggregate(zip_with(va, vb, (x, y) -> x * y), 0L,"
-            " (acc, v) -> acc + v) AS DOUBLE)"
-        ) / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-        return (
-            a.join(b, "k")
-            .filter(F.col("ib") > F.col("ia"))
-            .select(F.lit(name).alias("population"), cos.alias("cosine"))
+        cos = _cosine(F.col("qvec_a"), F.col("qnorm2_a"), F.col("qvec_b"), F.col("qnorm2_b"))
+        return dedup.pair_join(emb, "vec_id", on, carry=("qvec", "qnorm2")).select(
+            F.lit(name).alias("population"), cos.alias("cosine")
         )
 
     pairs = pop("label", "same_label").unionAll(pop("hb", "hash_bucket"))

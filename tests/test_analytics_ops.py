@@ -148,13 +148,42 @@ def test_incremental_dedup(spark):
 
 
 def test_connected_components_clusters(spark):
+    path = [(i, i + 1) for i in range(100, 126)]
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)] + path,
         ["id_a", "id_b"],
     )
     out = {r.doc_id: r.cluster_id for r in dedup.connected_components(pairs).collect()}
-    # chain 1-2-3-4 (diameter 3), pair, triangle — all labeled by min member
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    # chain 1-2-3-4 (diameter 3), pair, triangle — all labeled by min
+    # member; the 27-node path 100..126 (diameter 26) needs 26 rounds
+    # before node 126 sees label 100
+    expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    expected.update({i: 100 for i in range(100, 127)})
+    assert out == expected
+
+
+def test_pair_join_matches_python_model(spark):
+    """pair_join emits every (id_a < id_b) pair once per shared key,
+    with each side's carried columns."""
+    rows = [
+        (1, "k1", 10), (2, "k1", 20), (3, "k1", 30),
+        (1, "k2", 11), (2, "k2", 21),
+        (4, "k3", 40), (4, "k3", 41),
+        (5, "k4", 50),
+        (2, "k5", 22), (3, "k5", 32), (1, "k5", 12),
+    ]
+    keyed = spark.createDataFrame(rows, ["doc_id", "key", "pos"])
+    out = dedup.pair_join(keyed, "doc_id", "key", carry=("pos",))
+    assert out.columns == ["id_a", "pos_a", "key", "id_b", "pos_b"]
+    expected = {
+        (ia, ib, ka, pa, pb)
+        for ia, ka, pa in rows
+        for ib, kb, pb in rows
+        if ka == kb and ia < ib
+    }
+    got = [(r.id_a, r.id_b, r.key, r.pos_a, r.pos_b) for r in out.collect()]
+    assert len(got) == len(expected)
+    assert set(got) == expected
 
 
 def test_tfidf_top_terms_ranking(spark):

@@ -109,9 +109,10 @@ def _final_plan(df) -> str:
 
 
 def test_shingle_self_join_never_broadcasts(spark):
-    """The shingle table scales with the corpus. A broadcast of one arm
-    of its self-join stays on the driver heap for as long as a memo of
-    the pair table is held, so the join must shuffle even where AQE
+    """The keyed tables ``dedup.pair_join`` self-joins (shingles, MinHash
+    bands, SimHash sub-block combinations) scale with the corpus. A
+    broadcast of one arm stays on the driver heap for as long as a memo
+    of the pair table is held, so the join must shuffle even where AQE
     would broadcast the arm. (The df cap's anti-join against the hot
     shingles may broadcast: that set is at most 1/max_df of the table.)"""
     import re
@@ -121,14 +122,37 @@ def test_shingle_self_join_never_broadcasts(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents")
     frames = {
-        "capped": dedup.jaccard_pairs(docs, threshold=0.5, max_df=100),
-        "shingles=": dedup.jaccard_pairs(docs, threshold=0.5, shingles=dedup.shingle_sets(docs)),
-        "containment": dedup.containment_pairs(docs, threshold=0.8, max_df=100),
+        "capped": (dedup.jaccard_pairs(docs, threshold=0.5, max_df=100), "shingle"),
+        "shingles=": (
+            dedup.jaccard_pairs(docs, threshold=0.5, shingles=dedup.shingle_sets(docs)),
+            "shingle",
+        ),
+        "containment": (dedup.containment_pairs(docs, threshold=0.8, max_df=100), "shingle"),
+        "minhash": (dedup.minhash_band_candidates(dedup.shingle_sets(docs)), "band_idx"),
+        "simhash": (dedup.simhash_pairs(docs, max_hamming=3), "band_idx"),
     }
-    for name, df in frames.items():
+    for name, (df, key) in frames.items():
         plan = _final_plan(df)
-        assert not re.search(r"BroadcastHashJoin \[shingle#\d+\], \[shingle#\d+\], Inner", plan), name
-        assert "ShuffledHashJoin [shingle#" in plan, name
+        self_join = rf"BroadcastHashJoin \[{key}#\d+[^\]]*\], \[{key}#\d+[^\]]*\], Inner"
+        assert not re.search(self_join, plan), name
+        assert f"ShuffledHashJoin [{key}#" in plan, name
+
+
+def test_plan_fingerprint_is_stable_and_distinct(spark):
+    """tools/plan_fingerprint.py: a memo-backed query fingerprints the
+    same twice in one session (the cached relation's adaptive plan ids
+    are stripped), and a different query fingerprints differently."""
+    tool = pathlib.Path(__file__).parent.parent / "tools" / "plan_fingerprint.py"
+    spec = importlib.util.spec_from_file_location("plan_fingerprint", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    first = mod.fingerprints(spark, SF_SMOKE, ["dedup_ngram_jaccard", "dedup_containment_pairs"])
+    again = mod.fingerprints(spark, SF_SMOKE, ["dedup_ngram_jaccard"])
+    assert first["dedup_ngram_jaccard"] == again["dedup_ngram_jaccard"]
+    assert first["dedup_ngram_jaccard"] != first["dedup_containment_pairs"]
+    assert mod.diff(first, again) == ["dedup_containment_pairs: only in the old run"]
+    assert util._memos == {}
 
 
 def test_memo_audit_reports_every_held_key(spark):
