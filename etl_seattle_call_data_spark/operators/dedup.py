@@ -23,10 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
 from etl_seattle_call_data_spark.operators.text import canonical_text, tokens
 from etl_seattle_call_data_spark.operators.util import checkpoint, memo, spread as _spread
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit integer
+SHINGLE_N = 3  # words per shingle
+MINHASH_HASHES = 8  # MinHash signature length
+MINHASH_ROWS_PER_BAND = 2  # LSH band width: 4 bands of 2 rows
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -39,8 +43,9 @@ def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle)."""
+def shingle_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Distinct word ``SHINGLE_N``-gram shingles per document: (id, shingle)."""
+    n = SHINGLE_N
     toks = tokens(F.col(text_col)).alias("__t")
     base = _spread(df).select(F.col(id_col), toks)
     grams = F.when(
@@ -80,7 +85,6 @@ def jaccard_pairs(
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     max_df: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -91,7 +95,7 @@ def jaccard_pairs(
     join fan-out — see ``cap_document_frequency``.
 
     ``shingles``: caller-supplied (id, shingle) frame that must equal
-    ``shingle_sets(df, id_col, text_col, n)`` semantically. Shingling is
+    ``shingle_sets(df, id_col, text_col)`` semantically. Shingling is
     per-document, so a caller working on a FILTERED corpus can derive
     its shingle set from an already-cached full-corpus table with one
     semi-join instead of re-tokenizing (corpus_clean_pipeline does)."""
@@ -105,7 +109,7 @@ def jaccard_pairs(
     if shingles is not None:
         sh = shingles
     else:
-        sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
+        sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col))
     if max_df is not None:
         sh = _capped_shingles(sh, max_df)
     inter = _shared_shingle_pairs(sh, id_col)
@@ -190,41 +194,35 @@ def _jaccard_from_intersections(
     )
 
 
-def _minhash_from_shingles(sh: DataFrame, num_hashes: int, id_col: str) -> DataFrame:
-    """MinHash signature per document: for each seed s, the lexicographic
-    min of md5('s:' || shingle) — identical hex across engines, so the
-    signature is engine-independent."""
+def _minhash_from_shingles(sh: DataFrame, id_col: str) -> DataFrame:
+    """``MINHASH_HASHES``-long MinHash signature per document: for each
+    seed s, the lexicographic min of md5('s:' || shingle) — identical
+    hex across engines, so the signature is engine-independent."""
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"h{s}")
-        for s in range(num_hashes)
+        for s in range(MINHASH_HASHES)
     ]
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def minhash_band_candidates(
-    sh: DataFrame,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def _band_hashes() -> list:
+    """md5 of each LSH band's concatenated signature rows, band by band."""
+    r = MINHASH_ROWS_PER_BAND
+    return [
+        F.md5(F.concat(*[F.col(f"h{i * r + j}") for j in range(r)]))
+        for i in range(MINHASH_HASHES // r)
+    ]
+
+
+def minhash_band_candidates(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """LSH candidate pairs from a shingle table — the PRE-verification
     band bucket join, exposed so eval harnesses can measure candidate
     recall/precision against exact Jaccard (dedup_lsh_recall_eval).
     Banded (band_idx, band_val) equi-join; fan-out bounded by bucket
     population, never corpus²."""
-    assert num_hashes % rows_per_band == 0
-    num_bands = num_hashes // rows_per_band
-    sig = _minhash_from_shingles(sh, num_hashes, id_col)
+    sig = _minhash_from_shingles(sh, id_col)
     bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band_idx"),
-                F.md5(
-                    F.concat(*[F.col(f"h{i * rows_per_band + r}") for r in range(rows_per_band)])
-                ).alias("band_val"),
-            )
-            for i in range(num_bands)
-        ]
+        *[F.struct(F.lit(i).alias("band_idx"), h.alias("band_val")) for i, h in enumerate(_band_hashes())]
     )
     banded = sig.select(F.col(id_col), F.explode(bands).alias("b")).select(
         id_col, F.col("b.band_idx").alias("band_idx"), F.col("b.band_val").alias("band_val")
@@ -232,14 +230,7 @@ def minhash_band_candidates(
     return pair_join(banded, id_col, ["band_idx", "band_val"]).select("id_a", "id_b").distinct()
 
 
-def minhash_band_keys(
-    df: DataFrame,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def minhash_band_keys(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """One ``(id, band_key)`` row per document per LSH band, where
     ``band_key = '<band_idx>:' || md5(concat of the band's signature
     rows)`` — the KEYED form of the banded LSH scheme: two documents
@@ -251,38 +242,16 @@ def minhash_band_keys(
     its n_bands keys hits. Documents shorter than the shingle width
     produce NO band keys (no shingles → no signature) and therefore
     never match — callers must treat keyless docs as novel."""
-    assert num_hashes % rows_per_band == 0
-    num_bands = num_hashes // rows_per_band
-    sig = _minhash_from_shingles(
-        shingle_sets(df, id_col, text_col, n), num_hashes, id_col
-    )
-    bands = F.array(
-        *[
-            F.concat(
-                F.lit(f"{i}:"),
-                F.md5(
-                    F.concat(
-                        *[
-                            F.col(f"h{i * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ]
-                    )
-                ),
-            )
-            for i in range(num_bands)
-        ]
-    )
+    sig = _minhash_from_shingles(shingle_sets(df, id_col, text_col), id_col)
+    bands = F.array(*[F.concat(F.lit(f"{i}:"), h) for i, h in enumerate(_band_hashes())])
     return sig.select(F.col(id_col), F.explode(bands).alias("band_key"))
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """MinHash LSH near-duplicate pairs: band the signature, bucket-join
     on (band index, band value) for candidates, then verify with exact
@@ -290,13 +259,8 @@ def minhash_lsh_pairs(
     # one persisted shingle set feeds signatures, candidate verification,
     # and set sizes — the whole LSH pipeline tokenizes the corpus ONCE
     # (key shared with jaccard_pairs: same corpus → same cache)
-    sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
-    candidates = memo(
-        "lsh_candidates",
-        lambda: minhash_band_candidates(
-            sh, num_hashes=num_hashes, rows_per_band=rows_per_band, id_col=id_col
-        ),
-    )
+    sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col))
+    candidates = memo("lsh_candidates", lambda: minhash_band_candidates(sh, id_col=id_col))
     # verify ONLY the candidate pairs: restrict the shared-shingle
     # intersection join to candidates instead of computing all-pairs
     # Jaccard (LSH exists precisely to avoid that work). Restriction goes
@@ -452,11 +416,6 @@ def connected_components(
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def _token_hash60(c):
-    """First 15 md5 hex chars as a 60-bit integer — cross-engine stable."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
 def simhash(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -479,7 +438,7 @@ def simhash(
     tok = (
         _spread(df)
         .select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
-        .select(F.col(id_col), _token_hash60(F.col("tok")).alias("hv"))
+        .select(F.col(id_col), portable_hash_int("tok").alias("hv"))
     )
     h = F.col("hv")
     bit_sums = tok.groupBy(id_col).agg(
@@ -721,7 +680,6 @@ def containment_pairs(
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     max_df: int | None = None,
 ) -> DataFrame:
     """Directed shingle-CONTAINMENT near-duplicate pairs:
@@ -738,7 +696,7 @@ def containment_pairs(
     size. Output is directed: (contained_id, container_id, containment)
     for every ordered pair with containment ≥ threshold; each undirected
     candidate contributes at most two rows."""
-    sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col, n))
+    sh = memo("doc_shingles", lambda: shingle_sets(df, id_col, text_col))
     if max_df is not None:
         sh = _capped_shingles(sh, max_df)
     joined = _with_set_sizes(sh, _shared_shingle_pairs(sh, id_col), id_col)
@@ -779,7 +737,6 @@ def contamination_overlap(
     eval_set: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     flag_threshold: float = 0.5,
 ) -> DataFrame:
     """Benchmark-contamination check: per corpus document, the fraction
@@ -792,12 +749,12 @@ def contamination_overlap(
     to the corpus (benchmarks are MBs, corpora are TBs), so the semi-
     join broadcasts under AQE; the corpus side streams through it with
     no shuffle beyond the per-doc count aggregation. Documents with
-    fewer than ``n`` tokens have no shingles and are not scored."""
+    fewer than ``SHINGLE_N`` tokens have no shingles and are not scored."""
     # the corpus shingle set feeds BOTH the size aggregation and the
     # semi-join branch — persist it or Catalyst re-tokenizes the corpus
     # once per branch (same hazard jaccard_pairs documents)
-    corp_sh = memo("contamination_shingles", lambda: shingle_sets(corpus, id_col, text_col, n))
-    eval_vocab = shingle_sets(eval_set, id_col, text_col, n).select("shingle").distinct()
+    corp_sh = memo("contamination_shingles", lambda: shingle_sets(corpus, id_col, text_col))
+    eval_vocab = shingle_sets(eval_set, id_col, text_col).select("shingle").distinct()
     sizes = corp_sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
         corp_sh.join(eval_vocab, on="shingle", how="left_semi")

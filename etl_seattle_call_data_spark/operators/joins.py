@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 MICROS = 1_000_000
+HOT_SHARE_PPM = 10_000  # hot_salted_join: a hot key holds > 1% of fact rows
+MAX_HOT_KEYS = 64  # hot_salted_join: at most this many keys are salted
 
 
 def salted_join(
@@ -78,8 +80,6 @@ def hot_salted_join(
     on: list[str],
     salt_by: str,
     n_salts: int = 8,
-    hot_share_ppm: int = 10_000,
-    max_hot_keys: int = 64,
 ) -> DataFrame:
     """Differentiated (hot-key-only) salting: identical results to
     ``fact.join(dim, on, "inner")`` but ONLY the detected heavy-hitter
@@ -96,10 +96,10 @@ def hot_salted_join(
     1 TB through a single task no matter how many executors exist.
 
     Hot-key detection is one fact-side aggregate: keys with more than
-    ``hot_share_ppm`` of fact rows (default 1%), capped at
-    ``max_hot_keys`` — a bounded driver collect (the same legitimate
-    class as ranking.py's bucket offsets: heavy hitters above a share
-    floor are at most 1e6/hot_share_ppm keys by pigeonhole). The hot
+    ``HOT_SHARE_PPM`` of fact rows (1%), capped at ``MAX_HOT_KEYS`` — a
+    bounded driver collect (the same legitimate class as ranking.py's
+    bucket offsets: heavy hitters above a share floor are at most
+    1e6/HOT_SHARE_PPM keys by pigeonhole). The hot
     list is broadcast into both sides' salt expressions.
 
     Inner joins only (the cold/hot split unions two inner legs;
@@ -115,7 +115,7 @@ def hot_salted_join(
     # __tot over the SAME not-null frame as the per-key counts: on a
     # heavily-null FK, an unfiltered total would dilute every joinable
     # key's share and let a key owning most joinable rows slip under
-    # hot_share_ppm (perf-only miss, but exactly the skew case this
+    # HOT_SHARE_PPM (perf-only miss, but exactly the skew case this
     # operator exists for)
     counts = (
         joinable
@@ -124,9 +124,9 @@ def hot_salted_join(
         .crossJoin(
             F.broadcast(joinable.agg(F.count(F.lit(1)).alias("__tot")))
         )
-        .filter(F.col("__n") * 1_000_000 > F.col("__tot") * hot_share_ppm)
+        .filter(F.col("__n") * 1_000_000 > F.col("__tot") * HOT_SHARE_PPM)
         .orderBy(F.desc("__n"), *on)
-        .limit(max_hot_keys)
+        .limit(MAX_HOT_KEYS)
     )
     hot = [tuple(r[c] for c in on) for r in counts.collect()]
     if not hot:

@@ -67,13 +67,13 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def repartition_by_bytes(df: DataFrame, target_partition_bytes: int = 128 << 20) -> DataFrame:
+def repartition_by_bytes(df: DataFrame) -> DataFrame:
     """Media-aware partition sizing: estimate total payload bytes from the
     metadata column and repartition so each partition carries roughly
-    ``target_partition_bytes`` — row-count-based sizing is wrong when rows
-    are multi-MB blobs."""
+    128 MB — row-count-based sizing is wrong when rows are multi-MB
+    blobs."""
     total = df.agg(F.sum(F.col("meta.n_bytes"))).collect()[0][0] or 0
-    n = max(1, int(total // target_partition_bytes) + 1)
+    n = max(1, int(total // (128 << 20)) + 1)
     return df.repartition(n)
 
 
@@ -168,9 +168,7 @@ def sample_frames(
     )
 
 
-def resize_media(
-    media: DataFrame, target_bytes: int = 1024, strict: bool = False
-) -> DataFrame:
+def resize_media(media: DataFrame, target_bytes: int = 1024) -> DataFrame:
     """Resize/downsample plumbing: emits a payload deterministically
     reduced to ≤ ``target_bytes`` (stride subsampling — the stand-in for
     a real pixel resize) with refreshed metadata. Output schema matches
@@ -182,11 +180,6 @@ def resize_media(
         import pandas as _pd
 
         for pdf in it:
-            if strict:
-                raise NotImplementedError(
-                    "image resize requires an image library not present in "
-                    "this environment; wire PIL/opencv here"
-                )
             out = []
             for media_id, payload, meta in zip(pdf["media_id"], pdf["payload"], pdf["meta"]):
                 payload = bytes(payload) if payload is not None else b""

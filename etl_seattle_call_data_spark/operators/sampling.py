@@ -22,18 +22,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
 
-def hash_bucket(key_col, buckets: int = 100):
+
+def hash_bucket(key_col, buckets: int):
     """Engine-portable deterministic bucket in [0, buckets)."""
-    c = F.col(key_col) if isinstance(key_col, str) else key_col
-    h = F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
-    return h % buckets
+    return portable_hash_int(key_col) % buckets
 
 
-def hash_sample(df: DataFrame, key_col: str, percent: int, buckets: int = 100) -> DataFrame:
-    """Keep rows whose hash bucket < ``percent`` — a deterministic
-    ``percent/buckets`` sample. One filter, no shuffle, no seed."""
-    return df.filter(hash_bucket(key_col, buckets) < percent)
+def hash_sample(df: DataFrame, key_col: str, percent: int) -> DataFrame:
+    """Keep rows whose hash bucket (of 100) < ``percent`` — a
+    deterministic ``percent``% sample. One filter, no shuffle, no seed."""
+    return df.filter(hash_bucket(key_col, 100) < percent)
 
 
 def stratified_sample(
@@ -66,17 +66,17 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     splits: dict[str, int] | None = None,
-    buckets: int = 100,
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each row's portable hash
-    bucket maps to a named split by cumulative share (default 80/10/10).
+    bucket (of 100) maps to a named split by cumulative share, in
+    percent (default 80/10/10).
     Seedless and engine-portable — the same row lands in the same split
     on any engine, any partitioning, any run; adding rows never moves
     existing ones (the property random split lacks). Pure narrow map."""
     splits = splits or {"train": 80, "val": 10, "test": 10}
-    if sum(splits.values()) != buckets:
+    if sum(splits.values()) != 100:
         raise ValueError("split shares must sum to the bucket count")
-    b = hash_bucket(key_col, buckets)
+    b = hash_bucket(key_col, 100)
     expr = None
     cum = 0
     for name, share in splits.items():
@@ -90,7 +90,6 @@ def temperature_weights(
     df: DataFrame,
     group_col: str,
     budget: int,
-    scale: int = 1000,
 ) -> DataFrame:
     """Temperature-based source mixing (T = 2, i.e. weight ∝ √n): the
     standard multi-source LM sampling policy (multilingual/multi-corpus
@@ -98,7 +97,7 @@ def temperature_weights(
 
     Cross-engine exactness: a general n^(1/T) needs pow(), whose libm
     rounding differs across engines — √n is the IEEE-754 correctly-
-    rounded case, so the pipeline quantizes w_q = floor(√n · scale) to
+    rounded case, so the pipeline quantizes w_q = floor(√n · 1000) to
     BIGINT and allocates ``budget`` expected samples by integer floor
     division. Output: one row per group with n_rows, w_q, sample_quota
     (= budget·w_q DIV Σw_q) and the double mixing fraction (one division
@@ -110,7 +109,7 @@ def temperature_weights(
     from pyspark.sql.window import Window
 
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_rows"))
-    w_q = F.floor(F.sqrt(F.col("n_rows").cast("double")) * scale).cast("long")
+    w_q = F.floor(F.sqrt(F.col("n_rows").cast("double")) * 1000).cast("long")
     weighted = counts.withColumn("w_q", w_q)
     total = F.sum("w_q").over(Window.partitionBy())
     return weighted.select(

@@ -27,13 +27,15 @@ from pyspark.sql.window import Window
 from etl_seattle_call_data_spark.operators.joins import salted_join
 from etl_seattle_call_data_spark.operators.util import memo, spread as _spread
 
+# The cross-engine contract: every vector oracle hard-codes ``* 1000``.
 QUANT_SCALE = 1000
+SQ_LEVELS = 255  # scalar quantization codes 0..255 (int8)
 
 
-def quantize(vec_col, scale: int = QUANT_SCALE):
-    """array<float> → array<long> by round(double(x)·scale)."""
+def quantize(vec_col):
+    """array<float> → array<long> by round(double(x)·QUANT_SCALE)."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(c, lambda x: F.round(x.cast("double") * scale).cast("long"))
+    return F.transform(c, lambda x: F.round(x.cast("double") * QUANT_SCALE).cast("long"))
 
 
 def _dot(a, b):
@@ -185,7 +187,6 @@ def lsh_bucket(
     vec_col,
     num_planes: int = 12,
     dims: int = 64,
-    scale: int = QUANT_SCALE,
     quantized: bool = False,
 ):
     """Sign-random-projection bucket id. 30-bit weights keep the
@@ -195,7 +196,7 @@ def lsh_bucket(
     Pass ``quantized=True`` with a materialized qvec column: embedding
     the quantize subtree in all ``num_planes`` plane expressions
     multiplies analysis/codegen cost for zero runtime benefit."""
-    q = vec_col if quantized else quantize(vec_col, scale)
+    q = vec_col if quantized else quantize(vec_col)
     if quantized and isinstance(q, str):
         q = F.col(q)
     weights = _hyperplane_weights(num_planes, dims)
@@ -422,14 +423,14 @@ def lsh_topk_multiprobe(
     return _topk_cosine(_corpus_side(c, id_col, "bucket"), _query_side(qs, id_col, probes), k, "bucket")
 
 
-def sign_cell(vec_col, n_bits: int = 4, scale: int = QUANT_SCALE):
+def sign_cell(vec_col, n_bits: int = 4):
     """Deterministic cluster cell from the sign bits of the first
     ``n_bits`` quantized dimensions — the axis-aligned special case of
     sign-random-projection LSH (hyperplanes = unit axes, so the bucket
     is SQL-expressible on any engine without shipping weights). Used as
     the blocking key for semantic dedup: 2^n_bits cells partition the
     corpus so the near-dup join is an equi-join."""
-    q = quantize(vec_col, scale)
+    q = quantize(vec_col)
     cell = F.lit(0)
     for p in range(n_bits):
         cell = cell + F.when(q.getItem(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
@@ -476,12 +477,11 @@ def scalar_quantize_stats(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    levels: int = 255,
 ) -> DataFrame:
     """Per-corpus scalar quantization (the int8 compression step of a
     vector index build): each dimension's [min, max] over the corpus
-    maps values to integer codes floor((x-mn)/(mx-mn)·levels), clamped
-    to [0, levels]. Returns per-vector parity evidence — the exact
+    maps values to integer codes floor((x-mn)/(mx-mn)·SQ_LEVELS),
+    clamped to [0, SQ_LEVELS]. Returns per-vector parity evidence — the exact
     integer code sum and the max absolute reconstruction error — rather
     than reassembled arrays (order-free aggregates hash identically
     cross-engine; ``floor`` avoids round-half rule divergence; a
@@ -490,12 +490,12 @@ def scalar_quantize_stats(
     Scale: posexplode fans the corpus ×dims once; the per-dim stats
     table is dims-sized and broadcasts back; codes re-aggregate per
     vector. No driver-side state, no collect."""
-    coded = scalar_codes(df, id_col=id_col, vec_col=vec_col, levels=levels)
+    coded = scalar_codes(df, id_col=id_col, vec_col=vec_col)
     coded = coded.withColumn(
         "err",
         F.abs(
             F.col("x")
-            - (F.col("mn") + F.col("code").cast("double") / levels * (F.col("mx") - F.col("mn")))
+            - (F.col("mn") + F.col("code").cast("double") / SQ_LEVELS * (F.col("mx") - F.col("mn")))
         ),
     )
     return coded.groupBy(id_col).agg(
@@ -508,11 +508,10 @@ def scalar_codes(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    levels: int = 255,
 ) -> DataFrame:
     """The exploded int8 code table behind ``scalar_quantize_stats``:
     (id, dim, x, mn, mx, code) with code = clamp(floor((x−mn)/(mx−mn)·
-    levels)). Shared by the stats/parity query and the quantization-
+    SQ_LEVELS)). Shared by the stats/parity query and the quantization-
     recall eval so both measure the SAME codes. One posexplode, one
     dims-sized broadcast — no collect."""
     exploded = df.select(
@@ -530,10 +529,10 @@ def scalar_codes(
         .otherwise(
             F.least(
                 F.greatest(
-                    F.floor((F.col("x") - F.col("mn")) / (F.col("mx") - F.col("mn")) * levels),
+                    F.floor((F.col("x") - F.col("mn")) / (F.col("mx") - F.col("mn")) * SQ_LEVELS),
                     F.lit(0),
                 ),
-                F.lit(levels),
+                F.lit(SQ_LEVELS),
             )
         )
         .cast("long"),

@@ -1,18 +1,13 @@
-"""Star-schema split + writers.
+"""Star-schema split.
 
 The reference splits the transformed wide table into 1 fact + 5 dimension
 tables by column projection and writes each with ``coalesce(1)``
 (/root/reference/ETL_Pipeline_Batch/load.py:95-196). Column specs are
-preserved verbatim; the writer is re-done for scale:
-
-* no ``coalesce(1)`` by default — single-file output funnels the whole
-  table through one task and is the first thing that falls over at
-  100 TB; partitioned parquet (optionally by ``event_date``) instead;
-* per-table column projection happens BEFORE the write job, so Catalyst
-  prunes the wide table's columns out of the scan for each write;
-* an optional ``dedup_dims=True`` mode produces textbook deduplicated
-  dimensions (the reference's dims are 1:1 vertical partitions of the
-  fact — SURVEY §7.4.2).
+preserved verbatim, and so are the reference's 1:1 semantics: each
+dimension is a vertical partition of the fact, not deduplicated
+(SURVEY §7.4.2). The split is a per-table column projection, so each
+write job's scan reads only its table's columns of the wide frame; the
+writes themselves go through ``sinks.py``.
 """
 
 from __future__ import annotations
@@ -86,38 +81,10 @@ STAR_TABLES: dict[str, list[str]] = {
 }
 
 
-def split_star_schema(df: DataFrame, dedup_dims: bool = False) -> dict[str, DataFrame]:
-    """Project the wide transformed table into the 6 star tables.
-
-    ``dedup_dims=False`` preserves the reference's 1:1 semantics; ``True``
-    deduplicates each dimension on its surrogate key (textbook star)."""
-    out: dict[str, DataFrame] = {}
-    for name, cols in STAR_TABLES.items():
-        t = df.select(*cols)
-        if dedup_dims and name != "fact_call":
-            t = t.dropDuplicates([f"{name}_id"])
-        out[name] = t
-    return out
-
-
-def write_star_schema(
-    tables: dict[str, DataFrame],
-    output_dir: str,
-    single_file: bool = False,
-    partition_by: str | None = None,
-) -> dict[str, int]:
-    """Write each table as parquet; returns written row counts (read-back
-    verified, reference load.py:188-192 / utils/helpers.py:17-23).
-
-    Thin wrapper over the pluggable ``Sink`` interface
-    (etl_seattle_call_data_spark/sinks.py) with the local parquet
-    implementation. ``single_file=True`` reproduces the reference's
-    ``coalesce(1)`` behavior for small/local outputs only."""
-    from etl_seattle_call_data_spark.sinks import ParquetDirSink, write_tables
-
-    return write_tables(
-        tables, ParquetDirSink(output_dir, single_file=single_file, partition_by=partition_by)
-    )
+def split_star_schema(df: DataFrame) -> dict[str, DataFrame]:
+    """Project the wide transformed table into the 6 star tables, one
+    row per fact row in each (the reference's 1:1 semantics)."""
+    return {name: df.select(*cols) for name, cols in STAR_TABLES.items()}
 
 
 def join_star(tables: dict[str, DataFrame]) -> DataFrame:

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
+
 # Tiny per-language stopword sets for the heuristic language-ID.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "is"),
@@ -234,12 +236,6 @@ ROLLHASH_BASE = 1_000_003
 ROLLHASH_MOD = 2_147_483_647
 
 
-def _token_hash_mod(tok: Column) -> Column:
-    """Per-token 60-bit md5 integer reduced mod M — identical hex → int
-    path as operators/dedup.py, so cross-engine exact."""
-    return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long") % ROLLHASH_MOD
-
-
 def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Polynomial (Rabin-Karp) rolling hash over the token stream:
     h = Σ t_i · B^(n−1−i) mod M, folded left-to-right as
@@ -248,7 +244,7 @@ def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     primitive for shift-tolerant chunk matching. Pure per-row map work:
     no shuffle, scales linearly."""
     h = F.aggregate(
-        F.transform(tokens(F.col(text_col)), _token_hash_mod),
+        F.transform(tokens(F.col(text_col)), lambda t: portable_hash_int(t) % ROLLHASH_MOD),
         F.lit(0).cast("long"),
         lambda acc, t: (acc * ROLLHASH_BASE + t) % ROLLHASH_MOD,
     )
@@ -413,7 +409,6 @@ def inverted_index(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     ever assembling the list."""
     from pyspark.sql.window import Window
 
-    from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
     from etl_seattle_call_data_spark.operators.util import memo, spread
 
     toks = tokens(F.col(text_col)).alias("__t")

@@ -7,7 +7,7 @@ here are deliberate scale fixes (SURVEY §4):
 * the TRANSFORMED frame is persisted before the six table writes — the
   reference persists the raw scan, so its 13-step transform re-runs once
   per table (6×);
-* partitioned parquet by default (no ``coalesce(1)``);
+* no ``coalesce(1)``: each write task emits its own parquet file;
 * the warehouse load (Snowflake) is a pluggable sink interface with a
   local parquet implementation — no external services assumed.
 """
@@ -47,8 +47,6 @@ def run_batch_pipeline(
     spark: SparkSession,
     input_csv: str,
     output_dir: str,
-    single_file: bool = False,
-    dedup_dims: bool = False,
     sink: Sink | None = None,
     register_catalog: str | None = None,
 ) -> BatchPipelineResult:
@@ -78,9 +76,9 @@ def run_batch_pipeline(
     )
     # One materialization feeds all six writes (reference re-computes 6×).
     transformed = transformed.persist(StorageLevel.DISK_ONLY)
-    sink = sink if sink is not None else ParquetDirSink(output_dir, single_file=single_file)
+    sink = sink if sink is not None else ParquetDirSink(output_dir)
     try:
-        tables = split_star_schema(transformed, dedup_dims=dedup_dims)
+        tables = split_star_schema(transformed)
         counts = write_tables(tables, sink)
     finally:
         transformed.unpersist()

@@ -24,7 +24,7 @@ from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.operators.util import checkpoint, memo, spread
 from etl_seattle_call_data_spark.plans.queries import register
-from etl_seattle_call_data_spark.plans.shared import _DUCK_TOKENS, _hash_mod
+from etl_seattle_call_data_spark.plans.shared import _DUCK_TOKENS
 from etl_seattle_call_data_spark.sources.registry import load_table
 
 
@@ -3226,7 +3226,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id", F.md5(canonical_text(F.col("text"))).alias("fingerprint")
     )
-    bucket = _hash_mod(F.col("fingerprint"), 10)
+    bucket = hash_bucket(F.col("fingerprint"), 10)
     s = d.select(
         "doc_id",
         "fingerprint",

@@ -14,8 +14,7 @@ stays in that domain's module.
   table.
 * Cross-engine SQL/expression fragments: the quotient+remainder
   double split (``_split_double``) and its ``_sp``/``_du`` dialect
-  shim, the DuckDB tokenizer fragment, the portable md5 bucket hash,
-  integral cents, the decimal(18,6) accumulator type and the
+  shim, the DuckDB tokenizer fragment, integral cents, the decimal(18,6) accumulator type and the
   microseconds-per-day constant. Each one is spelled once so the Spark
   side and the DuckDB oracle of every caller stay bit-identical by
   construction.
@@ -117,13 +116,6 @@ _DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
 _DEC6 = "decimal(18,6)"
-
-
-def _hash_mod(col: Column, buckets: int) -> Column:
-    """Portable md5-prefix hash bucket (operators/sampling.hash_bucket
-    semantics, inlined so the modulus can vary per call)."""
-    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
-    return h % buckets
 
 
 def _split_double(col_name: str) -> str:

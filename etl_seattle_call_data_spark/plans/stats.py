@@ -30,7 +30,6 @@ from etl_seattle_call_data_spark.plans.shared import (
     _SPLIT_SPARK,
     _cents,
     _du,
-    _hash_mod,
     _sp,
     _split_double,
 )
@@ -2548,7 +2547,7 @@ def q_cuped_adjusted_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum(F.when(F.col("ts") < cut, cents)), F.lit(0)).alias("x"),
         F.coalesce(F.sum(F.when(F.col("ts") >= cut, cents)), F.lit(0)).alias("y"),
     ).select(
-        _hash_mod(F.col("user_id"), 2).alias("arm"), "x", "y"
+        hash_bucket(F.col("user_id"), 2).alias("arm"), "x", "y"
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     a = u.groupBy("arm").agg(
@@ -2646,7 +2645,7 @@ def q_cuped_adjusted_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_experiment_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    u = ev.select("user_id").distinct().select(_hash_mod(F.col("user_id"), 2).alias("arm"))
+    u = ev.select("user_id").distinct().select(hash_bucket(F.col("user_id"), 2).alias("arm"))
     c = u.agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("na"),
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("nb"),
@@ -2957,7 +2956,7 @@ def q_covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(pre, ["user_id", "event_type"], "left")
         .select(
             "event_type",
-            _hash_mod(F.col("user_id"), 2).alias("arm"),
+            hash_bucket(F.col("user_id"), 2).alias("arm"),
             F.coalesce(F.col("x"), F.lit(0)).alias("x"),
         )
     )
@@ -3090,7 +3089,7 @@ def q_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).alias("y"),
     ).select(
-        _hash_mod(F.col("user_id"), 2).alias("arm"),
+        hash_bucket(F.col("user_id"), 2).alias("arm"),
         "user_id",
         "score",
         "y",

@@ -474,10 +474,14 @@ def q_knn_graph_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, threshold=-1.0, block_col="label", salt=8
     )
     # cosine_pairs emits each unordered pair once (id_a < id_b); the kNN
-    # graph ranks DIRECTED edges, so mirror the pairs before the window
-    directed = pairs.selectExpr("id_a AS src", "id_b AS dst", "cosine").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS dst", "cosine")
-    )
+    # graph ranks DIRECTED edges, so mirror each pair in-row before the
+    # window: a union of two projections would run the pair join twice
+    def edge(src: str, dst: str):
+        return F.struct(F.col(src).alias("src"), F.col(dst).alias("dst"), F.col("cosine"))
+
+    directed = pairs.select(
+        F.explode(F.array(edge("id_a", "id_b"), edge("id_b", "id_a"))).alias("e")
+    ).select("e.*")
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
     return (
         directed.withColumn("rk", F.row_number().over(w))

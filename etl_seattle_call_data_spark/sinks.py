@@ -6,8 +6,8 @@ star table).
 The reference hard-wires one vendor; here the load target is a small
 ``Sink`` protocol so the same pipeline drives any backend:
 
-* ``ParquetDirSink`` — the local/default implementation (one partitioned
-  parquet directory per table, read-back verified counts, matching
+* ``ParquetDirSink`` — the local/default implementation (one parquet
+  directory per table, read-back verified counts, matching
   load.py:175-196's per-table write+verify loop);
 * ``JdbcSink`` — a generic JDBC loader over the public
   ``DataFrameWriter.jdbc`` API (works with any warehouse exposing a JDBC
@@ -20,7 +20,7 @@ The reference hard-wires one vendor; here the load target is a small
 (reference consumer_cassandra.py:84-163 creates its serving tables with
 ``CREATE ... IF NOT EXISTS``): written tables are registered in the
 Spark catalog as external parquet tables, so downstream consumers query
-them by name via ``spark.sql`` with partition pruning intact.
+them by name via ``spark.sql`` with the scan pruning of a path read.
 """
 
 from __future__ import annotations
@@ -42,49 +42,31 @@ class TableDirSink:
     """Local warehouse: ``<output_dir>/<name>_<format>`` per table, in
     any Spark-native columnar/row format (parquet, orc, json, csv).
 
-    * no ``coalesce(1)`` by default — single-file output funnels the
-      table through one task (the reference's first 100 TB failure mode);
-    * ``partition_by`` partitions the layout when the column exists;
+    * no ``coalesce(1)``, unlike the reference: single-file output
+      funnels the table through one task (the reference's first 100 TB
+      failure mode), so each write task emits its own file;
     * counts are read back from the written files (load verification,
       reference load.py:188-192).
     """
 
-    def __init__(
-        self,
-        output_dir: str,
-        format: str = "parquet",
-        single_file: bool = False,
-        partition_by: str | None = None,
-    ):
+    def __init__(self, output_dir: str, format: str = "parquet"):
         self.output_dir = output_dir
         self.format = format
-        self.single_file = single_file
-        self.partition_by = partition_by
 
     def path_for(self, name: str) -> str:
         return f"{self.output_dir}/{name}_{self.format}"
 
     def write(self, name: str, df: DataFrame) -> int:
         path = self.path_for(name)
-        writer = (
-            (df.coalesce(1) if self.single_file else df).write.mode("overwrite").format(self.format)
-        )
-        if self.partition_by and self.partition_by in df.columns:
-            writer = writer.partitionBy(self.partition_by)
-        writer.save(path)
+        df.write.mode("overwrite").format(self.format).save(path)
         return df.sparkSession.read.format(self.format).load(path).count()
 
 
 class ParquetDirSink(TableDirSink):
     """The default local sink (parquet layout) — see ``TableDirSink``."""
 
-    def __init__(
-        self,
-        output_dir: str,
-        single_file: bool = False,
-        partition_by: str | None = None,
-    ):
-        super().__init__(output_dir, "parquet", single_file, partition_by)
+    def __init__(self, output_dir: str):
+        super().__init__(output_dir, "parquet")
 
 
 class JdbcSink:

@@ -88,16 +88,16 @@ def ingest_corpus_to_documents(
     in_path: str,
     out_path: str,
     doc_per_file: bool = False,
-    target_file_bytes: int = 128 << 20,
 ) -> int:
     """Raw text tree → deduplicated ``documents`` parquet: ingest,
     exact-dedup on content hash (same text+source ingested twice keeps
     one row — content-addressed ids make this a plain distinct), and
-    write sized files. Returns the row count written."""
+    write files of about 128 MB of text each. Returns the row count
+    written."""
     docs = read_text_corpus(spark, in_path, doc_per_file=doc_per_file).dropDuplicates(
         ["doc_id"]
     )
     est_bytes = docs.agg(F.sum("n_chars")).first()[0] or 0
-    n_files = max(1, int(est_bytes // target_file_bytes) + 1)
+    n_files = max(1, int(est_bytes // (128 << 20)) + 1)
     docs.repartition(n_files).write.mode("overwrite").parquet(out_path)
     return spark.read.parquet(out_path).count()

@@ -9,17 +9,17 @@ Re-expresses the reference's two-pass safe extraction
    UTF-8, empty-string→null;
 3. optional row cap — the reference passed a ``maxRows`` CSV option,
    which vanilla Spark silently ignores (SURVEY §7.4.5); the working
-   equivalent is ``df.limit(n)``;
-4. optional DISK_ONLY persist of the scan (extract.py:76). NOTE the
-   reference persists the RAW scan, which makes its 13-step transform
-   recompute once per star-table write; the pipeline orchestrator here
-   persists the TRANSFORMED frame instead (SURVEY §4.2).
+   equivalent is ``df.limit(n)``.
+
+The reference also persists the RAW scan DISK_ONLY (extract.py:76),
+which makes its 13-step transform recompute once per star-table write;
+the pipeline orchestrator here persists the TRANSFORMED frame instead
+(SURVEY §4.2), so the scan is never persisted.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 
 def read_csv_sampled(
@@ -27,7 +27,6 @@ def read_csv_sampled(
     path: str,
     sample_ratio: float = 0.01,
     max_rows: int | None = None,
-    persist_disk: bool = False,
 ) -> DataFrame:
     schema = (
         spark.read.option("header", "true")
@@ -49,17 +48,13 @@ def read_csv_sampled(
     )
     if max_rows is not None:
         df = df.limit(max_rows)
-    if persist_disk:
-        df = df.persist(StorageLevel.DISK_ONLY)
     return df
 
 
-def read_csv_safe(
-    spark: SparkSession, path: str, retry_sample_ratio: float = 0.05, retry_max_rows: int = 500_000
-) -> DataFrame:
+def read_csv_safe(spark: SparkSession, path: str) -> DataFrame:
     """Retry ladder (reference extract.py:102-119): defaults first, then a
-    larger inference sample with a bounded row count."""
+    5% inference sample with a 500k row cap."""
     try:
         return read_csv_sampled(spark, path)
     except Exception:
-        return read_csv_sampled(spark, path, sample_ratio=retry_sample_ratio, max_rows=retry_max_rows)
+        return read_csv_sampled(spark, path, sample_ratio=0.05, max_rows=500_000)

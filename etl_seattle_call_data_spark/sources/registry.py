@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # Columns written as parquet TIMESTAMP(NANOS) — Spark can only read these
 # as raw nanosecond longs (spark.sql.legacy.parquet.nanosAsLong); we convert
 # to microsecond timestamps by truncation, matching DuckDB's ns→µs scan.

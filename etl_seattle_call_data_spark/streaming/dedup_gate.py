@@ -129,9 +129,6 @@ def near_dedup_writer(
     write_unique: Callable[[DataFrame, int], None],
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
 ) -> Callable[[DataFrame, int], None]:
     """NEAR-dup variant of :func:`dedup_writer`: a document is dropped
     when ANY of its MinHash band keys (operators/dedup.minhash_band_keys)
@@ -162,10 +159,7 @@ def near_dedup_writer(
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
         batch = batch.persist()
-        bands = minhash_band_keys(
-            batch, num_hashes=num_hashes, rows_per_band=rows_per_band,
-            id_col=id_col, text_col=text_col, n=shingle_n,
-        ).persist()
+        bands = minhash_band_keys(batch, id_col=id_col, text_col=text_col).persist()
         try:
             # ids hitting the cross-batch store on any band — probe via
             # the bucket-pruned read (scan volume = touched/n_buckets of

@@ -7,8 +7,8 @@ per SURVEY §2.7/§4:
 * checkpointLocation is REQUIRED (the reference configures none, so a
   restart loses offsets — T4);
 * no per-epoch ``count()``/``show()`` in the hot path;
-* watermarked event-time window aggregation is provided (T6 — absent in
-  the reference, implied by its serving queries);
+* watermarked tumbling event-time window aggregation is provided (T6 —
+  absent in the reference, implied by its serving queries);
 * sources are pluggable: file source for tests, Kafka in production
   (same downstream plan; ``readStream.format("kafka")`` + the
   ``decode_json_payload`` transform).
@@ -84,20 +84,13 @@ def windowed_counts(
     events: DataFrame,
     ts_col: str = "ts",
     key_col: str = "event_type",
-    window_duration: str = "10 minutes",
-    slide_duration: str | None = None,
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Watermarked tumbling/sliding event-time aggregation (T6): the
+    """Watermarked 10-minute tumbling event-time aggregation (T6): the
     streaming form of the serving query 'counts by type' (A3)."""
-    win = (
-        F.window(F.col(ts_col), window_duration, slide_duration)
-        if slide_duration
-        else F.window(F.col(ts_col), window_duration)
-    )
     return (
         events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("win"), F.col(key_col))
+        .groupBy(F.window(F.col(ts_col), "10 minutes").alias("win"), F.col(key_col))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -106,24 +99,6 @@ def windowed_counts(
             "n",
             "total_value",
         )
-    )
-
-
-def run_windowed_stream(
-    events: DataFrame,
-    checkpoint_dir: str,
-    query_name: str = "windowed_counts",
-    **window_kwargs,
-) -> StreamingQuery:
-    """Windowed aggregation to an in-memory sink (tests/serving preview).
-    Append mode: rows emit once the watermark passes the window end."""
-    agg = windowed_counts(events, **window_kwargs)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
 
 

@@ -13,8 +13,8 @@ from etl_seattle_call_data_spark.operators.star_schema import (
     STAR_TABLES,
     join_star,
     split_star_schema,
-    write_star_schema,
 )
+from etl_seattle_call_data_spark.sinks import ParquetDirSink, register_star_tables, write_tables
 from etl_seattle_call_data_spark.sources.csv_source import read_csv_sampled
 from tests.fixtures import write_fixture_csv
 
@@ -116,7 +116,7 @@ def test_star_split_and_write(transformed, spark, tmp_path):
     tables = split_star_schema(transformed)
     for name, cols in STAR_TABLES.items():
         assert tables[name].columns == cols
-    counts = write_star_schema(tables, str(tmp_path / "star"))
+    counts = write_tables(tables, ParquetDirSink(str(tmp_path / "star")))
     assert set(counts) == set(STAR_TABLES)
     assert all(c == 7 for c in counts.values())
     # round-trip: re-joining the star tables reproduces the fact row count
@@ -170,8 +170,6 @@ def test_full_pipeline_with_catalog_registration(spark, tmp_path):
     ).first().n
     assert joined == 7
     # idempotent bootstrap: IF NOT EXISTS re-registration is a no-op
-    from etl_seattle_call_data_spark.sinks import ParquetDirSink, register_star_tables
-
     register_star_tables(spark, ParquetDirSink(str(tmp_path / "out")), database="serving_test")
 
 

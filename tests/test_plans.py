@@ -114,6 +114,134 @@ def test_plans_live_in_domain_modules():
     assert offenders == []
 
 
+# Defaulted parameters no caller sets that stay: they bind to the
+# caller's data or deployment, not to the engine's behaviour.
+_BINDINGS = {
+    ("get_spark", "master"): "cluster URL of the deployment",
+    ("kafka_stream", "starting_offsets"): "Kafka deployment setting",
+    ("file_json_stream", "max_files_per_trigger"): "stream trigger",
+    ("run_upsert_stream", "trigger_seconds"): "stream trigger",
+    ("dedup_stream", "watermark"): "watermark of the caller's event time",
+    ("sessionized_counts", "watermark"): "watermark of the caller's event time",
+    ("running_user_stats", "idle_timeout_ms"): "state timeout of the caller's sessions",
+    ("apply_changes", "delete_op"): "op code of the caller's change feed",
+    ("parse_mixed_timestamp", "date_part"): "layout of the caller's timestamps",
+    ("read_text_corpus", "source_depth"): "layout of the caller's corpus tree",
+    ("ingest_corpus_to_documents", "doc_per_file"): "layout of the caller's corpus files",
+    ("with_ingest_timestamp", "col_name"): "column name",
+    ("mint_surrogate_keys", "natural_key"): "column name",
+    ("clean_duration_fields", "columns"): "column names",
+    ("FileStreamFeeder", "stamp_field"): "field name of the caller's records",
+    ("KafkaFeeder", "stamp_field"): "field name of the caller's records",
+    ("HttpJsonSource", "limit_param"): "URL query parameter of the endpoint",
+    ("HttpJsonSource", "offset_param"): "URL query parameter of the endpoint",
+    ("HttpJsonSource", "timeout_s"): "network setting of the endpoint",
+    ("JdbcSink", "mode"): "save mode of the caller's warehouse",
+    ("JdbcSink", "table_prefix"): "table naming of the caller's warehouse",
+    ("JdbcSink", "properties"): "connection properties of the caller's warehouse",
+    ("write_bucketed", "format"): "table format of the caller's catalog",
+}
+
+
+def _unset_options(repo) -> list[str]:
+    """Defaulted parameters of functions (and classes, by constructor)
+    under the package, ``plans/`` aside, that no call in the package,
+    ``tools/``, ``perfbench/`` or ``tests/`` sets by keyword or position.
+    Calls match definitions by name. A call that passes the enclosing
+    function's own defaulted parameter (closures included) sets the
+    callee's only if that parameter is set in turn; ``**kwargs`` counts
+    as one parameter, set by any keyword the signature does not name."""
+    import ast
+
+    pkg = repo / "etl_seattle_call_data_spark"
+    files = sorted(p for d in (pkg, repo / "tools", repo / "perfbench", repo / "tests")
+                   for p in d.rglob("*.py"))
+    defs, calls = {}, []  # name -> [signature]; (name, call, enclosing signatures)
+
+    def signature(fn, name, path, method):
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        pos = [x.arg for x in positional][1 if method else 0:]
+        dflt = {x.arg for x in positional[len(positional) - len(a.defaults):]}
+        dflt |= {x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+        kw = "**" + a.kwarg.arg if a.kwarg else None
+        return {"name": name, "where": f"{path.relative_to(repo)}:{fn.lineno}", "pos": pos,
+                "params": {x.arg for x in positional + a.kwonlyargs},
+                "defaulted": dflt | ({kw} if kw else set()), "kwargs": kw}
+
+    def visit(node, path, stack, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, path, stack, child)
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(getattr(d, "id", None) == "staticmethod" for d in child.decorator_list)
+                name = cls.name if cls and child.name == "__init__" else child.name
+                sig = signature(child, name, path, cls is not None and not static)
+                defs.setdefault(name, []).append(sig)
+                visit(child, path, stack + [sig], None)
+            else:
+                if isinstance(child, ast.Call):
+                    name = getattr(child.func, "id", None) or getattr(child.func, "attr", None)
+                    calls.append((name, child, stack))
+                visit(child, path, stack, cls)
+
+    for p in files:
+        visit(ast.parse(p.read_text()), p, [], None)
+
+    def source(value, stack):
+        """The enclosing defaulted parameter ``value`` forwards, else None."""
+        for sig in reversed(stack):
+            if isinstance(value, ast.Name) and value.id in sig["params"]:
+                return (id(sig), value.id) if value.id in sig["defaulted"] else None
+            if isinstance(value, ast.Starred) and sig["kwargs"] == "**" + getattr(value.value, "id", ""):
+                return id(sig), sig["kwargs"]
+        return None
+
+    sources = {}  # (id(signature), param) -> [None (a real value) or forwarded (id, param)]
+    for name, call, stack in calls:
+        for sig in defs.get(name, []):
+            set_ = [(p, v) for p, v in zip(sig["pos"], call.args) if not isinstance(v, ast.Starred)]
+            for kw in call.keywords:
+                if kw.arg is None:
+                    set_ += [(p, ast.Starred(kw.value)) for p in sig["defaulted"]]
+                elif kw.arg in sig["params"]:
+                    set_.append((kw.arg, kw.value))
+                elif sig["kwargs"]:
+                    set_.append((sig["kwargs"], kw.value))
+            for param, value in set_:
+                if param in sig["defaulted"]:
+                    sources.setdefault((id(sig), param), []).append(source(value, stack))
+
+    is_set = {(id(sig), p) for sigs in defs.values() for sig in sigs for p in sig["defaulted"]
+              if (sig["name"], p) in _BINDINGS}
+    grew = True
+    while grew:
+        before = len(is_set)
+        is_set |= {k for k, srcs in sources.items() if any(s is None or s in is_set for s in srcs)}
+        grew = len(is_set) > before
+
+    def exempt(param):
+        return param.endswith(("_col", "_cols")) or param in ("key", "id_a", "id_b")
+
+    return sorted(
+        f"{sig['where']} {sig['name']}({p})"
+        for sigs in defs.values() for sig in sigs
+        if sig["where"].startswith(pkg.name + "/") and not sig["where"].startswith(pkg.name + "/plans/")
+        for p in sig["defaulted"]
+        if not exempt(p) and (id(sig), p) not in is_set
+    )
+
+
+def test_every_option_has_a_caller():
+    """A defaulted parameter exists only when some caller sets it: one
+    that no caller sets is a constant with a dead configuration space the
+    oracle sweeps and the benchmark never run. Column names and the
+    deployment bindings in ``_BINDINGS`` are exempt."""
+    import pathlib
+
+    assert _unset_options(pathlib.Path(__file__).resolve().parent.parent) == []
+
+
 def test_q3_broadcasts_customer(spark):
     """The 3-way join's small side (customer) must be an explicit
     broadcast — consistent with the sibling star queries, not reliant on
@@ -486,6 +614,15 @@ def test_knn_graph_single_block_shuffle(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" not in plan  # blocks join via (broadcast) hash
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
+
+
+def test_knn_graph_runs_its_pair_join_once(spark):
+    """Mirroring the pairs into directed edges reuses the one salted
+    pair join: a union of two projections of the pair frame would plan
+    the join (and every dot product) twice."""
+    df = REGISTRY["knn_graph_blocked"].spark(spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join Inner") == 1
 
 
 def test_join_strategy_hints_are_honored(spark):
