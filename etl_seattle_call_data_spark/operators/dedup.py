@@ -31,6 +31,7 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 → fits a signed 64-bit integer
 SHINGLE_N = 3  # words per shingle
 MINHASH_HASHES = 8  # MinHash signature length
 MINHASH_ROWS_PER_BAND = 2  # LSH band width: 4 bands of 2 rows
+PASSJOIN_K = 3  # edit-distance bound of passjoin_candidate_pairs
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -576,15 +577,14 @@ def cluster_representatives(
 def passjoin_candidate_pairs(
     names: DataFrame,
     string_col: str,
-    k: int = 3,
     block_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Edit-distance candidate pairs via PassJoin chunk keys (Li, Deng,
-    Feng — SIGMOD'11 partition scheme): each string splits into k+1
-    even chunks; if ed(a, b) <= k then at least one of a's chunks is
-    untouched by any edit and therefore appears in b VERBATIM at a
-    position shifted by at most k (the net insert/delete drift before
-    it). Candidates come from an equi-join on
+    """Edit-distance (k = ``PASSJOIN_K``) candidate pairs via PassJoin
+    chunk keys (Li, Deng, Feng — SIGMOD'11 partition scheme): each
+    string splits into k+1 even chunks; if ed(a, b) <= k then at least
+    one of a's chunks is untouched by any edit and therefore appears in
+    b VERBATIM at a position shifted by at most k (the net
+    insert/delete drift before it). Candidates come from an equi-join on
     (block_cols..., chunk_index, source_length, substring) — content
     keys whose cardinality scales with the corpus, never a fixed block
     space.
@@ -600,6 +600,7 @@ def passjoin_candidate_pairs(
 
     Returns distinct candidate pairs (name_a, name_b) with
     name_a < name_b; the caller applies the levenshtein verify."""
+    k = PASSJOIN_K
     m = k + 1
     # The input feeds BOTH the build and probe branches below, and
     # callers typically hand us a shuffle distinct — Catalyst does not

@@ -24,6 +24,8 @@ from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
 
+STRATIFIED_DENOM = 10  # stratified_sample keeps ceil(n / 10) rows per stratum
+
 
 def hash_bucket(key_col, buckets: int):
     """Engine-portable deterministic bucket in [0, buckets)."""
@@ -40,9 +42,8 @@ def stratified_sample(
     df: DataFrame,
     stratum_col: str,
     key_col: str,
-    fraction_denom: int = 10,
 ) -> DataFrame:
-    """EXACT per-stratum sampling: ceil(n_stratum / fraction_denom) rows
+    """EXACT per-stratum sampling: ceil(n_stratum / STRATIFIED_DENOM) rows
     from every stratum, chosen as the lowest hash values (deterministic,
     engine-portable). Unlike ``sampleBy`` this guarantees each stratum's
     sampled count exactly and never returns an empty stratum.
@@ -57,7 +58,7 @@ def stratified_sample(
         df.withColumn("__h", h)
         .withColumn("__rn", F.row_number().over(w))
         .withColumn("__n", F.count(F.lit(1)).over(wc))
-        .filter(F.col("__rn") <= F.expr(f"(__n + {fraction_denom - 1}) DIV {fraction_denom}"))
+        .filter(F.col("__rn") <= F.expr(f"(__n + {STRATIFIED_DENOM - 1}) DIV {STRATIFIED_DENOM}"))
         .drop("__h", "__rn", "__n")
     )
 

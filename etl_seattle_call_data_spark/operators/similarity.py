@@ -30,6 +30,9 @@ from etl_seattle_call_data_spark.operators.util import memo, spread as _spread
 # The cross-engine contract: every vector oracle hard-codes ``* 1000``.
 QUANT_SCALE = 1000
 SQ_LEVELS = 255  # scalar quantization codes 0..255 (int8)
+MULTIPROBE_K = 5  # lsh_topk_multiprobe: neighbours per query
+MULTIPROBE_PLANES = 8  # lsh_topk_multiprobe: hyperplanes, so 8 probes + the home bucket
+SIGN_CELL_BITS = 4  # sign_cell: 2^4 = 16 cells
 
 
 def quantize(vec_col):
@@ -403,12 +406,11 @@ def lsh_probe_buckets(bucket_col, num_planes: int = 8) -> F.Column:
 def lsh_topk_multiprobe(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN top-k with Hamming-1 multi-probe: bucket corpus once, explode
+    """ANN top-``MULTIPROBE_K`` with Hamming-1 multi-probe over
+    ``MULTIPROBE_PLANES`` hyperplanes: bucket corpus once, explode
     each query into its probe list, equi-join on the probed bucket, and
     exact re-rank over the union of candidates.
 
@@ -418,21 +420,23 @@ def lsh_topk_multiprobe(
     (big side) still shuffles once on its bucket; only the tiny query
     side multiplies by planes+1.
     """
-    c, qs = _lsh_bucketed(corpus, queries, num_planes, vec_col)
-    probes = F.explode(lsh_probe_buckets("bucket", num_planes)).alias("bucket")
-    return _topk_cosine(_corpus_side(c, id_col, "bucket"), _query_side(qs, id_col, probes), k, "bucket")
+    c, qs = _lsh_bucketed(corpus, queries, MULTIPROBE_PLANES, vec_col)
+    probes = F.explode(lsh_probe_buckets("bucket", MULTIPROBE_PLANES)).alias("bucket")
+    return _topk_cosine(
+        _corpus_side(c, id_col, "bucket"), _query_side(qs, id_col, probes), MULTIPROBE_K, "bucket"
+    )
 
 
-def sign_cell(vec_col, n_bits: int = 4):
+def sign_cell(vec_col):
     """Deterministic cluster cell from the sign bits of the first
-    ``n_bits`` quantized dimensions — the axis-aligned special case of
-    sign-random-projection LSH (hyperplanes = unit axes, so the bucket
-    is SQL-expressible on any engine without shipping weights). Used as
-    the blocking key for semantic dedup: 2^n_bits cells partition the
-    corpus so the near-dup join is an equi-join."""
+    ``SIGN_CELL_BITS`` quantized dimensions — the axis-aligned special
+    case of sign-random-projection LSH (hyperplanes = unit axes, so the
+    bucket is SQL-expressible on any engine without shipping weights).
+    Used as the blocking key for semantic dedup: 2^SIGN_CELL_BITS cells
+    partition the corpus so the near-dup join is an equi-join."""
     q = quantize(vec_col)
     cell = F.lit(0)
-    for p in range(n_bits):
+    for p in range(SIGN_CELL_BITS):
         cell = cell + F.when(q.getItem(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return cell.cast("int")
 
@@ -440,7 +444,6 @@ def sign_cell(vec_col, n_bits: int = 4):
 def semantic_dedup(
     df: DataFrame,
     threshold: float,
-    n_bits: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     salt: int = 8,
@@ -459,7 +462,7 @@ def semantic_dedup(
     Scale: candidate generation is the salted in-cell equi-join of
     cosine_pairs (never all-pairs); the keep flag is one left join of
     the id set against the distinct dropped ids."""
-    cells = df.withColumn("cell", sign_cell(vec_col, n_bits))
+    cells = df.withColumn("cell", sign_cell(vec_col))
     pairs = cosine_pairs(
         cells, threshold, block_col="cell", id_col=id_col, vec_col=vec_col, salt=salt
     )

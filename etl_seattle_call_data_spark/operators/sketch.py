@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+CMS_DEPTH = 4  # hash rows (seeds) of the count-min sketch
+CMS_WIDTH = 1024  # buckets per row
+
 
 def portable_hash_int(col, salt: str = "") -> F.Column:
     """Engine-portable 60-bit integer hash: first 15 hex chars of md5.
@@ -35,16 +38,14 @@ def cms_build(
     keyed_counts: DataFrame,
     key_col: str,
     count_col: str,
-    depth: int = 4,
-    width: int = 1024,
 ) -> DataFrame:
     """(seed, bucket, total) sketch table from an exact per-key count
-    table. depth×width rows — tiny, mergeable by summing totals."""
+    table. CMS_DEPTH×CMS_WIDTH rows — tiny, mergeable by summing totals."""
     rows = None
-    for s in range(depth):
+    for s in range(CMS_DEPTH):
         r = keyed_counts.select(
             F.lit(s).alias("seed"),
-            (portable_hash_int(key_col, salt=str(s)) % width).alias("bucket"),
+            (portable_hash_int(key_col, salt=str(s)) % CMS_WIDTH).alias("bucket"),
             F.col(count_col).alias("__c"),
         )
         rows = r if rows is None else rows.unionAll(r)
@@ -55,8 +56,6 @@ def cms_estimate(
     sketch: DataFrame,
     probes: DataFrame,
     key_col: str,
-    depth: int = 4,
-    width: int = 1024,
 ) -> DataFrame:
     """min-over-seeds estimate for each probe key. The probe set is
     small by construction (you look up specific keys), so both the
@@ -64,12 +63,12 @@ def cms_estimate(
     keyed = probes.select(
         F.col(key_col),
         *[
-            (portable_hash_int(key_col, salt=str(s)) % width).alias(f"__b{s}")
-            for s in range(depth)
+            (portable_hash_int(key_col, salt=str(s)) % CMS_WIDTH).alias(f"__b{s}")
+            for s in range(CMS_DEPTH)
         ],
     )
     est = None
-    for s in range(depth):
+    for s in range(CMS_DEPTH):
         e = keyed.select(
             F.col(key_col), F.lit(s).alias("seed"), F.col(f"__b{s}").alias("bucket")
         )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import cdc
+from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -112,8 +113,6 @@ def q_scd2_priority_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_incremental_mv_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import cdc
-
     ev = load_table(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-20").cast("timestamp")
     day = F.date_trunc("day", F.col("ts")).alias("day")
@@ -710,8 +709,6 @@ _GAP_TOPK = 20
     """,
 )
 def q_sequence_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
-
     keys = (
         load_table(spark, sf_dir, "events")
         .select("event_type", F.col("event_id").alias("k"))
@@ -795,8 +792,6 @@ _WM_LATE_US = 6 * 3600 * 1000000  # 6h watermark
     """,
 )
 def q_late_event_watermark_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",

@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_seattle_call_data_spark.operators import dedup, dq, multimodal, sampling, text
-from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
+from etl_seattle_call_data_spark.operators import dedup, dq, multimodal, sampling, sketch, text
+from etl_seattle_call_data_spark.operators.ranking import equidepth_bucket, two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.operators.util import checkpoint, memo, spread
 from etl_seattle_call_data_spark.plans.queries import register
@@ -437,11 +437,8 @@ _FEATURE_HASH_BUCKETS = 8
 )
 def q_doc_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    from etl_seattle_call_data_spark.operators.text import tokens
-    from etl_seattle_call_data_spark.operators.util import spread as _spread
-
-    tok = _spread(docs).select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
+    tok = spread(docs).select(
+        "doc_id", F.explode(text.tokens(F.col("text"))).alias("tok")
     ).select(
         "doc_id",
         (
@@ -821,8 +818,6 @@ def q_doc_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "source", "doc_id", text.token_count("text").cast("bigint").alias("n_tokens")
@@ -931,8 +926,6 @@ def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comp once and drops two exchanges + two SortMergeJoins from the
     # final stage. Window partitions are near-dup clusters (bounded
     # membership), never corpus-scale.
-    from pyspark.sql.window import Window
-
     w_rep = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
     )
@@ -972,8 +965,6 @@ def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_corpus_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import sampling
-
     docs = load_table(spark, sf_dir, "documents")
     return (
         sampling.hash_split(docs, "doc_id")
@@ -1119,8 +1110,6 @@ def q_doc_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_corpus_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import sampling
-
     docs = load_table(spark, sf_dir, "documents")
     return sampling.temperature_weights(docs, "source", budget=10000)
 
@@ -1160,17 +1149,15 @@ _CMS_HASH = "('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || term), 1, 15)):
     """,
 )
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import sketch
-
     docs = load_table(spark, sf_dir, "documents")
     inst = docs.select(F.explode(text.tokens(F.col("text"))).alias("term"))
     counts = memo(
         "cms_token_counts",
         lambda: inst.groupBy("term").agg(F.count(F.lit(1)).alias("exact_count")),
     )
-    cms = sketch.cms_build(counts, "term", "exact_count", depth=4, width=1024)
+    cms = sketch.cms_build(counts, "term", "exact_count")
     probes = counts.orderBy(F.desc("exact_count"), F.asc("term")).limit(10)
-    est = sketch.cms_estimate(cms, probes.select("term"), "term", depth=4, width=1024)
+    est = sketch.cms_estimate(cms, probes.select("term"), "term")
     return (
         probes.join(est, "term")
         .select(
@@ -1649,8 +1636,6 @@ def q_source_divergence_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sample_weighted_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.sampling import hash_bucket
-
     docs = load_table(spark, sf_dir, "documents")
     mx = docs.agg(F.max("n_chars").cast("bigint").alias("max_chars"))
     return (
@@ -1700,8 +1685,6 @@ def q_sample_weighted_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_bpe_first_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(text.tokens("text")).alias("t"))
@@ -1769,8 +1752,6 @@ def q_bpe_first_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_length_distribution_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.sampling import hash_bucket
-
     docs = load_table(spark, sf_dir, "documents")
     b = docs.select(
         "doc_id",
@@ -1838,8 +1819,6 @@ def q_length_distribution_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_doc_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     docs = load_table(spark, sf_dir, "documents")
     toks = text.tokens("text")
     lens = F.transform(toks, lambda t: F.length(t).cast("long"))
@@ -1915,9 +1894,6 @@ def q_doc_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import dq, text
-    from etl_seattle_call_data_spark.operators.dedup import canonical_text
-
     docs = load_table(spark, sf_dir, "documents")
     n_tok = text.token_count("text")
     base = docs.agg(
@@ -1929,7 +1905,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(n_tok >= 20, 1).otherwise(0)).cast("bigint").alias("n_quality"),
     )
     uniq = docs.agg(
-        F.count_distinct(F.md5(canonical_text(F.col("text"))))
+        F.count_distinct(F.md5(text.canonical_text(F.col("text"))))
         .cast("bigint")
         .alias("n_unique")
     )
@@ -2053,14 +2029,12 @@ def q_skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
     )
     coarse = F.expr("n_chars DIV 256")
     spec = ("rk", ["n_chars", "doc_id"], coarse, F.lit(1), "sum", False)
-    ranked = ranking.two_phase_scan(docs, ["source"], [spec])
+    ranked = two_phase_scan(docs, ["source"], [spec])
     ref = ranked.groupBy("rk").agg(
         F.expr("CAST(SUM(n_chars) * 1000000 DIV COUNT(*) AS BIGINT)").alias(
             "ref_fp"
@@ -2357,8 +2331,6 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy(F.col("n_chars").alias("score")).agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
@@ -2369,7 +2341,7 @@ def q_classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("nn"),
     )
     spec = ("neg_below", ["score"], F.expr("score DIV 256"), F.col("nn"), "sum", True)
-    cum = ranking.two_phase_scan(s, [], [spec])
+    cum = two_phase_scan(s, [], [spec])
     agg = cum.agg(
         F.sum(F.col("np") * F.col("neg_below")).cast("bigint").alias("concordant"),
         F.sum(F.col("np") * F.col("nn")).cast("bigint").alias("tied"),
@@ -2427,8 +2399,6 @@ def q_classifier_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_exact_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     docs = load_table(spark, sf_dir, "documents")
     h = docs.select(
         "source",
@@ -2447,7 +2417,7 @@ def q_exact_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     coarse = F.expr("hv DIV 72057594037927936")  # 2^56: 16 hash buckets
     spec = ("rk", ["hv", "doc_id"], coarse, F.lit(1), "sum", False)
-    j = ranking.two_phase_scan(h, ["source"], [spec]).withColumnRenamed("rk_total", "n")
+    j = two_phase_scan(h, ["source"], [spec]).withColumnRenamed("rk_total", "n")
     is_test = F.col("rk") <= F.expr("n DIV 5")
     return j.groupBy("source").agg(
         F.max("n").cast("bigint").alias("n_docs"),
@@ -2489,18 +2459,16 @@ def q_exact_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_score_calibration_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("n_chars").alias("score"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
     )
     spec = ("rnk", ["score", "doc_id"], F.expr("score DIV 256"), F.lit(1), "sum", False)
-    ranked = ranking.two_phase_scan(docs, [], [spec])
+    ranked = two_phase_scan(docs, [], [spec])
     return (
         ranked.groupBy(
-            ranking.equidepth_bucket(F.col("rnk"), F.col("rnk_total"), 10).alias(
+            equidepth_bucket(F.col("rnk"), F.col("rnk_total"), 10).alias(
                 "decile"
             )
         )
@@ -2590,11 +2558,9 @@ _SSR_MIN_RUN = 16  # report pairs sharing a run of >= this many tokens
     """,
 )
 def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text as text_ops
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
-        "doc_id", text_ops.tokens("text").alias("t")
+        "doc_id", text.tokens("text").alias("t")
     ).filter(F.size("t") >= _SSR_W)
     # The positional shingle-hash table feeds THREE consumers (the df
     # cap + both sides of the pair join) — persist it once per corpus
@@ -2705,10 +2671,8 @@ _BM25_TERMS = ("join", "vector", "spark")
     """,
 )
 def q_bm25_rank_fixed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text as text_ops
-
     docs = load_table(spark, sf_dir, "documents")
-    tk = docs.select("doc_id", text_ops.tokens("text").alias("t"))
+    tk = docs.select("doc_id", text.tokens("text").alias("t"))
     dl = tk.select("doc_id", F.size("t").cast("bigint").alias("dl"))
     n = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -2800,7 +2764,7 @@ def q_naive_bayes_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("t"),
+        F.explode(text.tokens("text")).alias("t"),
     ).select("doc_id", "lang", "source", F.lower("t").alias("tok"))
     vocab = tok.groupBy("tok").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
@@ -2883,7 +2847,7 @@ def q_naive_bayes_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    toks = text.tokens(F.lower("text"))
     big = (
         docs.select("doc_id", "lang", "source", toks.alias("t"))
         .filter(F.size("t") >= 2)
@@ -2977,7 +2941,7 @@ def q_token_gini_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("t"),
+        F.explode(text.tokens("text")).alias("t"),
     ).select("source", F.lower("t").alias("tok"))
     counts = tok.groupBy("source", "tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -3037,8 +3001,6 @@ def _duck_containment(max_df: int) -> str:
     _duck_containment(max_df=100),
 )
 def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import dedup
-
     docs = load_table(spark, sf_dir, "documents")
     return dedup.containment_pairs(docs, threshold=0.8, max_df=100)
 
@@ -3116,12 +3078,10 @@ def _bpe_round_sql(prev: str, out_v: str, out_t: str, rnd: int) -> str:
     """,
 )
 def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
-            F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("t")
+            F.explode(text.tokens("text")).alias("t")
         )
         .select(F.lower("t").alias("w"))
         .filter(F.col("w").rlike("^[a-z]+$") & (F.length("w") >= 2))
@@ -3220,11 +3180,9 @@ def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.text import canonical_text
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
-        "doc_id", F.md5(canonical_text(F.col("text"))).alias("fingerprint")
+        "doc_id", F.md5(text.canonical_text(F.col("text"))).alias("fingerprint")
     )
     bucket = hash_bucket(F.col("fingerprint"), 10)
     s = d.select(
@@ -3298,13 +3256,11 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_weighted_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.text import canonical_text, token_count
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
-        token_count(F.col("text")).cast("bigint").alias("n_tok"),
-        F.md5(canonical_text(F.col("text"))).alias("fingerprint"),
+        text.token_count(F.col("text")).cast("bigint").alias("n_tok"),
+        F.md5(text.canonical_text(F.col("text"))).alias("fingerprint"),
     )
     sized = d.select(
         "source",
@@ -3390,11 +3346,9 @@ _RAKE_STOP_SQL = "(" + ", ".join(f"'{w}'" for w in _RAKE_STOPWORDS) + ")"
     """,
 )
 def q_doc_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos0", "tok")
+        "doc_id", F.posexplode(text.tokens(F.col("text"))).alias("pos0", "tok")
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
@@ -3501,13 +3455,11 @@ _FERTILITY_ORACLE = f"""
     _FERTILITY_ORACLE,
 )
 def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     docs = load_table(spark, sf_dir, "documents")
     words_src = (
         docs.select(
             "source",
-            F.explode(F.filter(F.split("text", " "), lambda x: x != "")).alias("t"),
+            F.explode(text.tokens("text")).alias("t"),
         )
         .select("source", F.lower("t").alias("w"))
         .filter(F.col("w").rlike("^[a-z]+$") & (F.length("w") >= 2))
@@ -3611,8 +3563,6 @@ def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def q_language_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     docs = load_table(spark, sf_dir, "documents")
     preds = text.language_id(docs).select("doc_id", "pred_lang")
     cm = (
@@ -3677,10 +3627,8 @@ def q_language_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_source_ngram_exclusivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text")).alias("t")
+    toks = text.tokens(F.col("text")).alias("t")
     base = docs.select("source", toks)
     grams = F.when(
         F.size(F.col("t")) >= 3,
@@ -3753,13 +3701,11 @@ def q_source_ngram_exclusivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_bag_of_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.text import canonical_text, tokens
-
     docs = load_table(spark, sf_dir, "documents")
-    canon = canonical_text(F.col("text"))
+    canon = text.canonical_text(F.col("text"))
     f = docs.select(
         "doc_id",
-        F.md5(F.array_join(F.sort_array(tokens(canon)), " ")).alias("bag_fp"),
+        F.md5(F.array_join(F.sort_array(text.tokens(canon)), " ")).alias("bag_fp"),
         F.md5(canon).alias("exact_fp"),
     )
     g = f.groupBy("bag_fp").agg(
@@ -3914,11 +3860,9 @@ _BP_TOPK = 15
     """,
 )
 def q_boilerplate_prefix_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators.text import canonical_text
-
     docs = load_table(spark, sf_dir, "documents")
     p = docs.select(
-        F.substring(canonical_text(F.col("text")), 1, _BP_PREFIX).alias("prefix"),
+        F.substring(text.canonical_text(F.col("text")), 1, _BP_PREFIX).alias("prefix"),
         "source",
     )
     g = p.groupBy("prefix").agg(
@@ -4301,8 +4245,6 @@ _WN_W = 5  # k-gram hashes per winnowing window
 def q_winnowing_fingerprint_census(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     base = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -4388,8 +4330,6 @@ _TB_MIN_CF = 50
 def q_term_burstiness_church_gale(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import text
-
     docs = load_table(spark, sf_dir, "documents")
     inst = docs.select(
         "doc_id", F.explode(text.tokens("text")).alias("term")

@@ -21,7 +21,12 @@ from pyspark.sql import functions as F
 from etl_seattle_call_data_spark.operators import dq
 from etl_seattle_call_data_spark.operators.util import checkpoint, memo
 from etl_seattle_call_data_spark.plans.queries import register
-from etl_seattle_call_data_spark.sources.registry import load_table
+from etl_seattle_call_data_spark.plans.shared import (
+    memo_basket_items,
+    memo_copurchase_edges,
+    memo_copurchase_pairs,
+)
+from etl_seattle_call_data_spark.sources.registry import load_table, load_tables
 
 
 # ---------------------------------------------------------------------------
@@ -50,8 +55,6 @@ from etl_seattle_call_data_spark.sources.registry import load_table
 def q_copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pair-count table is shared (token-memoized) with the whole
     # market-basket family: association rules, PageRank, triangles
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
-
     prs = memo_copurchase_pairs(spark, sf_dir)
     return (
         prs.select("part_a", "part_b", F.col("n_ab").alias("n_orders"))
@@ -103,8 +106,6 @@ _RECURSIVE_SQL = """
     _RECURSIVE_SQL,
 )
 def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.sources.registry import load_tables
-
     load_tables(spark, sf_dir, names=("events",))
     # r11: materialize the TYPE-level edge table before the recursion —
     # Spark inlines a non-recursive CTE into every recursion level, so
@@ -187,11 +188,6 @@ def q_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import (
-        memo_basket_items,
-        memo_copurchase_pairs,
-    )
-
     items = memo_basket_items(spark, sf_dir)
     nb = items.agg(
         F.count_distinct("l_orderkey").cast("bigint").alias("n_baskets")
@@ -295,8 +291,6 @@ _PR_TOTAL = 1_000_000_000_000  # rank mass in integer micro-units
     """,
 )
 def q_pagerank_copurchase_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_edges
-
     # shared src-partitioned symmetric edge cache: the per-iteration
     # join on src and the degree groupBy(src) both satisfy their
     # distribution from the cache — zero edge-frame shuffles per round
@@ -405,8 +399,6 @@ def q_pagerank_copurchase_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
-
     prs = memo_copurchase_pairs(spark, sf_dir).select(
         F.col("part_a").alias("a"), F.col("part_b").alias("b")
     )
@@ -534,11 +526,6 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_shortest_path_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import (
-        memo_copurchase_edges,
-        memo_copurchase_pairs,
-    )
-
     # shared src-partitioned symmetric edge cache (see
     # memo_copurchase_edges): each relax round's join on src reads the
     # cached partitioning — only the small dist frontier shuffles
@@ -612,11 +599,6 @@ def q_shortest_path_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_frequent_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import (
-        memo_basket_items,
-        memo_copurchase_pairs,
-    )
-
     items = memo_basket_items(spark, sf_dir)
     fp = memo_copurchase_pairs(spark, sf_dir).filter(F.col("n_ab") >= 2).select(
         "part_a", "part_b"
@@ -704,8 +686,6 @@ def q_frequent_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_edges
-
     edges = memo_copurchase_edges(spark, sf_dir).select("src", "dst")
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -792,8 +772,6 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_edges
-
     # shared src-partitioned symmetric edge cache (memo_copurchase_edges):
     # scanned once per round below, never copied — the only frames that
     # iterate (and checkpoint) are node-scale degree tables.
@@ -885,8 +863,6 @@ def q_kcore_peeling_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_pairs
-
     edges = memo_copurchase_pairs(spark, sf_dir).select(
         F.col("part_a").alias("pa"), F.col("part_b").alias("pb")
     )
@@ -994,8 +970,6 @@ _LPA_PAIRS_CTE = """
     """,
 )
 def q_label_propagation_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_edges
-
     # shared src-partitioned symmetric edge cache: the edge set is
     # invariant under (u,v) swap with equal weights, so "join labels on
     # v, group by u" equals "join labels on u, group by v" — the latter
@@ -1185,8 +1159,6 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_local_clustering_top_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import memo_copurchase_edges
-
     # mirrored adjacency straight off the session-shared src-partitioned
     # edge cache: both consumers below (top-degree probes + neighbor
     # probe table) re-derive from it, and the collect_list groupBy needs
@@ -1284,11 +1256,6 @@ _LP_TOPK = 20
 def q_link_prediction_resource_alloc(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from etl_seattle_call_data_spark.plans.shared import (
-        memo_copurchase_edges,
-        memo_copurchase_pairs,
-    )
-
     edges = (
         memo_copurchase_pairs(spark, sf_dir)
         .filter(F.col("n_ab") >= _LP_MIN_COOCCUR)

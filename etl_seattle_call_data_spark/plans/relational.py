@@ -20,12 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_seattle_call_data_spark.operators import dq, joins, profile
+from etl_seattle_call_data_spark.operators import dedup, dq, joins, profile, text
 from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import _DAY
-from etl_seattle_call_data_spark.sources.registry import load_table
+from etl_seattle_call_data_spark.sources.registry import load_table, load_tables
 
 
 # ---------------------------------------------------------------------------
@@ -686,7 +686,7 @@ def q_string_funcs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
         F.translate("p_name", "aeiou", "AEIOU").alias("vowels_up"),
         F.instr("p_name", "a").alias("first_a"),
-        F.size(F.filter(F.split("p_name", " "), lambda x: x != "")).alias("n_words"),
+        text.token_count("p_name").alias("n_words"),
         F.reverse("p_name").alias("rname"),
         F.length("p_name").alias("name_len"),
     )
@@ -909,18 +909,15 @@ def q_fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical content, and the levenshtein verify reproduces the
     oracle's pair set exactly. The quadratic survives only in the
     DuckDB oracle, which runs at gate SFs only."""
-    from etl_seattle_call_data_spark.operators import dedup
 
     p = load_table(spark, sf_dir, "part")
     names = p.select(
         "p_name", F.split(F.col("p_name"), " ").getItem(0).alias("blk")
     ).distinct()
-    cand = dedup.passjoin_candidate_pairs(
-        names, string_col="p_name", k=3, block_cols=["blk"]
-    )
+    cand = dedup.passjoin_candidate_pairs(names, string_col="p_name", block_cols=["blk"])
     dist = F.levenshtein(F.col("name_a"), F.col("name_b"))
     return (
-        cand.filter(dist <= 3)
+        cand.filter(dist <= dedup.PASSJOIN_K)
         .select("name_a", "name_b", dist.cast("int").alias("edit_dist"))
     )
 
@@ -1073,8 +1070,6 @@ def q_skew_report_lineitem_orderkey(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def q_dq_audit_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import dq
-
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
@@ -1241,8 +1236,6 @@ _SQL_SURFACE = """
     _SQL_SURFACE,
 )
 def q_sql_surface_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.sources.registry import load_tables
-
     load_tables(spark, sf_dir, names=("lineitem",))
     return spark.sql(_SQL_SURFACE)
 
@@ -1272,8 +1265,6 @@ _LATERAL_SQL = """
     _LATERAL_SQL,
 )
 def q_lateral_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.sources.registry import load_tables
-
     load_tables(spark, sf_dir, names=("customer", "orders"))
     return spark.sql(_LATERAL_SQL)
 
@@ -1360,8 +1351,6 @@ _SCALAR_SUBQ_SQL = """
     _SCALAR_SUBQ_SQL,
 )
 def q_scalar_subquery_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.sources.registry import load_tables
-
     load_tables(spark, sf_dir, names=("orders", "lineitem"))
     return spark.sql(_SCALAR_SUBQ_SQL)
 

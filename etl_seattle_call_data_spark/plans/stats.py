@@ -73,9 +73,9 @@ def q_sample_hash_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sample_stratified_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return sampling.stratified_sample(
-        ev, stratum_col="event_type", key_col="event_id", fraction_denom=10
-    ).select("event_id", "event_type")
+    return sampling.stratified_sample(ev, stratum_col="event_type", key_col="event_id").select(
+        "event_id", "event_type"
+    )
 
 
 @register(
@@ -636,8 +636,8 @@ def q_benford_leading_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer sums split by target class. Plan: one fact-side join to "
     "the part dim (AQE-broadcast), one 25-row group-stats aggregate "
     "explicitly broadcast back into the fact stream (NO window over "
-    "the low-cardinality brand key — the skew hazard class VERDICT r3 "
-    "flagged), one final rollup. Survives 100x: the fact table streams "
+    "the low-cardinality brand key — a skew hazard: one task per "
+    "brand), one final rollup. Survives 100x: the fact table streams "
     "through map-side joins; only 25-row stats move.",
     """
     WITH j AS (
@@ -1026,8 +1026,6 @@ def q_source_divergence_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.expr("CAST(floor(l_extendedprice) AS BIGINT)").alias("price"),
@@ -1096,8 +1094,6 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     o = load_table(spark, sf_dir, "orders")
     r = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
@@ -1327,8 +1323,6 @@ def q_ab_test_two_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_weighted_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_seattle_call_data_spark.operators import ranking
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.expr("CAST(floor(l_extendedprice) AS BIGINT)").alias("price"),
@@ -2009,8 +2003,6 @@ def q_mann_whitney_u_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_histogram_split_finding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     binned = o.select(
         F.expr("CAST(floor(o_totalprice) AS BIGINT) DIV 2000").alias("bin"),

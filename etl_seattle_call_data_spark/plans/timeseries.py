@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dq, joins, ranking
@@ -638,7 +639,7 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tl = counted.unionByName(marks)
-    # r11 (§5 spill, VERDICT item 4): materialize=False — the cumsum
+    # materialize=False (third-decade spill): the cumsum
     # helper's default checkpoint would MATERIALIZE this
     # ~(1 + 2·#smaller-types)·|events| marker stream to executor
     # storage, which is exactly what ground at the third decade (sf100:
@@ -2218,8 +2219,6 @@ def _py_tdiv(x: int, d: int) -> int:
     _HOLT_SQL,
 )
 def q_holt_linear_smoothing_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     load_tables(spark, sf_dir, names=("orders",))
     # Same rollup expressions as the oracle's `monthly` CTE, run on
     # Spark so round/cast semantics are engine-identical.

@@ -926,6 +926,8 @@ def q_q21_sole_failing_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equals the two COUNT(DISTINCT)s, without the expand operator a
     # multi-distinct agg plans, and the two consumers below share the
     # same exchange (AQE reuses it).
+    # NOTE: no checkpoint: both branches read per_supp's identical columns, so
+    # exchange reuse already runs it once (as in q_power_iteration_top_eigen).
     per_supp = li.groupBy("l_orderkey", "l_suppkey").agg(
         F.max(
             F.when(F.col("l_returnflag") == "R", F.lit(1)).otherwise(F.lit(0))

@@ -144,7 +144,7 @@ def q_similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_similarity_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk_multiprobe(emb, queries, k=5, num_planes=8)
+    return similarity.lsh_topk_multiprobe(emb, queries)
 
 
 _IVF_DIST = (
@@ -378,7 +378,7 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(emb, threshold=0.35, n_bits=4)
+    return similarity.semantic_dedup(emb, threshold=0.35)
 
 
 # ---------------------------------------------------------------------------

@@ -56,7 +56,7 @@ def _normalize_temporals(df: DataFrame, name: str) -> DataFrame:
 
 
 # Plan-definition memo: (sf_dir, table) -> DataFrame, weakly keyed by
-# session. NOTE (ADVICE r10): the weak keying is belt-and-braces, not a
+# session. NOTE: the weak keying is belt-and-braces, not a
 # lifecycle guarantee — the memoized DataFrames strongly reference their
 # SparkSession, so the value chain pins the weak key and entries persist
 # for process lifetime until clear_table_memo() (bench.py's default
@@ -91,7 +91,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (os.path.abspath(sf_dir), name)
     hit = per_session.get(key)
     if hit is not None:
-        # Re-assert temporal confs on EVERY load (ADVICE r10): the
+        # Re-assert temporal confs on EVERY load: the
         # defensive contract is that a driver-owned session may change
         # spark.sql.session.timeZone mid-session; two conf.set
         # round-trips are negligible next to the ~90-100ms resolution

@@ -31,7 +31,7 @@ def test_hash_sample_consistent_across_tables(spark):
 def test_stratified_sample_exact_counts(spark):
     rows = [(i, "big") for i in range(100)] + [(1000 + i, "small") for i in range(3)]
     df = spark.createDataFrame(rows, ["k", "stratum"])
-    out = sampling.stratified_sample(df, "stratum", "k", fraction_denom=10).collect()
+    out = sampling.stratified_sample(df, "stratum", "k").collect()
     by = {}
     for r in out:
         by.setdefault(r.stratum, []).append(r.k)

@@ -140,14 +140,19 @@ _BINDINGS = {
     ("JdbcSink", "table_prefix"): "table naming of the caller's warehouse",
     ("JdbcSink", "properties"): "connection properties of the caller's warehouse",
     ("write_bucketed", "format"): "table format of the caller's catalog",
+    ("vacuum", "keep_last"): "retention policy of the caller's table",
+    ("stream_stream_interval_join", "watermark"): "watermark of the caller's event time",
+    ("sessionized_counts", "gap"): "session gap of the caller's users",
+    ("decode_json_payload", "schema"): "payload schema of the caller's stream",
 }
 
 
 def _unset_options(repo) -> list[str]:
     """Defaulted parameters of functions (and classes, by constructor)
     under the package, ``plans/`` aside, that no call in the package,
-    ``tools/``, ``perfbench/`` or ``tests/`` sets by keyword or position.
-    Calls match definitions by name. A call that passes the enclosing
+    ``tools/``, ``perfbench/`` or ``tests/`` sets by keyword or position
+    to a value whose AST differs from the default's. Calls match
+    definitions by name. A call that passes the enclosing
     function's own defaulted parameter (closures included) sets the
     callee's only if that parameter is set in turn; ``**kwargs`` counts
     as one parameter, set by any keyword the signature does not name."""
@@ -162,12 +167,13 @@ def _unset_options(repo) -> list[str]:
         a = fn.args
         positional = a.posonlyargs + a.args
         pos = [x.arg for x in positional][1 if method else 0:]
-        dflt = {x.arg for x in positional[len(positional) - len(a.defaults):]}
-        dflt |= {x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+        dflt = {x.arg: ast.dump(d) for x, d in zip(positional[len(positional) - len(a.defaults):],
+                                                    a.defaults)}
+        dflt |= {x.arg: ast.dump(d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
         kw = "**" + a.kwarg.arg if a.kwarg else None
         return {"name": name, "where": f"{path.relative_to(repo)}:{fn.lineno}", "pos": pos,
-                "params": {x.arg for x in positional + a.kwonlyargs},
-                "defaulted": dflt | ({kw} if kw else set()), "kwargs": kw}
+                "params": {x.arg for x in positional + a.kwonlyargs}, "default": dflt,
+                "defaulted": set(dflt) | ({kw} if kw else set()), "kwargs": kw}
 
     def visit(node, path, stack, cls):
         for child in ast.iter_child_nodes(node):
@@ -209,8 +215,11 @@ def _unset_options(repo) -> list[str]:
                 elif sig["kwargs"]:
                     set_.append((sig["kwargs"], kw.value))
             for param, value in set_:
+                forwarded = source(value, stack)
+                if forwarded is None and ast.dump(value) == sig["default"].get(param):
+                    continue  # passes the default itself
                 if param in sig["defaulted"]:
-                    sources.setdefault((id(sig), param), []).append(source(value, stack))
+                    sources.setdefault((id(sig), param), []).append(forwarded)
 
     is_set = {(id(sig), p) for sigs in defs.values() for sig in sigs for p in sig["defaulted"]
               if (sig["name"], p) in _BINDINGS}
@@ -240,6 +249,25 @@ def test_every_option_has_a_caller():
     import pathlib
 
     assert _unset_options(pathlib.Path(__file__).resolve().parent.parent) == []
+
+
+def test_no_round_artifacts():
+    """Per-query evidence is regenerated from the code on the host at
+    hand, so no frozen per-round snapshot lives in the tree: no
+    round-numbered JSON at the root, no round verdict or advice file, no
+    top-level ``plans/`` dump directory (easily taken for the package's
+    ``plans/``) and no round-numbered tool."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    found = sorted(
+        [p.name for p in repo.glob("*_r[0-9][0-9]*.json")]
+        + [p.name for p in repo.glob("OPTIMIZATION_r*.md")]
+        + [f"{n}.md" for n in ("VERDICT", "ADVICE") if (repo / f"{n}.md").exists()]
+        + (["plans/"] if (repo / "plans").is_dir() else [])
+        + [f"tools/{p.name}" for p in (repo / "tools").glob("*_r[0-9]*.py")]
+    )
+    assert found == []
 
 
 def test_q3_broadcasts_customer(spark):

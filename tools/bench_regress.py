@@ -1,8 +1,7 @@
-"""Round-over-round bench diff: compare BENCH_DETAIL.json per-query
-times against a previous round's table (BENCH_DETAIL or a driver
-BENCH_r{N}.json tail) and flag regressions.
+"""Bench diff: compare BENCH_DETAIL.json per-query times against a
+previous BENCH_DETAIL-shaped table and flag regressions.
 
-Usage: python tools/bench_regress.py [old.json] [--threshold 1.5]
+Usage: python tools/bench_regress.py old.json [--threshold 1.5]
                                      [--grace 0.5] [--new detail.json]
 
 A query regresses when new > threshold * old * host + grace, where
@@ -13,11 +12,7 @@ different host generation shifts every query by a uniform factor
 round-4 sessions). Normalizing by the fleet median keeps the gate
 sensitive to genuine per-query regressions while ignoring uniform
 hardware drift; the median itself is printed so drift stays visible.
-Pass --no-host-norm to compare raw times (same-session diffs).
-
-Defaults to diffing against BENCH_r01.json (BASELINE.md itself is
-prose, not machine-readable); pass the BENCH_DETAIL.json you committed
-last round for the per-round gate."""
+Pass --no-host-norm to compare raw times (same-session diffs)."""
 
 from __future__ import annotations
 
@@ -29,27 +24,14 @@ import sys
 def load_queries(path: str) -> tuple[dict[str, float], float | None]:
     with open(path) as f:
         doc = json.load(f)
-    if "queries" in doc and isinstance(doc["queries"], dict):
-        return doc["queries"], doc.get("sf")
-    # driver BENCH_r{N}.json: try the tail capture
-    tail = doc.get("tail", "")
-    start = tail.find('"queries"')
-    if start == -1:
+    if not isinstance(doc.get("queries"), dict):
         raise SystemExit(f"{path}: no queries dict found")
-    obj = tail[tail.find("{", start):]
-    depth = 0
-    for i, ch in enumerate(obj):
-        depth += ch == "{"
-        depth -= ch == "}"
-        if depth == 0:
-            return json.loads(obj[: i + 1]), None
-    raise SystemExit(f"{path}: truncated queries dict")
+    return doc["queries"], doc.get("sf")
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("old", nargs="?", default="BENCH_r01.json",
-                    help="previous round's BENCH_DETAIL.json / BENCH_r{N}.json")
+    ap.add_argument("old", help="the baseline BENCH_DETAIL.json")
     ap.add_argument("--threshold", type=float, default=1.5,
                     help="multiplicative regression bar (default 1.5x)")
     ap.add_argument("--grace", type=float, default=0.0,

@@ -3,6 +3,10 @@
     python tools/plan_fingerprint.py --sf-dir DIR [query ...] > fp.json
     python tools/plan_fingerprint.py --sf-dir DIR --against old.json [query ...]
 
+``PLAN_FINGERPRINTS.json`` at the repo root is the committed baseline
+at sf0.001; roundcheck diffs against it. A change that alters a plan
+regenerates it and names each changed query in CHANGES.md.
+
 Builds each named query (default: the whole registry, in registry
 order) after ``util.clear_caches(table_plans=False)``, so no memo held
 by an earlier query leaks into the next one's plan, and hashes the
@@ -16,15 +20,21 @@ optimized logical plan's text once the run-to-run noise is stripped:
 
 Two checkouts whose fingerprint for a query agree planned the same
 query: a refactor that claims "plans unchanged" checks it by running
-the tool in each and diffing. ``--against FILE`` does the diff: it
-prints one line per query that differs (or is missing on one side) to
-stdout and exits 1 if any does. Without it the ``{query: sha}`` JSON
-goes to stdout. Progress goes to stderr.
+the tool in each and diffing. Without ``--against`` the JSON
+``{"settings": {...}, "fingerprints": {query: sha}}`` goes to stdout.
+``--against FILE`` does the diff: it prints one line per query that
+differs (or is missing on one side) to stdout and exits 1 if any does.
+Progress goes to stderr.
 
-The session is the engine's own (``session.get_spark``) on the cores
-this process may use, unless the ``SPARK_GRAFT_*`` variables already
-say otherwise. Building a query can fire jobs (an eager checkpoint
-count, a convergence loop), so small scale factors run fastest.
+The session is the engine's own (``session.get_spark``). Plan text
+carries shuffle-partition and spread counts, which follow
+``SETTINGS``, so the JSON records them: a fresh run takes them from the
+environment, defaulting both to the cores this process may use, and
+``--against`` pins them to the values FILE records, so runs on hosts of
+any core count compare the same plans. A FILE that records none is
+refused with exit 2. Building a query can fire jobs (an eager
+checkpoint count, a convergence loop), so small scale factors run
+fastest.
 """
 
 from __future__ import annotations
@@ -45,6 +55,8 @@ _NOISE = (
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
 )
+
+SETTINGS = ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
 
 
 def normalize(plan: str) -> str:
@@ -102,8 +114,17 @@ def main(argv=None) -> int:
     ap.add_argument("--against", help="fingerprint JSON to diff this run against")
     ap.add_argument("queries", nargs="*", help="query names (default: all)")
     args = ap.parse_args(argv)
+    if args.against:
+        with open(args.against) as fh:
+            doc = json.load(fh)
+        if set(doc.get("settings", ())) != set(SETTINGS):
+            print(f"{args.against} records no {' / '.join(SETTINGS)}; regenerate it",
+                  file=sys.stderr)
+            return 2
+        os.environ.update(doc["settings"])
+        old = doc["fingerprints"]
     n = str(len(os.sched_getaffinity(0)))
-    for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+    for var in SETTINGS:
         os.environ.setdefault(var, n)
     from etl_seattle_call_data_spark.session import get_spark
 
@@ -111,10 +132,9 @@ def main(argv=None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     new = fingerprints(spark, args.sf_dir, args.queries or None)
     if not args.against:
-        print(json.dumps(new, indent=1))
+        settings = {var: os.environ[var] for var in SETTINGS}
+        print(json.dumps({"settings": settings, "fingerprints": new}, indent=1))
         return 0
-    with open(args.against) as fh:
-        old = json.load(fh)
     if args.queries:
         old = {k: v for k, v in old.items() if k in new}
     lines = diff(old, new)
