@@ -49,6 +49,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+KEEP_LAST = 2  # versions vacuum keeps reachable for time travel
+
 
 class VersionedTable:
     def __init__(self, path: str):
@@ -133,14 +135,14 @@ class VersionedTable:
 
     # -- maintenance --------------------------------------------------------
 
-    def vacuum(self, keep_last: int = 2) -> list[str]:
+    def vacuum(self) -> list[str]:
         """Drop snapshot directories not referenced by the last
-        ``keep_last`` versions (rollback pointers keep their targets
+        ``KEEP_LAST`` versions (rollback pointers keep their targets
         alive), plus orphans from crashed commits. Returns removed dir
-        names. Time travel older than ``keep_last`` stops working —
+        names. Time travel older than ``KEEP_LAST`` stops working —
         same contract as Delta VACUUM."""
         history = self.history()
-        keep = {v["dir"] for v in history[-keep_last:]} if history else set()
+        keep = {v["dir"] for v in history[-KEEP_LAST:]} if history else set()
         removed = []
         for name in sorted(os.listdir(self.path)):
             full = os.path.join(self.path, name)
@@ -150,5 +152,5 @@ class VersionedTable:
         # compact history to the surviving tail so stale entries can't
         # resolve to deleted dirs
         if history:
-            self._publish(history[-keep_last:])
+            self._publish(history[-KEEP_LAST:])
         return removed

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+SESSION_GAP = "30 minutes"  # inactivity that closes a session
+
 
 def dedup_stream(df: DataFrame, key: str, ts_col: str, watermark: str = "10 minutes") -> DataFrame:
     """Drop re-delivered records by key. Uses
@@ -42,16 +44,15 @@ def sessionized_counts(
     df: DataFrame,
     key: str,
     ts_col: str,
-    gap: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Per-key session aggregation: sessions close after ``gap`` of
+    """Per-key session aggregation: sessions close after ``SESSION_GAP`` of
     inactivity, finalized once the watermark passes. The streaming
     counterpart of the batch lag/cumsum sessionization
     (plans/behavior.py::q_sessionization)."""
     return (
         df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("session"), F.col(key))
+        .groupBy(F.session_window(F.col(ts_col), SESSION_GAP).alias("session"), F.col(key))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min(ts_col).alias("session_start"),

@@ -510,7 +510,7 @@ def test_versioned_table_time_travel_rollback_vacuum(spark, tmp_path):
 
     # crash-orphan: a data dir with no manifest entry is vacuumed
     (tmp_path / "tbl" / "v-99999999-deadbeef").mkdir()
-    removed = t.vacuum(keep_last=2)
+    removed = t.vacuum()
     # keep v3 and v4(->v1 dir); drop v2's dir and the orphan
     assert any("deadbeef" in r for r in removed)
     assert t.read(spark).count() == 100          # rollback target survived

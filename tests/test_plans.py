@@ -140,9 +140,7 @@ _BINDINGS = {
     ("JdbcSink", "table_prefix"): "table naming of the caller's warehouse",
     ("JdbcSink", "properties"): "connection properties of the caller's warehouse",
     ("write_bucketed", "format"): "table format of the caller's catalog",
-    ("vacuum", "keep_last"): "retention policy of the caller's table",
     ("stream_stream_interval_join", "watermark"): "watermark of the caller's event time",
-    ("sessionized_counts", "gap"): "session gap of the caller's users",
     ("decode_json_payload", "schema"): "payload schema of the caller's stream",
 }
 

@@ -79,7 +79,7 @@ def test_sessionized_counts(spark, src, tmp_path):
             (3, "2024-01-01T02:00:00", 7, 1.0),
         ],
     )
-    out = sessionized_counts(_stream(spark, src), key="user_id", ts_col="ts", gap="30 minutes")
+    out = sessionized_counts(_stream(spark, src), key="user_id", ts_col="ts")
     # session windows emit on watermark passage → append mode + flush
     # batches that advance event time past each session's close
     q = (
@@ -164,9 +164,7 @@ def test_streaming_sessions_match_batch_session_window(spark, src, tmp_path):
         ],
     )
 
-    out = sessionized_counts(
-        _stream(spark, src), key="user_id", ts_col="ts", gap="30 minutes"
-    )
+    out = sessionized_counts(_stream(spark, src), key="user_id", ts_col="ts")
     q = (
         out.writeStream.format("memory")
         .queryName("sess_parity")

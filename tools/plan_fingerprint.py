@@ -21,20 +21,17 @@ optimized logical plan's text once the run-to-run noise is stripped:
 Two checkouts whose fingerprint for a query agree planned the same
 query: a refactor that claims "plans unchanged" checks it by running
 the tool in each and diffing. Without ``--against`` the JSON
-``{"settings": {...}, "fingerprints": {query: sha}}`` goes to stdout.
-``--against FILE`` does the diff: it prints one line per query that
-differs (or is missing on one side) to stdout and exits 1 if any does.
-Progress goes to stderr.
+``{query: sha}`` goes to stdout. ``--against FILE`` does the diff: it
+prints one line per query that differs (or is missing on one side) to
+stdout and exits 1 if any does. Progress goes to stderr.
 
 The session is the engine's own (``session.get_spark``). Plan text
-carries shuffle-partition and spread counts, which follow
-``SETTINGS``, so the JSON records them: a fresh run takes them from the
-environment, defaulting both to the cores this process may use, and
-``--against`` pins them to the values FILE records, so runs on hosts of
-any core count compare the same plans. A FILE that records none is
-refused with exit 2. Building a query can fire jobs (an eager
-checkpoint count, a convergence loop), so small scale factors run
-fastest.
+carries shuffle-partition and spread counts, so the tool sets
+``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` to 4,
+whatever the environment says: hosts of any core count fingerprint the
+same plans. Building a query can fire
+jobs (an eager checkpoint count, a convergence loop), so small scale
+factors run fastest.
 """
 
 from __future__ import annotations
@@ -55,8 +52,6 @@ _NOISE = (
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
 )
-
-SETTINGS = ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
 
 
 def normalize(plan: str) -> str:
@@ -114,27 +109,17 @@ def main(argv=None) -> int:
     ap.add_argument("--against", help="fingerprint JSON to diff this run against")
     ap.add_argument("queries", nargs="*", help="query names (default: all)")
     args = ap.parse_args(argv)
-    if args.against:
-        with open(args.against) as fh:
-            doc = json.load(fh)
-        if set(doc.get("settings", ())) != set(SETTINGS):
-            print(f"{args.against} records no {' / '.join(SETTINGS)}; regenerate it",
-                  file=sys.stderr)
-            return 2
-        os.environ.update(doc["settings"])
-        old = doc["fingerprints"]
-    n = str(len(os.sched_getaffinity(0)))
-    for var in SETTINGS:
-        os.environ.setdefault(var, n)
+    os.environ.update(SPARK_GRAFT_CPUS="4", SPARK_GRAFT_SHUFFLE_PARTITIONS="4")
     from etl_seattle_call_data_spark.session import get_spark
 
     spark = get_spark(app_name="plan-fingerprint", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     new = fingerprints(spark, args.sf_dir, args.queries or None)
     if not args.against:
-        settings = {var: os.environ[var] for var in SETTINGS}
-        print(json.dumps({"settings": settings, "fingerprints": new}, indent=1))
+        print(json.dumps(new, indent=1))
         return 0
+    with open(args.against) as fh:
+        old = json.load(fh)
     if args.queries:
         old = {k: v for k, v in old.items() if k in new}
     lines = diff(old, new)

@@ -69,8 +69,7 @@ python tools/plan_dump.py >/dev/null 2>&1 && echo "plans OK" || { echo "FAIL: un
 
 echo "=== 4b/5 plan fingerprints (vs committed PLAN_FINGERPRINTS.json) ==="
 # a plan change regenerates the file and names each changed query in CHANGES.md
-sf_smoke=$(python -c "from tests.conftest import SF_SMOKE; print(SF_SMOKE)")
-python tools/plan_fingerprint.py --sf-dir "$sf_smoke" --against PLAN_FINGERPRINTS.json \
+python tools/plan_fingerprint.py --sf-dir /root/testdata/sf0.001 --against PLAN_FINGERPRINTS.json \
   2>/tmp/plan_fp_err.txt || { echo "FAIL: plan fingerprints differ"; fail=1; }
 tail -1 /tmp/plan_fp_err.txt
 
