@@ -355,10 +355,11 @@ def connected_components(
 
     Only nodes appearing in ≥1 pair are returned (singletons are their
     own trivial cluster by definition)."""
-    # persist + materialize the pair list BEFORE unioning its two
-    # directed copies: the union's branches would otherwise each
-    # recompute the (expensive) upstream pair pipeline — measured 2× the
-    # whole Jaccard join at sf0.1. No distinct() needed: pairs are
+    # persist the pair list BEFORE unioning its two directed copies: the
+    # union's branches would otherwise each recompute the (expensive)
+    # upstream pair pipeline — measured 2× the whole Jaccard join at
+    # sf0.1. No eager count: the first round's action fills this memo
+    # and the edge memo below in one job. No distinct() needed: pairs are
     # unique with id_a < id_b, so the two directed copies cannot collide
     # (and min-label propagation is idempotent under duplicate edges
     # anyway).
@@ -373,7 +374,6 @@ def connected_components(
     # the size joins to shuffle measured dedup_ngram_jaccard at 3.42 s
     # against 2.70 s (best of 4 on a loaded host).
     pairs_p = memo("cc_pairs", lambda: pairs.select(F.col(id_a), F.col(id_b)))
-    pairs_p.count()
     directed = pairs_p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         pairs_p.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
@@ -384,7 +384,6 @@ def connected_components(
     # times per round — only the node-scale label frame moves. Measured
     # 4.5/4.8 s → 3.7 s warm-cache corpus_clean_pipeline at sf0.1.
     edges = memo("cc_edges", lambda: directed.repartition(F.col("src")))
-    edges.count()  # materialize: every round reads edges
     # Every generation (0 included) is read twice per round — the
     # neighbour-min probe and the update join — and is checkpointed:
     # without the barrier each round re-runs the previous generation's

@@ -14,9 +14,8 @@ running sum of 1):
      #groups × (value range / width), NOT by data size — and fold it
      into per-bucket prefix offsets with a window over that bucket
      table, partitioned by the group columns. Nothing reaches the
-     driver, so the scan fires no Spark job while the plan is built
-     (only its lazy checkpoint may, by running an upstream's AQE
-     shuffle stages);
+     driver and nothing is materialized, so building the scan fires no
+     Spark job, whatever its input;
   3. scan locally inside each (group, bucket) (a window PARTITIONED by
      the bucket — parallelism = groups × buckets, each task sorts only
      its bucket's rows) and combine with the bucket's offset, joined
@@ -26,8 +25,8 @@ running sum of 1):
 running[row] = offset[bucket] ⊕ local[row] is exact for any bucket
 width; the width only tunes the bucket table's size and the per-task row
 bound (a skewed bucket serializes its own population, nothing else). A
-global scan is a grouped scan over one constant group, so the bucket
-table's window stays hash-partitioned too.
+global scan has no group: its bucket table's window is partitioned by
+a column-derived 0, so it stays hash-partitioned too.
 
 ``equidepth_bucket`` then maps ranks to NTILE(k)-identical bucket ids
 (first ``n mod k`` buckets take the extra row — ANSI NTILE, which both
@@ -40,8 +39,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from etl_seattle_call_data_spark.operators.util import checkpoint
 
 
 _GUARD_MSG = (
@@ -89,7 +86,6 @@ def two_phase_scan(
     df: DataFrame,
     group_cols: list[str],
     specs: list[tuple[str, list, Column, Column, str, bool]],
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact running aggregates of ``df`` within each group of
     ``group_cols`` (``[]`` = one global group), one per spec
@@ -120,30 +116,33 @@ def two_phase_scan(
     threshold.
     No Exchange SinglePartition anywhere, no driver collect.
 
-    The bucketed input (all specs' bucket and value columns) goes
-    through ONE ``util.checkpoint``: every spec's bucket table and the
-    chained local scans read it, and without the barrier Catalyst would
-    evaluate the upstream once per branch. Callers whose upstream is a
-    CHEAP scan/projection pass ``materialize=False``: pipelining a
-    cheap scan into each consumer's shuffle write beats paying the
-    barrier (the measured counter-example: ``q_skipgram_cooccurrence``'s
-    NOTE).
+    The scan never materializes its input: every spec's bucket table
+    and the chained local scans read ``df``'s plan, so Catalyst
+    evaluates ``df``'s upstream once per branch. A scan or projection
+    upstream pipelines into each branch's shuffle write, which costs
+    less than a barrier. Over an expensive upstream (a join, a large
+    aggregate) the caller decides: it wraps ``df`` in
+    ``util.checkpoint`` only where a barrier-vs-none A/B shows the
+    barrier pays, and records the numbers in a NOTE at the call site.
+    The plan's shape cannot decide it: ``interval_overlap_pairs`` has a
+    join and a union upstream, yet a barrier there ground at sf100.
     """
-    gcols = list(group_cols) or ["__g"]
-    out = _guard_group_cols(df, group_cols) if group_cols else df.withColumn(
-        "__g", F.lit(0)
-    )
+    gcols = list(group_cols)
+    out = _guard_group_cols(df, group_cols) if group_cols else df
     for i, (_, _, coarse, value, _, _) in enumerate(specs):
         out = out.withColumn(f"__cb{i}", _guarded_bucket(coarse)).withColumn(
             f"__v{i}", value.cast("long")
         )
-    bucketed = checkpoint(out) if materialize else out
-    frame = bucketed
+    frame = out
     for i, (name, order_by, _, _, agg, exclusive) in enumerate(specs):
         fold, cb, v = _AGGS[agg], f"__cb{i}", f"__v{i}"
-        wb = Window.partitionBy(*gcols).orderBy(cb).rowsBetween
+        # a global scan's bucket table is one group: partition its
+        # window by 0 computed from a column, as a literal key is
+        # folded out of the partition spec and plans an Exchange
+        # SinglePartition
+        wb = Window.partitionBy(*(gcols or [F.col(cb) * 0])).orderBy(cb).rowsBetween
         offsets = (
-            bucketed.groupBy(*gcols, cb)
+            out.groupBy(*gcols, cb)
             .agg(fold(v).alias("__b"))
             .select(
                 *gcols,
@@ -169,10 +168,7 @@ def two_phase_scan(
             .withColumn(name, running.cast("long"))
             .drop("__loc", "__off")
         )
-    return frame.drop(
-        *([] if group_cols else ["__g"]),
-        *(f"__{c}{i}" for i in range(len(specs)) for c in ("cb", "v")),
-    )
+    return frame.drop(*(f"__{c}{i}" for i in range(len(specs)) for c in ("cb", "v")))
 
 
 def equidepth_bucket(rank: Column, n: Column, k: int) -> Column:

@@ -1216,8 +1216,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rec", (F.col("max_day") - F.col("last_day")).cast("bigint")
     )
     # the three ranks are independent columns over the SAME frame — one
-    # scan call attaches all three coarse buckets up front, so all three
-    # share one checkpoint barrier.
+    # scan call attaches all three coarse buckets up front.
     one = F.lit(1)
     money_band = F.expr("CAST(floor(money) AS BIGINT) DIV 100000")
     ranked = two_phase_scan(

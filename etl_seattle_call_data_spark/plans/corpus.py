@@ -213,13 +213,13 @@ def _memo_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle(num_hashes: int = 8, rows_per_band: int = 2) -> str:
+def _minhash_oracle() -> str:
     sig_cols = ",\n           ".join(
-        f"min(md5('{s}:' || shingle)) AS h{s}" for s in range(num_hashes)
+        f"min(md5('{s}:' || shingle)) AS h{s}" for s in range(dedup.MINHASH_HASHES)
     )
     bands = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, {i} AS band_idx, md5(h{i * rows_per_band} || h{i * rows_per_band + 1}) AS band_val FROM sig"
-        for i in range(num_hashes // rows_per_band)
+        f"    SELECT doc_id, {i} AS band_idx, md5(h{i * dedup.MINHASH_ROWS_PER_BAND} || h{i * dedup.MINHASH_ROWS_PER_BAND + 1}) AS band_val FROM sig"
+        for i in range(dedup.MINHASH_HASHES // dedup.MINHASH_ROWS_PER_BAND)
     )
     return f"""
     WITH {_DUCK_JACCARD},
@@ -253,13 +253,13 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(docs, threshold=0.5)
 
 
-def _band_key_census_oracle(num_hashes: int = 8, rows_per_band: int = 2) -> str:
+def _band_key_census_oracle() -> str:
     sig_cols = ",\n           ".join(
-        f"min(md5('{s}:' || shingle)) AS h{s}" for s in range(num_hashes)
+        f"min(md5('{s}:' || shingle)) AS h{s}" for s in range(dedup.MINHASH_HASHES)
     )
     keys = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, '{i}:' || md5(h{i * rows_per_band} || h{i * rows_per_band + 1}) AS band_key FROM sig"
-        for i in range(num_hashes // rows_per_band)
+        f"      SELECT doc_id, '{i}:' || md5(h{i * dedup.MINHASH_ROWS_PER_BAND} || h{i * dedup.MINHASH_ROWS_PER_BAND + 1}) AS band_key FROM sig"
+        for i in range(dedup.MINHASH_HASHES // dedup.MINHASH_ROWS_PER_BAND)
     )
     return f"""
     WITH sh AS ({_DUCK_SHINGLES}),
@@ -1206,13 +1206,13 @@ def q_doc_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH candidate-quality evaluation (recall/precision vs exact Jaccard)
 
 
-def _lsh_recall_oracle(num_hashes: int = 8, rows_per_band: int = 2) -> str:
+def _lsh_recall_oracle() -> str:
     sig_cols = ",\n           ".join(
-        f"min(md5('{s}:' || shingle)) AS h{s}" for s in range(num_hashes)
+        f"min(md5('{s}:' || shingle)) AS h{s}" for s in range(dedup.MINHASH_HASHES)
     )
     bands = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, {i} AS band_idx, md5(h{i * rows_per_band} || h{i * rows_per_band + 1}) AS band_val FROM sig"
-        for i in range(num_hashes // rows_per_band)
+        f"    SELECT doc_id, {i} AS band_idx, md5(h{i * dedup.MINHASH_ROWS_PER_BAND} || h{i * dedup.MINHASH_ROWS_PER_BAND + 1}) AS band_val FROM sig"
+        for i in range(dedup.MINHASH_HASHES // dedup.MINHASH_ROWS_PER_BAND)
     )
     return f"""
     WITH {_DUCK_JACCARD},

@@ -639,18 +639,18 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tl = counted.unionByName(marks)
-    # materialize=False (third-decade spill): the cumsum
-    # helper's default checkpoint would MATERIALIZE this
-    # ~(1 + 2·#smaller-types)·|events| marker stream to executor
-    # storage, which is exactly what ground at the third decade (sf100:
-    # 369.5 s, 2.91×/R with rows growing ×10). The upstream is a cheap
-    # scan + broadcast join + in-row explode with NO shuffle — the
-    # CLAUDE.md skipgram class — so letting the totals branch and the
-    # window probe each re-derive it pipelines two linear passes
-    # instead of writing the widest frame in the plan to disk.
+    # No barrier on tl (third-decade spill): a checkpoint here would
+    # MATERIALIZE this ~(1 + 2·#smaller-types)·|events| marker stream
+    # to executor storage, which is exactly what ground at the third
+    # decade (sf100: 369.5 s, 2.91×/R with rows growing ×10). The
+    # upstream is a cheap scan + broadcast join + in-row explode with
+    # NO shuffle — the CLAUDE.md skipgram class — so letting the totals
+    # branch and the window probe each re-derive it pipelines two
+    # linear passes instead of writing the widest frame in the plan to
+    # disk.
     coarse = F.expr("us_key DIV 3600000000")
     spec = ("__cum", ["us_key", "flag"], coarse, F.col("w"), "sum", False)
-    cum = ranking.two_phase_scan(tl, ["type_a"], [spec], materialize=False)
+    cum = ranking.two_phase_scan(tl, ["type_a"], [spec])
     return (
         cum.filter(F.col("flag") == 1)
         .groupBy("type_a", "type_b")

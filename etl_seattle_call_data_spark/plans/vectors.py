@@ -78,13 +78,16 @@ def q_similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, queries, k=5)
 
 
-def _lsh_bucket_sql(num_planes: int = 8, dims: int = 64) -> str:
+_LSH_PLANES, _LSH_DIMS = 8, 64  # lsh_topk's planes over the 64-dim embeddings
+
+
+def _lsh_bucket_sql() -> str:
     """DuckDB expression for the sign-random-projection bucket id —
     the same driver-side md5 hyperplane weights the Spark plan embeds
     (operators/similarity.py), as literal BIGINT lists."""
-    weights = similarity._hyperplane_weights(num_planes, dims)
+    weights = similarity._hyperplane_weights(_LSH_PLANES, _LSH_DIMS)
     terms = []
-    for p in range(num_planes):
+    for p in range(_LSH_PLANES):
         wlist = "[" + ", ".join(str(w) for w in weights[p]) + "]::BIGINT[]"
         terms.append(
             f"(CASE WHEN list_sum(list_transform(range(1, len(qv) + 1), "

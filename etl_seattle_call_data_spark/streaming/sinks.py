@@ -8,8 +8,8 @@ into ``n_buckets`` fixed buckets; each ``foreachBatch`` epoch
 
 1. buckets the incoming batch and finds which buckets it touches,
 2. reads ONLY those buckets' current snapshots, unions the batch,
-   keeps the newest row per key (window row_number over the ordering
-   column, epoch id as tiebreak),
+   keeps the newest row per key (``operators/cdc.py::upsert_snapshot``:
+   newest by the ordering column, the batch row winning a tie),
 3. writes the touched buckets to a fresh epoch directory
    (``epoch-<id>/__bucket=<b>/``), and
 4. atomically publishes a manifest mapping every bucket to the epoch
@@ -43,7 +43,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from etl_seattle_call_data_spark.operators.cdc import upsert_snapshot
 
 
 class KeyedUpsertSink:
@@ -199,7 +200,6 @@ class KeyedUpsertSink:
     def upsert_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         manifest = self._read_manifest()
-        order_col = self.order_col or "__epoch"
         batch = batch_df.withColumn("__epoch", F.lit(epoch_id).cast("long")).withColumn(
             "__bucket", self._bucket_expr()
         )
@@ -213,22 +213,14 @@ class KeyedUpsertSink:
         # leaves listed, per-dir schema cached — see _read_buckets)
         probed = {str(b): manifest[str(b)] for b in touched if str(b) in manifest}
         existing = self._read_buckets(spark, probed) if probed else None
-        merged = batch
         if existing is not None:
             # __bucket is recomputed from the key (same hash, same value)
-            merged = merged.unionByName(
-                existing.withColumn("__bucket", self._bucket_expr()),
-                allowMissingColumns=True,
-            )
-        order = [F.desc(order_col)]
-        if order_col != "__epoch":
-            order.append(F.desc("__epoch"))  # epoch as tiebreak for equal order values
-        w = Window.partitionBy(self.key).orderBy(*order)
-        latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+            existing = existing.withColumn("__bucket", self._bucket_expr())
+        # newest row per key by order_col, a tie to the batch row: the
+        # store holds one row per key and no stored row's epoch is newer
+        # than this batch's, so that is "higher __epoch wins a tie", and
+        # a replayed epoch id replaces its earlier attempt's rows
+        latest = upsert_snapshot(existing, batch, self.key, self.order_col or "__epoch")
         epoch_dir = self._fresh_epoch_dir(epoch_id, manifest)
         # one distributed job writes all touched buckets, laid out per
         # bucket so reads and future epochs address buckets individually.

@@ -147,7 +147,7 @@ _BINDINGS = {
 
 def _unset_options(repo) -> list[str]:
     """Defaulted parameters of functions (and classes, by constructor)
-    under the package, ``plans/`` aside, that no call in the package,
+    under the package that no call in the package,
     ``tools/``, ``perfbench/`` or ``tests/`` sets by keyword or position
     to a value whose AST differs from the default's. Calls match
     definitions by name. A call that passes the enclosing
@@ -233,7 +233,7 @@ def _unset_options(repo) -> list[str]:
     return sorted(
         f"{sig['where']} {sig['name']}({p})"
         for sigs in defs.values() for sig in sigs
-        if sig["where"].startswith(pkg.name + "/") and not sig["where"].startswith(pkg.name + "/plans/")
+        if sig["where"].startswith(pkg.name + "/")
         for p in sig["defaulted"]
         if not exempt(p) and (id(sig), p) not in is_set
     )
@@ -605,6 +605,29 @@ def test_two_phase_scan_builds_fire_no_jobs(spark):
         assert list(jobs) == [], jobs
     finally:
         sc.setJobGroup("", "")
+
+
+def test_two_phase_scan_over_aggregate_builds_fire_no_jobs(spark):
+    """Over an aggregated input too, building the scan fires ZERO jobs
+    and its plan holds no checkpoint scan (``LogicalRDD``): the scan
+    never materializes its input, so no barrier runs the aggregate's
+    AQE shuffle stage while the plan is still being built. A caller
+    that wants a barrier places ``util.checkpoint`` itself."""
+    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
+
+    orders = load_table(spark, SF, "orders")  # warm the table plan
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("scan_agg_build_probe", "probe")
+        rev = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev"))
+        coarse = F.floor(F.col("rev") / F.lit(10000))
+        spec = ("rnk", ["rev", "o_custkey"], coarse, F.lit(1), "sum", False)
+        ranked = two_phase_scan(rev, [], [spec])
+        jobs = sc.statusTracker().getJobIdsForGroup("scan_agg_build_probe")
+        assert list(jobs) == [], jobs
+    finally:
+        sc.setJobGroup("", "")
+    assert "LogicalRDD" not in _plan(ranked, mode="extended")
 
 
 def test_copurchase_pairs_bounded_plan(spark):
