@@ -316,13 +316,14 @@ def _with_ivf_cell(df: DataFrame, centroids: list[tuple[int, list[int]]]) -> Dat
     lowest centroid id, = numpy argmin first-occurrence on id-sorted
     centroids). Vectorized Arrow-batched pandas_udf: one int64 matmul
     per Arrow batch, exact integer math (bit-identical to the DuckDB
-    oracle). The Catalyst form is no faster: 8 zip_with/aggregate dot
-    products and a ``least`` over (distance, id) structs give identical
-    cells, and ``similarity_topk_ivf`` at sf0.1 (2,000 vectors,
-    local[4], 6 alternating fresh processes, build + digest, medians)
-    read 7.45 s with it against 8.89 s with this UDF, faster in only 3
-    of 6 pairs. It built in 4.18 s against 2.13 s and executed in
-    3.30 s against 6.76 s."""
+    oracle). Whether the Catalyst form is faster is unresolved: 8
+    zip_with/aggregate dot products and a ``least`` over (distance, id)
+    structs give identical cells, and ``similarity_topk_ivf`` at sf0.1
+    (2,000 vectors, local[4], 6 alternating fresh processes, build +
+    digest, medians) read 7.45 s with it against 8.89 s with this UDF,
+    but each form won 3 of 6 pairs. The Catalyst form built slower
+    (4.18 s against 2.13 s) and executed faster (3.30 s against
+    6.76 s)."""
     from pyspark.sql.functions import pandas_udf
 
     cmat = [cq for _, cq in centroids]

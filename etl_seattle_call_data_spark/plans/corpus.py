@@ -4138,25 +4138,25 @@ def q_heaps_law_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("n", F.size("tk").cast("bigint"))
     spec = ("off", ["doc_id"], F.expr("doc_id DIV 256"), F.col("n"), "sum", True)
     cum = two_phase_scan(docs, ["source"], [spec])
+    # the scan's off_total is the source's token count: carried through
+    # the explode, it spares a second tokenizing pass over docs
     tok = cum.select(
         "source",
+        F.col("off_total").alias("n_tokens"),
         "off",
         F.posexplode("tk").alias("i0", "tok"),
     ).select(
         "source",
+        "n_tokens",
         (F.col("off") + F.col("i0") + 1).alias("gpos"),
         "tok",
     )
-    fo = tok.groupBy("source", "tok").agg(F.min("gpos").alias("fp"))
-    tot = docs.groupBy("source").agg(
-        F.sum("n").cast("bigint").alias("n_tokens")
-    )
+    fo = tok.groupBy("source", "n_tokens", "tok").agg(F.min("gpos").alias("fp"))
     blocks = spark.createDataFrame(
         [(b,) for b in _HL_BLOCKS], "b long"
     )
     return (
-        fo.join(F.broadcast(tot), "source")
-        .crossJoin(F.broadcast(blocks))
+        fo.crossJoin(F.broadcast(blocks))
         .filter(F.col("b") <= F.col("n_tokens"))
         .groupBy(
             "source", F.col("b").cast("bigint").alias("block_size"), "n_tokens"

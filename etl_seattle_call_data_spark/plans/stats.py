@@ -539,7 +539,8 @@ def q_gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # NOTE no barrier on rev: checkpoint(rev) vs none (sf0.1, local[4],
     # build + spark_digest, memos cleared, 6 alternating runs, medians)
-    # read 2.41 vs 2.45 s, faster in only 2 of 6 pairs.
+    # read 2.04 vs 1.72, 1.63 vs 1.50 and 1.90 vs 1.75 s in three A/Bs;
+    # the barrier won 1, 3 and 1 of 6 pairs.
     coarse = F.floor(F.col("rev") / F.lit(10000))
     spec = ("rnk", ["rev", "o_custkey"], coarse, F.lit(1), "sum", False)
     ranked = two_phase_scan(rev, [], [spec])
@@ -3513,12 +3514,12 @@ def q_spearman_corr_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three-consumer shape.
 
     # NOTE no barrier on vg: the scan's two branches each re-run the
-    # count aggregate, yet checkpoint(vg) did not pay. Barrier vs none
-    # (sf0.1, local[4], build + spark_digest, memos cleared, 6
-    # alternating runs, medians) in three A/Bs: 13.11 vs 14.66 s
-    # (faster in 4 of 6 pairs), 14.35 vs 13.78 s (2 of 6) and 14.62 vs
-    # 13.93 s (1 of 6). The barrier moves about 2.3 s into the build
-    # (its 2 AQE stages) and saves about as much in execution.
+    # count aggregate, yet checkpoint(vg) did not pay consistently.
+    # Barrier vs none (sf0.1, local[4], build + spark_digest, memos
+    # cleared, alternating runs, medians) in four A/Bs: 8.42 vs 8.78 s
+    # (barrier faster in 4 of 6 pairs), 6.30 vs 7.44 s (3 of 6), 7.35
+    # vs 7.28 s (5 of 10) and 7.60 vs 8.77 s (5 of 6). The barrier moves
+    # the aggregate's 2 AQE stages into the build (about 1.1 s).
     def midrank2(value_col: str, coarse: Column, out: str) -> DataFrame:
         vg = li.groupBy("flag", value_col).agg(F.count(F.lit(1)).alias("cnt"))
         cum = two_phase_scan(

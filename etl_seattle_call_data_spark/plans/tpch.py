@@ -2715,9 +2715,10 @@ def q_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE the barrier pays here: the scan's bucket table and local
     # scan each read p, a two-level rollup of lineitem, so without it
     # both re-run the rollup. Barrier vs none (sf0.1, local[4], build +
-    # spark_digest, memos cleared, 6 alternating runs, medians):
-    # 4.59 vs 5.37 s, faster in 5 of 6 pairs; a second A/B 4.52 vs
-    # 5.08 s, 5 of 6. Building fires the rollup's 2 AQE stages.
+    # spark_digest, memos cleared, alternating runs, medians): 3.24 vs
+    # 3.98 s, barrier faster in 5 of 6 pairs; three earlier A/Bs read
+    # 3.54 vs 4.02 s (4 of 6), 2.99 vs 3.18 s (3 of 6) and 3.17 vs
+    # 3.44 s (7 of 10). Building fires the rollup's 2 AQE stages.
     coarse = F.expr("neg_rev DIV 1000000")
     spec = ("crev", ["neg_rev", "pk"], coarse, F.col("rev"), "sum", False)
     cum = two_phase_scan(

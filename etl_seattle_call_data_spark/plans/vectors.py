@@ -116,7 +116,7 @@ def _lsh_bucket_sql() -> str:
 def q_similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.lsh_topk(emb, queries, k=5, num_planes=8)
+    return similarity.lsh_topk(emb, queries, k=5, num_planes=_LSH_PLANES)
 
 
 @register(
@@ -1396,7 +1396,7 @@ def q_search_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = similarity.cosine_topk(emb, qset, k=5).select(
         "query_id", "neighbor_id", F.col("rank").alias("truth_rank")
     )
-    retr = similarity.lsh_topk(emb, qset, k=5, num_planes=8).select(
+    retr = similarity.lsh_topk(emb, qset, k=5, num_planes=_LSH_PLANES).select(
         "query_id", "neighbor_id", "rank"
     )
     scored = retr.join(truth, ["query_id", "neighbor_id"], "left").select(

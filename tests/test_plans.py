@@ -586,14 +586,18 @@ def test_dq_audit_constructs_lazily(spark):
 def test_two_phase_scan_builds_fire_no_jobs(spark):
     """Building a ranked query fires ZERO Spark jobs: two_phase_scan
     folds its bucket offsets with a window inside the plan, never with a
-    driver collect, so every job belongs to the caller's action. Each
-    query below has only a table scan upstream of its scan."""
+    driver collect, so every job belongs to the caller's action. The
+    first four queries have only a table scan upstream of their scan;
+    ``gini_revenue_concentration`` scans an aggregate, and a barrier over
+    an aggregate runs its AQE stage while the plan is built, so zero jobs
+    also shows that the scan never materializes its input."""
     sc = spark.sparkContext
     names = (
         "equidepth_histogram_totals",
         "systematic_sample_every_k",
         "score_calibration_table",
         "late_event_watermark_census",
+        "gini_revenue_concentration",
     )
     for t in ("orders", "documents", "events"):
         load_table(spark, SF, t)  # warm the table plans (footer reads)
@@ -605,29 +609,6 @@ def test_two_phase_scan_builds_fire_no_jobs(spark):
         assert list(jobs) == [], jobs
     finally:
         sc.setJobGroup("", "")
-
-
-def test_two_phase_scan_over_aggregate_builds_fire_no_jobs(spark):
-    """Over an aggregated input too, building the scan fires ZERO jobs
-    and its plan holds no checkpoint scan (``LogicalRDD``): the scan
-    never materializes its input, so no barrier runs the aggregate's
-    AQE shuffle stage while the plan is still being built. A caller
-    that wants a barrier places ``util.checkpoint`` itself."""
-    from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
-
-    orders = load_table(spark, SF, "orders")  # warm the table plan
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("scan_agg_build_probe", "probe")
-        rev = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev"))
-        coarse = F.floor(F.col("rev") / F.lit(10000))
-        spec = ("rnk", ["rev", "o_custkey"], coarse, F.lit(1), "sum", False)
-        ranked = two_phase_scan(rev, [], [spec])
-        jobs = sc.statusTracker().getJobIdsForGroup("scan_agg_build_probe")
-        assert list(jobs) == [], jobs
-    finally:
-        sc.setJobGroup("", "")
-    assert "LogicalRDD" not in _plan(ranked, mode="extended")
 
 
 def test_copurchase_pairs_bounded_plan(spark):
