@@ -4,18 +4,18 @@ frame (and optionally an eval/benchmark set) through the standard
 pre-training preparation sequence:
 
     quality gate → exact dedup → near-dup clustering (keep best member)
-    → decontamination vs the eval set → per-source quota cap →
-    deterministic train/val/test split
+    → decontamination vs the eval set → deterministic train/val/test
+    split
 
 Each stage is the already-tested operator (text/dedup/sampling); this
 module contributes the COMPOSITION: stage chaining as one lazy Catalyst
 tree where possible, a per-stage row-count report (computed from ONE
 cached survivor frame per stage boundary, not re-derived lineage), and
-a config object so pipelines are declarative and diffable.
+a config object for the settings callers vary.
 
 Scale posture inherited from the pieces: every candidate generator is a
 bounded equi-join (document-frequency caps on shingles), cluster
-decisions are window top-1 per near-dup component, splits/quotas are
+decisions are window top-1 per near-dup component, splits are
 hash-bucket narrow maps. The one iterative stage (connected components)
 moves labels, not documents. Nothing collects to the driver except the
 stage-count report (a handful of scalars).
@@ -27,7 +27,7 @@ analytics engine for training data is judged on exactly this pipeline.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,17 +36,14 @@ from etl_seattle_call_data_spark.operators import dedup, sampling, text
 from etl_seattle_call_data_spark.operators.util import checkpoint
 
 
+MAX_TOKENS = 100_000  # quality gate: token budget per document
+JACCARD_THRESHOLD = 0.5  # near-dup pairs: shingle Jaccard at least this
+SHINGLE_MAX_DF = 50  # near-dup pairs: shingles in more docs are dropped
+
+
 @dataclass(frozen=True)
 class CorpusConfig:
     min_tokens: int = 20
-    max_tokens: int = 100_000
-    jaccard_threshold: float = 0.5
-    shingle_max_df: int | None = 50
-    contamination_max_overlap: float = 0.5
-    per_source_quota: int | None = None
-    splits: dict[str, int] = field(
-        default_factory=lambda: {"train": 80, "val": 10, "test": 10}
-    )
     quality_col: str = "n_chars"
 
 
@@ -83,7 +80,7 @@ def build_training_corpus(
     gated = stage(
         "quality_gate",
         docs,
-        docs.filter((n_tok >= config.min_tokens) & (n_tok <= config.max_tokens)),
+        docs.filter((n_tok >= config.min_tokens) & (n_tok <= MAX_TOKENS)),
     )
 
     # 2. exact dedup: canonical-text fingerprint groups, keep representative
@@ -96,10 +93,10 @@ def build_training_corpus(
     #    → keep the highest-quality member of each cluster
     pairs = dedup.jaccard_pairs(
         exact,
-        threshold=config.jaccard_threshold,
+        threshold=JACCARD_THRESHOLD,
         id_col=id_col,
         text_col=text_col,
-        max_df=config.shingle_max_df,
+        max_df=SHINGLE_MAX_DF,
     )
     comps = dedup.connected_components(pairs)  # (doc_id, cluster_id)
     reps = dedup.cluster_representatives(
@@ -113,10 +110,7 @@ def build_training_corpus(
     # 4. decontamination vs the eval/benchmark set
     if eval_set is not None:
         contaminated = (
-            dedup.contamination_overlap(
-                near, eval_set, id_col=id_col, text_col=text_col,
-                flag_threshold=config.contamination_max_overlap,
-            )
+            dedup.contamination_overlap(near, eval_set, id_col=id_col, text_col=text_col)
             .filter(F.col("contaminated"))
             .select(id_col)
         )
@@ -124,21 +118,8 @@ def build_training_corpus(
             "decontaminate", near, near.join(contaminated, id_col, "left_anti")
         )
 
-    # 5. per-source quota (domain cap)
-    if config.per_source_quota is not None:
-        near = stage(
-            "source_quota",
-            near,
-            sampling.top_n_per_group(
-                near,
-                group_col="source",
-                order_cols=[F.col(id_col)],
-                n=config.per_source_quota,
-            ).drop("rank"),
-        )
-
-    # 6. deterministic split — narrow map, no shuffle
-    out = sampling.hash_split(near, key_col=id_col, splits=config.splits)
+    # 5. deterministic split — narrow map, no shuffle
+    out = sampling.hash_split(near, key_col=id_col)
     report.append(
         {"stage": "split", "rows_in": report[-1]["rows_out"], "rows_out": report[-1]["rows_out"]}
     )

@@ -32,6 +32,7 @@ SHINGLE_N = 3  # words per shingle
 MINHASH_HASHES = 8  # MinHash signature length
 MINHASH_ROWS_PER_BAND = 2  # LSH band width: 4 bands of 2 rows
 PASSJOIN_K = 3  # edit-distance bound of passjoin_candidate_pairs
+CONTAMINATION_FLAG = 0.5  # contamination_overlap: overlap fraction that flags a doc
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -737,13 +738,13 @@ def contamination_overlap(
     eval_set: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    flag_threshold: float = 0.5,
 ) -> DataFrame:
     """Benchmark-contamination check: per corpus document, the fraction
     of its distinct word n-gram shingles that also occur anywhere in the
-    eval/benchmark set — the decontamination gate every training corpus
-    runs before a model sees it (high overlap = the doc leaks eval data
-    and must be dropped).
+    eval/benchmark set, flagged ``contaminated`` from
+    ``CONTAMINATION_FLAG`` up — the decontamination gate every training
+    corpus runs before a model sees it (high overlap = the doc leaks
+    eval data and must be dropped).
 
     The eval vocabulary is a DISTINCT shingle set — typically tiny next
     to the corpus (benchmarks are MBs, corpora are TBs), so the semi-
@@ -769,7 +770,7 @@ def contamination_overlap(
         F.col("n_shingles"),
         n_overlap.alias("n_overlap"),
         frac.alias("overlap_frac"),
-        (frac >= F.lit(flag_threshold)).alias("contaminated"),
+        (frac >= F.lit(CONTAMINATION_FLAG)).alias("contaminated"),
     )
 
 

@@ -13,7 +13,7 @@ sample by a cryptographic hash of a key column instead:
   "sample both sides consistently" trick for debugging joins at scale).
 
 The hash is the engine-portable md5-prefix integer used across this
-repo (conv(substr(md5(x),1,15),16,10) ≡ DuckDB ('0x'||…)::BIGINT).
+repo (``sketch.portable_hash_int``, ≡ DuckDB ('0x'||substr(md5(x),1,15))::BIGINT).
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from etl_seattle_call_data_spark.operators.sketch import portable_hash_int
 
 STRATIFIED_DENOM = 10  # stratified_sample keeps ceil(n / 10) rows per stratum
+SPLITS = {"train": 80, "val": 10, "test": 10}  # hash_split: percent per split
 
 
 def hash_bucket(key_col, buckets: int):
@@ -63,24 +64,17 @@ def stratified_sample(
     )
 
 
-def hash_split(
-    df: DataFrame,
-    key_col: str,
-    splits: dict[str, int] | None = None,
-) -> DataFrame:
+def hash_split(df: DataFrame, key_col: str) -> DataFrame:
     """Deterministic train/val/test assignment: each row's portable hash
     bucket (of 100) maps to a named split by cumulative share, in
-    percent (default 80/10/10).
+    percent (``SPLITS``, 80/10/10).
     Seedless and engine-portable — the same row lands in the same split
     on any engine, any partitioning, any run; adding rows never moves
     existing ones (the property random split lacks). Pure narrow map."""
-    splits = splits or {"train": 80, "val": 10, "test": 10}
-    if sum(splits.values()) != 100:
-        raise ValueError("split shares must sum to the bucket count")
     b = hash_bucket(key_col, 100)
     expr = None
     cum = 0
-    for name, share in splits.items():
+    for name, share in SPLITS.items():
         cum += share
         cond = b < cum
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)

@@ -52,6 +52,14 @@ def _dot(a, b):
     )
 
 
+def _l2sq(a, b):
+    """Integer squared L2 distance, in the same zip_with/aggregate form
+    as ``_dot``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0).cast("long"), lambda acc, v: acc + v
+    )
+
+
 def _cosine(va, na, vb, nb):
     """Cosine of two quantized vectors with squared norms ``na``/``nb``:
     an exact integer dot product and one IEEE divide/sqrt, so the value
@@ -186,58 +194,22 @@ def _hyperplane_weights(num_planes: int, dims: int) -> list[list[int]]:
     ]
 
 
-def lsh_bucket(
-    vec_col,
-    num_planes: int = 12,
-    dims: int = 64,
-    quantized: bool = False,
-):
-    """Sign-random-projection bucket id. 30-bit weights keep the
-    projection sum far inside int64 (|x| ≤ ~10^3·2^29·dims ≈ 2^55 for
-    dims ≤ 64). Engine-independent and reproducible.
+def lsh_bucket(num_planes: int = 8, dims: int = 64):
+    """Sign-random-projection bucket id over a qvec column, as an
+    Arrow-batched pandas UDF: one int64 matmul against the
+    ``_hyperplane_weights`` matrix per batch. 30-bit weights keep each
+    projection far inside int64 (|x| ≤ ~10^3·2^29·dims ≈ 2^55 for dims
+    ≤ 64). A vector longer than ``dims`` is truncated to the plane and
+    a shorter one is zero-padded.
 
-    Pass ``quantized=True`` with a materialized qvec column: embedding
-    the quantize subtree in all ``num_planes`` plane expressions
-    multiplies analysis/codegen cost for zero runtime benefit."""
-    q = vec_col if quantized else quantize(vec_col)
-    if quantized and isinstance(q, str):
-        q = F.col(q)
-    weights = _hyperplane_weights(num_planes, dims)
-    bits = []
-    for p in range(num_planes):
-        # one array Literal node (not 64 child literals): keeps the plan
-        # small and codegen fast across 8 planes
-        plane = F.lit(weights[p]).cast("array<long>")
-        # coalesce the PRODUCT: zip_with null-pads whichever side is
-        # shorter (vector shorter than plane → x null; vector longer than
-        # plane → w null), and either null must contribute 0 — coalescing
-        # only x would let a null w poison the whole aggregate (every bit
-        # forced to 0 for vectors longer than `dims`)
-        proj = F.aggregate(
-            F.zip_with(q, plane, lambda x, w: F.coalesce(x * w, F.lit(0).cast("long"))),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(2**p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def lsh_bucket_vectorized(num_planes: int = 8, dims: int = 64):
-    """Arrow-batched sign-random-projection bucket id over a qvec column:
-    one int64 matmul against the hyperplane matrix per batch. Same
-    deterministic md5 weights (and therefore the same oracle) as
-    ``lsh_bucket``.
-
-    NOTE: the Catalyst HOF form is cheap too, well under 1 ms/row. On
-    2,000 vectors at 8×64 on a 4-core host, ``lsh_bucket(quantized=True)``
-    gives bit-identical buckets in 0.30–0.96 s warm against this UDF's
-    0.26–0.40 s, and 0.86–2.74 s cold against 2.25–2.26 s (two probes).
-    Switched into ``lsh_topk`` it did not speed up the analyst session
-    (warm pass 3.47/3.75/3.42 s against 3.22/3.56/3.55 s), so
-    ``lsh_topk`` keeps this UDF."""
+    NOTE: a Catalyst form (one zip_with/aggregate projection per plane)
+    gives identical digests but measured slower, so the Python hop
+    stays. sf0.1, local[4], 6 alternating fresh processes, memos
+    cleared, build + digest, medians: ``similarity_topk_lsh`` warm
+    1.61 s with this UDF against 1.90 s, the Catalyst form faster in 1
+    of 6 pairs; perfbench ``session_sf0.1``, ``warm_pass_s`` 3.56
+    against 3.85 s (Catalyst better in 2 of 6) and ``live_heap_mb``
+    112.6 against 113.5 MB (0 of 6)."""
     from pyspark.sql.functions import pandas_udf
 
     wmat = _hyperplane_weights(num_planes, dims)
@@ -259,8 +231,7 @@ def lsh_bucket_vectorized(num_planes: int = 8, dims: int = 64):
             proj = q[:, :m] @ w[:, :m].T
         else:
             # ragged batch: truncate/zero-pad per row (np.stack would
-            # raise); same truncation semantics as the uniform path and
-            # the JVM zip_with + coalesce(x*w, 0) form
+            # raise); same truncation semantics as the uniform path
             proj = np.zeros((n, w.shape[0]), dtype=np.int64)
             for i, a in enumerate(arrs):
                 a = np.asarray(a, dtype=np.int64)
@@ -274,7 +245,7 @@ def lsh_bucket_vectorized(num_planes: int = 8, dims: int = 64):
 def _lsh_bucketed(corpus: DataFrame, queries: DataFrame, num_planes: int, vec_col: str):
     """Corpus and queries quantized, each row with its sign-LSH
     ``bucket``."""
-    bucket = lsh_bucket_vectorized(num_planes)
+    bucket = lsh_bucket(num_planes)
     c = with_quantized(_spread(corpus), vec_col).withColumn("bucket", bucket(F.col("qvec")))
     qs = with_quantized(queries, vec_col).withColumn("bucket", bucket(F.col("qvec")))
     return c, qs
@@ -316,14 +287,19 @@ def _with_ivf_cell(df: DataFrame, centroids: list[tuple[int, list[int]]]) -> Dat
     lowest centroid id, = numpy argmin first-occurrence on id-sorted
     centroids). Vectorized Arrow-batched pandas_udf: one int64 matmul
     per Arrow batch, exact integer math (bit-identical to the DuckDB
-    oracle). Whether the Catalyst form is faster is unresolved: 8
+    oracle).
+
+    NOTE: the Catalyst form ties, so the Python hop stays. 8
     zip_with/aggregate dot products and a ``least`` over (distance, id)
-    structs give identical cells, and ``similarity_topk_ivf`` at sf0.1
-    (2,000 vectors, local[4], 6 alternating fresh processes, build +
-    digest, medians) read 7.45 s with it against 8.89 s with this UDF,
-    but each form won 3 of 6 pairs. The Catalyst form built slower
-    (4.18 s against 2.13 s) and executed faster (3.30 s against
-    6.76 s)."""
+    structs give identical cells. Built with ``F.lit(list)`` it paid
+    4.18 s of build against this UDF's 2.13 s (sf0.1, local[4]):
+    PySpark expands a list literal to ``array(lit(x), ...)``, one py4j
+    call per element, 512 for an 8×64 matrix. With a numpy-array
+    literal that build cost goes, and the two forms tie warm (6
+    alternating fresh processes, memos cleared, build + digest,
+    medians): ``similarity_topk_ivf`` 1.06 s with the UDF against
+    1.02 s, ``similarity_ivf_recall_eval`` 1.95 against 1.93 s, each
+    form faster in 3 of 6 pairs."""
     from pyspark.sql.functions import pandas_udf
 
     cmat = [cq for _, cq in centroids]
@@ -359,12 +335,13 @@ def ivf_topk(
     physical partition key for the corpus, so one probe = one partition
     read."""
     cents = seeded_centroids(corpus, n_cells, id_col, vec_col)
-    # persist the cell-assigned corpus for reuse across queries:
-    # similarity_ivf_recall_eval assigns the same corpus (that saving is
-    # not measured). Within one query the corpus arm has one consumer,
-    # so the memo saves nothing there: similarity_topk_ivf at sf0.1
-    # (local[4], memos cleared, 6 alternating runs, medians) read 8.89 s
-    # with it and 7.89 s without, faster without in 4 of 6 pairs.
+    # persist the cell-assigned corpus for reuse across queries: in a
+    # registry pass (sf0.01, memos kept) similarity_topk_ivf builds the
+    # key and similarity_ivf_recall_eval hits it. Within one query the
+    # corpus arm has one consumer, so the memo saves nothing there:
+    # similarity_topk_ivf at sf0.1 (local[4], memos cleared, 6
+    # alternating runs, medians) read 8.89 s with it and 7.89 s
+    # without, faster without in 4 of 6 pairs.
     c = memo(
         "ivf_cells", lambda: _with_ivf_cell(with_quantized(_spread(corpus), vec_col), cents)
     )

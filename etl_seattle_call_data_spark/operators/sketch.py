@@ -26,12 +26,25 @@ CMS_DEPTH = 4  # hash rows (seeds) of the count-min sketch
 CMS_WIDTH = 1024  # buckets per row
 
 
+def md5_int(s, width: int = 15) -> F.Column:
+    """The engine-portable md5 integer: the first ``width`` hex chars of
+    md5 over the string column ``s``, as a long (60 bits at the default
+    width, so it stays a non-negative signed 64-bit value). Identical in
+    DuckDB as ('0x' || substr(md5(...), 1, width))::BIGINT. The caller
+    builds (and salts) the string, so each plan keeps its own
+    expression tree."""
+    return F.conv(F.substring(F.md5(s), 1, width), 16, 10).cast("long")
+
+
+# ``md5_int`` spelled as Spark SQL, for hashes inside a SQL lambda.
+MD5_INT_SQL = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def portable_hash_int(col, salt: str = "") -> F.Column:
-    """Engine-portable 60-bit integer hash: first 15 hex chars of md5.
-    Identical in DuckDB as ('0x' || substr(md5(...),1,15))::BIGINT."""
+    """``md5_int`` of ``col`` cast to string, salted as '<salt>:<col>'."""
     c = F.col(col) if isinstance(col, str) else col
     salted = F.concat(F.lit(f"{salt}:"), c.cast("string")) if salt != "" else c.cast("string")
-    return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("long")
+    return md5_int(salted)
 
 
 def cms_build(

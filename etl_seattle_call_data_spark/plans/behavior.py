@@ -21,6 +21,7 @@ from etl_seattle_call_data_spark.operators.ranking import (
     equidepth_bucket,
     two_phase_scan,
 )
+from etl_seattle_call_data_spark.operators.sketch import md5_int
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import _DAY, _DEC6, _du, _sp
 from etl_seattle_call_data_spark.sources.registry import load_table
@@ -1474,15 +1475,7 @@ def q_negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = brands.agg(F.count(F.lit(1)).alias("n_brands"))
     custs = pos.select("custkey").distinct()
     # portable hash mod data-dependent brand count (column modulus)
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("custkey").cast("string"), F.lit("#"), F.col("j").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.concat(F.col("custkey").cast("string"), F.lit("#"), F.col("j").cast("string")))
     cand = (
         custs.crossJoin(F.broadcast(nb))
         .select("custkey", "n_brands", F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("j"))

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from etl_seattle_call_data_spark.operators import cdc
 from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
+from etl_seattle_call_data_spark.operators.sketch import md5_int
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.sources.registry import load_table
 
@@ -308,22 +309,14 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_replica_divergence_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    dg = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("o_orderkey").cast("string"),
-                    F.col("o_custkey").cast("string"),
-                    F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    dg = md5_int(
+        F.concat_ws(
+            "|",
+            F.col("o_orderkey").cast("string"),
+            F.col("o_custkey").cast("string"),
+            F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"),
+        )
+    )
     d = o.select(
         (F.col("o_orderkey") % 256).alias("bucket"),
         F.when(F.col("o_orderkey") % 97 != 0, 1).otherwise(0).alias("keep"),

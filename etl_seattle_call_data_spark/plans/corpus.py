@@ -441,10 +441,7 @@ def q_doc_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(text.tokens(F.col("text"))).alias("tok")
     ).select(
         "doc_id",
-        (
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
-            % _FEATURE_HASH_BUCKETS
-        ).alias("bucket"),
+        (sketch.md5_int(F.col("tok")) % _FEATURE_HASH_BUCKETS).alias("bucket"),
     )
     return tok.groupBy("doc_id").agg(
         *[
@@ -2200,9 +2197,7 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(
                 "source",
-                F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-                .cast("long")
-                .alias("h"),
+                sketch.md5_int(F.col("shingle")).alias("h"),
             )
             .distinct()
         )
@@ -2214,17 +2209,9 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             "p",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("h").cast("string"), F.lit(":p"), F.col("p").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("ph"),
+            sketch.md5_int(
+                F.concat(F.col("h").cast("string"), F.lit(":p"), F.col("p").cast("string"))
+            ).alias("ph"),
         )
         .groupBy("source", "p")
         .agg(F.min("ph").alias("mh"))
@@ -2403,17 +2390,7 @@ def q_exact_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = docs.select(
         "source",
         "doc_id",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
+        sketch.md5_int(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))).alias("hv"),
     )
     coarse = F.expr("hv DIV 72057594037927936")  # 2^56: 16 hash buckets
     spec = ("rk", ["hv", "doc_id"], coarse, F.lit(1), "sum", False)
@@ -2580,9 +2557,7 @@ def q_dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id",
             F.col("s.pos").alias("pos"),
-            F.conv(F.substring(F.md5(F.col("s.gram")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
+            sketch.md5_int(F.col("s.gram")).alias("h"),
         ),
     )
     okh = (
@@ -3037,6 +3012,25 @@ def _bpe_round_sql(prev: str, out_v: str, out_t: str, rnd: int) -> str:
     )"""
 
 
+def _bpe_round(v: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One BPE round over a (seq, f) vocabulary, the Spark side of
+    ``_bpe_round_sql``: (top, merged), the single best merge (count desc,
+    pair asc) as (bg, n), and the vocabulary with it applied."""
+    t = text.bpe_tokens("seq")
+    pairs = (
+        v.select(t.alias("t"), "f")
+        .filter(F.size("t") >= 2)
+        .select(F.explode(text.bpe_adjacent_pairs(F.col("t"))).alias("bg"), "f")
+        .groupBy("bg")
+        .agg(F.sum("f").cast("bigint").alias("n"))
+    )
+    top = pairs.orderBy(F.desc("n"), "bg").limit(1)
+    merged = v.crossJoin(F.broadcast(top)).select(
+        text.bpe_apply_merge("seq", F.col("bg")).alias("seq"), "f"
+    )
+    return top, merged
+
+
 @register(
     "bpe_merge_rounds",
     "Three unrolled rounds of BPE merge training over the corpus word "
@@ -3090,21 +3084,6 @@ def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         text.bpe_canonical("w").alias("seq"), "f"
     )
 
-    def bpe_round(v: DataFrame) -> tuple[DataFrame, DataFrame]:
-        t = text.bpe_tokens("seq")
-        pairs = (
-            v.select(t.alias("t"), "f")
-            .filter(F.size("t") >= 2)
-            .select(F.explode(text.bpe_adjacent_pairs(F.col("t"))).alias("bg"), "f")
-            .groupBy("bg")
-            .agg(F.sum("f").cast("bigint").alias("n"))
-        )
-        top = pairs.orderBy(F.desc("n"), "bg").limit(1)
-        merged = v.crossJoin(F.broadcast(top)).select(
-            text.bpe_apply_merge("seq", F.col("bg")).alias("seq"), "f"
-        )
-        return top, merged
-
     # Each round consumes its input vocabulary from TWO branches (the
     # pair-count/top-1 derivation and the merge application), so an
     # un-materialized chain re-evaluates the corpus-size vocab aggregate
@@ -3114,9 +3093,9 @@ def q_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization rule targets: one checkpoint per round
     # makes every vocabulary exactly once-evaluated (r10: 1.53s -> ~0.9s
     # at sf0.1, 28 -> 8 Exchanges).
-    t1, v1 = bpe_round(checkpoint(vocab))
-    t2, v2 = bpe_round(checkpoint(v1))
-    t3, v3 = bpe_round(checkpoint(v2))
+    t1, v1 = _bpe_round(checkpoint(vocab))
+    t2, v2 = _bpe_round(checkpoint(v1))
+    t3, _ = _bpe_round(checkpoint(v2))
     out = (
         t1.select(F.lit(1).cast("int").alias("round"), F.col("bg").alias("merged_pair"), "n")
         .unionByName(
@@ -3470,26 +3449,14 @@ def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         .select(text.bpe_canonical("w").alias("seq"), "f")
     )
 
-    def bpe_round(v: DataFrame) -> DataFrame:
-        t = text.bpe_tokens("seq")
-        pairs = (
-            v.select(t.alias("t"), "f")
-            .filter(F.size("t") >= 2)
-            .select(F.explode(text.bpe_adjacent_pairs(F.col("t"))).alias("bg"), "f")
-            .groupBy("bg")
-            .agg(F.sum("f").cast("bigint").alias("n"))
-        )
-        top = pairs.orderBy(F.desc("n"), "bg").limit(1)
-        return v.crossJoin(F.broadcast(top)).select(
-            text.bpe_apply_merge("seq", F.col("bg")).alias("seq"), "f"
-        )
-
     # Same two-consumer-per-round shape as bpe_merge_rounds: without a
     # barrier each round re-evaluates its input vocabulary once per
     # branch (2^rounds words-explode passes; 14 BNLJ nodes in the r10
     # before-plan). Vocab-bounded frames — one checkpoint per
     # round per the CLAUDE.md materialization rule.
-    v3 = bpe_round(checkpoint(bpe_round(checkpoint(bpe_round(checkpoint(vocab))))))
+    v3 = vocab
+    for _ in range(3):
+        _, v3 = _bpe_round(checkpoint(v3))
     vocab_tok = v3.select(
         F.replace(F.col("seq"), F.lit("|"), F.lit("")).alias("w"),
         F.size(text.bpe_tokens("seq")).cast("bigint").alias("ntok"),
@@ -4169,8 +4136,7 @@ def q_heaps_law_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# portable 60-bit hash: identical bits on both engines
-_H_SPARK = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+# portable 60-bit hash (``sketch.md5_int``): identical bits on both engines
 _H_DUCK = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 
@@ -4261,7 +4227,7 @@ def q_winnowing_fingerprint_census(
     hv_expr = (
         f"CASE WHEN size(tk) >= {_WN_K}"
         f" THEN transform(sequence(1, size(tk) - {_WN_K - 1}),"
-        f"      i -> {_H_SPARK.format(x=gram_x)})"
+        f"      i -> {sketch.MD5_INT_SQL.format(x=gram_x)})"
         f" ELSE array() END"
     )
     # transform(array(hv), ...) lambda-binds the hash array so it is

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 from etl_seattle_call_data_spark.operators import dq, ranking, sampling
 from etl_seattle_call_data_spark.operators.ranking import two_phase_scan
 from etl_seattle_call_data_spark.operators.sampling import hash_bucket
+from etl_seattle_call_data_spark.operators.sketch import md5_int
 from etl_seattle_call_data_spark.operators.util import checkpoint
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import (
@@ -843,16 +844,7 @@ def q_bloom_filter_fp_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
 
     def h(col, salt):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(col.cast("string"), F.lit(salt))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _BLOOM_BITS
-        )
+        return md5_int(F.concat(col.cast("string"), F.lit(salt))) % _BLOOM_BITS
 
     members = (
         orders.filter(F.col("o_orderpriority") == "1-URGENT")
@@ -1174,9 +1166,7 @@ _KMV_K = 64
 def q_cardinality_kmv_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     h = o.select(
-        F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 13), 16, 10)
-        .cast("long")
-        .alias("hv")
+        md5_int(F.col("o_custkey").cast("string"), 13).alias("hv")
     ).distinct()
     bk = h.orderBy("hv").limit(_KMV_K)
     kth = bk.agg(
@@ -1393,9 +1383,7 @@ def q_reservoir_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n_g"))
     h20 = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 5), 16, 10)
-        .cast("long")
-        .alias("h20")
+        md5_int(F.col("event_id").cast("string"), 5).alias("h20")
     )
     kept = (
         ev.select("event_type", "event_id", h20)
@@ -1651,9 +1639,7 @@ def q_kmv_set_ops_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             ev.filter(F.col("event_type") == etype)
             .select(
-                F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10)
-                .cast("long")
-                .alias("h")
+                md5_int(F.col("user_id").cast("string"), 13).alias("h")
             )
             .distinct()
         )
@@ -1730,9 +1716,7 @@ def q_subsample_median_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     h = o.select(
         "o_totalprice",
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("hv"),
+        md5_int(F.col("o_orderkey").cast("string")).alias("hv"),
     )
     return (
         h.select(
@@ -3870,20 +3854,7 @@ def q_quantile_sketch_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast(
-                            "string"
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100
+            md5_int((F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("string")) % 100
         ).alias("hb"),
     )
     ex = li.agg(

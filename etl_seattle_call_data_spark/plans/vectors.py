@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_seattle_call_data_spark.operators import dedup, similarity, text
-from etl_seattle_call_data_spark.operators.similarity import _cosine, _dot, with_quantized
+from etl_seattle_call_data_spark.operators.similarity import _cosine, _dot, _l2sq, with_quantized
+from etl_seattle_call_data_spark.operators.sketch import md5_int
 from etl_seattle_call_data_spark.operators.util import checkpoint, spread
 from etl_seattle_call_data_spark.plans.queries import register
 from etl_seattle_call_data_spark.plans.shared import (
@@ -570,11 +571,7 @@ def q_kmeans_assign_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = qv.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cid",
-        F.aggregate(
-            F.zip_with("q", "cq", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("d2"),
+        _l2sq(F.col("q"), F.col("cq")).alias("d2"),
     )
     assigned = (
         scored.withColumn(
@@ -684,11 +681,7 @@ def q_pq_encode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "s",
         "cid",
-        F.aggregate(
-            F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("d2"),
+        _l2sq(F.col("sv"), F.col("cv")).alias("d2"),
     )
     best = (
         scored.withColumn(
@@ -1822,9 +1815,7 @@ def q_embedding_similarity_histogram(
         with_quantized(base)
         .withColumn(
             "hb",
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            % F.lit(n_buckets),
+            md5_int(F.col("vec_id").cast("string")) % F.lit(n_buckets),
         )
         .select("vec_id", "label", "hb", "qvec", "qnorm2")
     )

@@ -52,16 +52,28 @@ def test_whole_stage_codegen_covers_agg(spark):
     assert "*(" in plan
 
 
+# The queries that run a pandas_udf (ArrowEvalPython): sign-LSH
+# bucketing and IVF cell assignment, each kept in Python by a measured
+# NOTE in operators/similarity.py.
+_ARROW_EVAL = {
+    "similarity_topk_lsh",
+    "similarity_topk_lsh_multiprobe",
+    "search_ranking_metrics",
+    "similarity_topk_ivf",
+    "similarity_ivf_recall_eval",
+}
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_row_at_a_time_python_udf(spark, name):
     """BatchEvalPython = per-row Python UDF (the reference's F1 pattern,
-    SURVEY §4.1). The engine's only Python hops are Arrow-batched
-    (MapInPandas / FlatMapGroupsInPandas), and only in the multimodal
-    path."""
+    SURVEY §4.1). The engine's only Python hops are Arrow-batched, and
+    each is pinned to its queries: MapInPandas to the multimodal path,
+    ArrowEvalPython (a pandas_udf) to the LSH and IVF queries."""
     plan = _plan(REGISTRY[name].spark(spark, SF), mode="simple")
     assert "BatchEvalPython" not in plan
-    if name != "multimodal_features":
-        assert "MapInPandas" not in plan
+    assert ("MapInPandas" in plan) == (name == "multimodal_features")
+    assert ("ArrowEvalPython" in plan) == (name in _ARROW_EVAL)
 
 
 def test_materialization_only_in_util():
@@ -81,6 +93,39 @@ def test_materialization_only_in_util():
         if p.name != "util.py"
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if ".localCheckpoint(" in line or ".persist(" in line
+    ]
+    assert offenders == []
+
+
+def test_md5_integer_hash_only_in_sketch():
+    """``operators/sketch.py`` owns the engine-portable md5 integer
+    (``md5_int``: conv of an md5 hex prefix; ``MD5_INT_SQL`` for SQL
+    lambdas). No other module in the package spells it, as a Column
+    expression or as SQL text; callers build the string and call it."""
+    import ast
+    import pathlib
+    import re
+
+    import etl_seattle_call_data_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+
+    def name(call):
+        return getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+
+    def spells_hash(node):
+        if isinstance(node, ast.Call) and name(node) == "conv":
+            return any(isinstance(n, ast.Call) and name(n) == "md5" for n in ast.walk(node))
+        return isinstance(node, ast.Constant) and bool(
+            re.search(r"conv\(\s*substr\w*\(\s*md5\(", str(node.value), re.I)
+        )
+
+    offenders = [
+        f"{p.relative_to(root)}:{node.lineno}"
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "operators" / "sketch.py"
+        for node in ast.walk(ast.parse(p.read_text()))
+        if spells_hash(node)
     ]
     assert offenders == []
 
@@ -146,8 +191,9 @@ _BINDINGS = {
 
 
 def _unset_options(repo) -> list[str]:
-    """Defaulted parameters of functions (and classes, by constructor)
-    under the package that no call in the package,
+    """Defaulted parameters of functions (and classes, by constructor;
+    a dataclass's constructor takes its fields) under the package that
+    no call in the package,
     ``tools/``, ``perfbench/`` or ``tests/`` sets by keyword or position
     to a value whose AST differs from the default's. Calls match
     definitions by name. A call that passes the enclosing
@@ -173,9 +219,19 @@ def _unset_options(repo) -> list[str]:
                 "params": {x.arg for x in positional + a.kwonlyargs}, "default": dflt,
                 "defaulted": set(dflt) | ({kw} if kw else set()), "kwargs": kw}
 
+    def fields(cls, path):
+        """The constructor signature a ``@dataclass`` generates."""
+        f = [n for n in cls.body if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)]
+        dflt = {n.target.id: ast.dump(n.value) for n in f if n.value is not None}
+        return {"name": cls.name, "where": f"{path.relative_to(repo)}:{cls.lineno}",
+                "pos": [n.target.id for n in f], "params": {n.target.id for n in f},
+                "default": dflt, "defaulted": set(dflt), "kwargs": None}
+
     def visit(node, path, stack, cls):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, ast.ClassDef):
+                if any("dataclass" in ast.dump(d) for d in child.decorator_list):
+                    defs.setdefault(child.name, []).append(fields(child, path))
                 visit(child, path, stack, child)
             elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 static = any(getattr(d, "id", None) == "staticmethod" for d in child.decorator_list)

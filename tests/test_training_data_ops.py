@@ -240,31 +240,32 @@ def test_jaccard_df_cap_keeps_real_dups(docs):
     assert capped == uncapped and (1, 2) in capped
 
 
-def test_lsh_bucket_forms_agree_on_long_and_ragged_vectors(spark):
-    # vectors LONGER than the plane (dims=4 here) and a ragged batch:
-    # the HOF form, the vectorized form, and truncation semantics agree
+def test_lsh_bucket_matches_python_projection_on_long_and_short_vectors(spark):
+    # vectors LONGER than the plane (dims=4 here) and SHORTER than it, in
+    # one ragged batch: the UDF's bucket equals a pure-Python sign
+    # projection over the same weights, with the plane truncated to the
+    # vector (a missing dimension contributes 0)
     rows = [
         (0, [1.0, -2.0, 3.0, -4.0]),
         (1, [1.0, -2.0, 3.0, -4.0, 99.0, -99.0]),  # longer than dims
         (2, [1.0, -2.0]),  # shorter than dims
     ]
+    weights = similarity._hyperplane_weights(6, 4)
+
+    def bucket(vec):
+        q = [round(x * similarity.QUANT_SCALE) for x in vec]
+        return sum(2**p for p, w in enumerate(weights) if sum(x * y for x, y in zip(q, w)) > 0)
+
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = similarity.with_quantized(emb)
-    hof = {
+    got = {
         r.vec_id: r.b
-        for r in q.select(
-            "vec_id",
-            similarity.lsh_bucket(F.col("qvec"), num_planes=6, dims=4, quantized=True).alias("b"),
+        for r in similarity.with_quantized(emb).select(
+            "vec_id", similarity.lsh_bucket(num_planes=6, dims=4)(F.col("qvec")).alias("b")
         ).collect()
     }
-    vec = {
-        r.vec_id: r.b
-        for r in q.select(
-            "vec_id", similarity.lsh_bucket_vectorized(num_planes=6, dims=4)(F.col("qvec")).alias("b")
-        ).collect()
-    }
-    assert hof == vec
-    assert hof[0] == hof[1]  # extra dims beyond the plane contribute 0
+    assert got == {i: bucket(v) for i, v in rows}
+    assert got[0] == got[1]  # extra dims beyond the plane contribute 0
+    assert len(set(got.values())) > 1  # the projection is not constant here
 
 
 def test_chunk_documents_overlap_and_edges(spark):
